@@ -309,12 +309,12 @@ object SparkEntry {
       drilldowns = Seq(drill("Ship Date.Year")),
       cuts = Seq(cut("Geography.Region.0,2"), cut("Geography.Nation.1,2,3")),
       measures = Seq(mea("Quantity")))),
-    // round 12: the SAME fan-out served by the flag-gated single-plan
-    // fusion (CubePlanner.planFanOutFused) — one scan + one tagged
+    // round 12: the SAME fan-out, named for the single-plan fusion
+    // (CubePlanner.planFanOutFused) that serves it — one scan + one tagged
     // aggregate instead of the N-way union; must hash-match q31's oracle
     // (the rebuild-consistency pattern applied to the plan strategy)
     "q52_ll_fused" -> ((spark: SparkSession, sfDir: String) =>
-      new LogicLayer(TpchStar.planner(sfDir), namedSets, fusedFanOut = true)
+      new LogicLayer(TpchStar.planner(sfDir), namedSets)
         .plan(spark, LogicLayerQuery(
           drilldowns = Seq(drill("Ship Date.Year")),
           cuts = Seq(cut("Geography.Region.0,2"), cut("Geography.Nation.1,2,3")),
@@ -466,7 +466,7 @@ object SparkEntry {
     // aggregate. Oracle = UNION ALL of the member rca computations (the
     // q31 consolidation contract applied to rca).
     "q53_rca_fanout" -> ((spark: SparkSession, sfDir: String) =>
-      new LogicLayer(TpchStar.planner(sfDir), namedSets, fusedFanOut = true)
+      new LogicLayer(TpchStar.planner(sfDir), namedSets)
         .plan(spark, LogicLayerQuery(
           drilldowns = Nil,
           cuts = Seq(cut("Ship Date.Year.1996,1997"), cut("Ship Date.Month.3,4")),

@@ -1,7 +1,7 @@
 package graft.plan
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core._
@@ -41,16 +41,6 @@ final class CubePlanner(
 
   /** Same resolver, different cube view (Preagg plans storage variants). */
   def withCube(c: Cube): CubePlanner = new CubePlanner(c, resolver, geoService)
-
-  /** Plan-time size estimate of the bare fact, cached per session — the
-    * rca rollup pin heuristic reads it on every non-re-aggregable plan,
-    * and re-resolving re-runs analysis for a number that doesn't change
-    * within a planner instance's lifetime. */
-  private val factBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, BigInt]()
-  private def factBytes(spark: SparkSession): BigInt =
-    factBytesCache.computeIfAbsent(spark, s =>
-      resolver.resolve(s, cube.table).queryExecution.optimizedPlan.stats.sizeInBytes)
 
   // ---------------------------------------------------------------- public
 
@@ -202,8 +192,7 @@ final class CubePlanner(
     }
   }
 
-  /** Single-plan fusion of a logic-layer cut fan-out (round 12; SURVEY
-    * §7.4 risk 2's "OR-cuts/grouping-sets behind a flag"). The fan-out's N
+  /** Single-plan fusion of a logic-layer cut fan-out. The fan-out's N
     * member queries share everything except (a) which cut of each
     * multi-cut dimension they carry and (b) that cut's level auto-added as
     * a drilldown — so N near-identical plans each scan and shuffle the
@@ -213,61 +202,41 @@ final class CubePlanner(
     *      into one shared [[buildSource]] — full scan pushdown preserved;
     *   2. the union of all combos' drill levels joins once, so every
     *      varying cut's key is a column of the wide frame;
-    *   3. each row is tagged with EVERY combo whose varying cuts it
-    *      satisfies (a row can satisfy several — cuts on different levels
-    *      of one dimension overlap) via an explode over the matching
-    *      combo ids, after an OR-of-all-combos row filter;
-    *   4. grouping columns are null-padded per combo (the manual
-    *      grouping-sets expansion: a column groups only in the combos
-    *      whose grouping set contains it) and ONE aggregate runs, keyed by
-    *      (combo id, union grain) — one shuffle instead of N;
-    *   5. the output projects each position through its combo's own
+    *   3. [[fusedSource]] tags each row with every combo whose varying
+    *      cuts it satisfies and null-pads each grouping column outside
+    *      the combos that group by it, so ONE aggregate keyed by
+    *      (combo id, union grain) replaces N — one shuffle instead of N;
+    *   4. [[fusedOptions]] projects each position through its combo's own
     *      column, consolidating disagreeing types to string — exactly the
     *      positional union-by-first-combo's-headers contract of the
     *      fan-out path (aggregate.rs:333-534), minus the N-way Union.
     *
     * Semantics are proven equal to the fan-out path on the q31 family and
     * the logic-layer fuzz corpus (LogicLayerFusedSpec). rca routes to
-    * [[planFanOutFusedRca]] instead — its pinned-a-grain + grain-join
-    * tree is a whole different plan shape; top/top_where/limit replicate
-    * as combo-partitioned windows, growth as a combo-partitioned lag,
-    * rate as the fused conditional aggregate itself; HAVING filters and
-    * `sparse` are identical across combos,
-    * hence applied once on the fused aggregate. A per-combo `limit`
-    * becomes a row_number window partitioned by the combo tag over the
-    * combo's own deterministic total order (the applyOptions no-top
-    * rule: explicit sort measure first, then drill columns asc) — valid
-    * only while every output position keeps ONE type, because the
-    * string-consolidation fallback would reorder numerics; on a type
-    * disagreement with a limit present this returns None and the caller
-    * falls back to the fan-out. A `sort` without a limit selects no rows
-    * and the fan-out path re-sorts the union deterministically anyway,
-    * so it fuses as a no-op. */
+    * [[planFanOutFusedRca]] (a different aggregate shape); growth fuses as
+    * a combo-partitioned lag, rate as the fused conditional aggregate
+    * itself, and top/top_where/HAVING/sparse/limit as [[fusedOptions]]'
+    * combo-partitioned stages. A `sort` without a limit selects no rows
+    * and the fan-out path re-sorts the union deterministically anyway, so
+    * it fuses as a no-op. None = declined: the caller falls back to the
+    * per-member fan-out. */
   private[plan] def planFanOutFused(
       spark: SparkSession, queries: Seq[CubeQuery]): Option[DataFrame] = {
     require(queries.length > 1, "fusion needs a real fan-out")
     queries.foreach(validate)
     val q0 = queries.head
-    // rca fuses through its own grouping-sets shape (round 16) — same
-    // precedence as plan(): rca before rate
+    // same precedence as plan(): rca before rate
     if (q0.rca.isDefined) return planFanOutFusedRca(spark, queries)
     val rate = q0.rate // identical across members (fanOut replicates it)
 
-    // rate (round 14): the member path (planRate) excludes the rate level
-    // from the OUTPUT grain and joins it only as a source column for the
+    // rate: the member path (planRate) excludes the rate level from the
+    // OUTPUT grain and joins it only as a source column for the
     // conditional member-share aggregate — mirror both here
     def origDrills(q: CubeQuery): Seq[Drilldown] = rate match {
       case Some(r) => q.drilldowns.filterNot(_.levelName == r.levelName)
       case None    => q.drilldowns
     }
     val comboOuts = queries.map(q => outLevels(origDrills(q), q.parents, q.properties, q.captions))
-    val comboHeaders = comboOuts.map(drillHeaders)
-    val width = comboHeaders.head.length
-    comboHeaders.drop(1).foreach { h =>
-      if (h.length != width)
-        fail(s"fan-out result width mismatch: ${h.length + q0.measures.length} vs ${width + q0.measures.length}")
-    }
-
     val unionDrills = queries.flatMap(origDrills).distinct
     val unionCaptions = queries.flatMap(_.captions).distinct
     val unionOuts = outLevels(unionDrills, q0.parents, q0.properties, unionCaptions)
@@ -285,249 +254,101 @@ final class CubePlanner(
     // miss the wide frame's prefixed names. Decline; the unfused fan-out's
     // planRate handles the collision per member via rename.
     if (rate.isDefined && unionOuts.exists { u =>
-      sourceOuts.find(s => s.dim.name == u.dim.name && s.hier.name == u.hier.name &&
-          s.level.name == u.level.name)
+      sourceOuts.find(_.id == u.id)
         .exists(s => s.keyHeader != u.keyHeader || s.nameHeader != u.nameHeader)
     }) return None
+    val unionCols = comboUnionCols(comboOuts, unionOuts).getOrElse(return None)
+    val width = unionCols.head.length
     val meas = q0.measures.map(m => cube.measure(m.name).get -> m.name)
     val meaNames = meas.map(_._2)
     val hidden = hiddenFor(meas.map(_._1))
 
-    // each combo's columns in the union namespace, positionally aligned
-    // with its own headers (identity = (dim, hier, level); the header
-    // NAMES may differ between the combo-local and union-wide duplicate
-    // disambiguation, the column structure cannot)
-    def unionOf(o: OutLevel): OutLevel = unionOuts
-      .find(u => u.dim.name == o.dim.name && u.hier.name == o.hier.name &&
-        u.level.name == o.level.name)
-      .getOrElse(fail(s"fan-out fusion lost level '${o.level.name}'"))
-    def headersOf(o: OutLevel): Seq[String] =
-      (o.keyHeader +: o.nameHeader.toSeq) ++ o.props.map(_._1)
-    val comboUnionCols: Seq[Seq[String]] = comboOuts.map(_.flatMap(o => headersOf(unionOf(o))))
-
-    // cuts present in EVERY combo (the single-cut dims) push into the
-    // shared source; the per-combo remainder becomes row predicates on
-    // the wide frame's key headers
-    val commonCuts = queries.map(_.cuts.toSet).reduce(_ intersect _)
-    val varCuts = queries.map(_.cuts.filterNot(commonCuts.contains))
-    val wide = buildSource(spark, sourceOuts, commonCuts.toSeq, q0, hidden)
-    val comboPreds = varCuts.map(
-      _.map(c => cutPredicate(wide, levelKeyHeader(sourceOuts, c.levelName), c))
-        .reduceOption(_ && _).getOrElse(lit(true)))
-
-    val tagArr = array(comboPreds.zipWithIndex.map { case (p, i) =>
-      when(p, lit(i)).otherwise(lit(null).cast("int"))
-    }: _*)
-    val tagged = wide
-      .where(comboPreds.reduce(_ || _))
-      .withColumn("__combo", explode(filter(tagArr, x => x.isNotNull)))
-
     val unionGroupHeaders = groupHeaders(unionOuts)
-    val padded = unionGroupHeaders.foldLeft(tagged) { (d, h) =>
-      val in = comboUnionCols.zipWithIndex.collect { case (cols, i) if cols.contains(h) => i }
-      if (in.length == queries.length) d
-      else d.withColumn(h, when(cq("__combo").isin(in: _*), cq(h)))
-    }
+    val padded = fusedSource(spark, sourceOuts, queries.map(_.cuts), unionGroupHeaders,
+      unionCols, q0, hidden)
 
     // rate replicates planRate's ONE conditional-aggregate pass keyed by
-    // (combo, union grain): total + member-part per group, groups with no
-    // member rows drop, Rate = part/total — the per-combo varying cut only
-    // changes WHICH rows feed each combo's groups, never the aggregate's
-    // shape, so the member semantics replicate exactly
+    // (combo, union grain): the per-combo varying cut only changes WHICH
+    // rows feed each combo's groups, never the aggregate's shape
     var agg = rate match {
       case Some(r) =>
         val rateHeader = levelKeyHeader(sourceOuts, r.levelName)
-        val keyDt = wide.schema(rateHeader).dataType
-        val isMember = cq(rateHeader).isin(r.values.map(v => lit(typedMember(keyDt, v))): _*)
-        val (mea, meaName) = meas.head
-        val v = cq(mea.column)
-        val (totalAgg, partAgg) = mea.aggregator match {
-          case Aggregator.Sum   => (sum(v), sum(when(isMember, v)))
-          case Aggregator.Count => (count(v).cast("long"), sum(when(isMember.and(v.isNotNull), lit(1L))))
-          case other => fail(s"rate requires a sum or count measure, got $other")
-        }
-        padded.groupBy(("__combo" +: unionGroupHeaders).map(cq): _*)
-          .agg(totalAgg.as(meaName), partAgg.as("__part"))
-          .where(cq("__part").isNotNull)
-          .withColumn("Rate", try_divide(cq("__part"), cq(meaName)))
+        rateAggregate(padded, Combo +: unionGroupHeaders, rateHeader, r, meas.head)
           .drop("__part")
       case None =>
-        aggregate(padded, "__combo" +: unionGroupHeaders, meas, hidden.map(_.keyHeader))
+        aggregate(padded, Combo +: unionGroupHeaders, meas, hidden.map(_.keyHeader))
     }
 
-    // growth fuses as a __combo-partitioned lag (round 13): the member
-    // path's window partitions by the combo's non-time drill keys; in the
-    // fused frame a combo's out-of-combo columns are null-padded CONSTANTS,
-    // so partitioning by (__combo, every non-time union key) is the same
+    // growth fuses as a __combo-partitioned lag: the member path's window
+    // partitions by the combo's non-time drill keys; in the fused frame a
+    // combo's out-of-combo columns are null-padded CONSTANTS, so
+    // partitioning by (__combo, every non-time union key) is the same
     // per-combo partition. Valid only while the time columns sit at the
     // SAME positions in every combo (the positional-consolidation premise
     // applied to the growth reorder) — a varying cut on the time dimension
-    // itself breaks that, so it declines to the fan-out path.
-    // planRate ignores growth on a rate query — mirror that precedence
+    // itself breaks that, so it declines to the fan-out path. planRate
+    // ignores growth on a rate query — mirror that precedence.
     val fusedGrowth = q0.growth.filter(_ => rate.isEmpty)
-    val perPosTime: Option[Seq[Boolean]] = fusedGrowth.map { g =>
-      val (tDim, tHier, _) = resolveLevel(g.timeDrill.levelName)
-      def isTime(o: OutLevel) = o.dim.name == tDim.name && o.hier.name == tHier.name
-      val flags = comboOuts.map(_.flatMap(o => Seq.fill(headersOf(o).length)(isTime(o))))
-      if (flags.distinct.length > 1) return None
-      flags.head
-    }
     // position order for tiebreaks and the output projection: the member
     // path's growth reorder moves time drills to the back (stable within
     // each group); without growth it is the natural order
-    val ordIdx: Seq[Int] = perPosTime match {
-      case Some(flags) =>
-        (0 until width).filterNot(flags) ++ (0 until width).filter(flags)
+    val ordIdx: Seq[Int] = fusedGrowth match {
       case None => 0 until width
-    }
-    val calcs = calcCols(q0)
-    fusedGrowth.foreach { g =>
-      val (tDim, tHier, _) = resolveLevel(g.timeDrill.levelName)
-      def isTime(o: OutLevel) = o.dim.name == tDim.name && o.hier.name == tHier.name
-      // KEY headers only, like the member path's applyGrowth window; a
-      // combo's out-of-combo keys are null-padded constants, so this is
-      // per-combo exactly the member partition
-      val partCols = cq("__combo") +:
-        unionOuts.filterNot(isTime).map(o => cq(o.keyHeader))
-      val w = Window.partitionBy(partCols: _*)
-        .orderBy(unionOuts.filter(isTime).map(o => cq(o.keyHeader).asc): _*)
-      val m = cq(g.mea.name)
-      val prev = lag(m, 1).over(w)
-      val mDiff = m - prev
-      agg = agg
-        .withColumn(s"${g.mea.name} Growth",
-          when(prev > lit(0), mDiff / prev))
-        .withColumn(s"${g.mea.name} Growth Value", mDiff)
+      case Some(g) =>
+        val (tDim, tHier, _) = resolveLevel(g.timeDrill.levelName)
+        def isTime(o: OutLevel) = o.dim.name == tDim.name && o.hier.name == tHier.name
+        val flags = comboOuts.map(_.flatMap(o => Seq.fill(drillHeaders(Seq(o)).length)(isTime(o))))
+        if (flags.distinct.length > 1) return None
+        // KEY headers only, like the member path's applyGrowth window
+        val w = Window
+          .partitionBy(cq(Combo) +: unionOuts.filterNot(isTime).map(o => cq(o.keyHeader)): _*)
+          .orderBy(unionOuts.filter(isTime).map(o => cq(o.keyHeader).asc): _*)
+        agg = withGrowth(agg, w, g.mea.name)
+        (0 until width).filterNot(flags.head) ++ (0 until width).filter(flags.head)
     }
 
-    // positional consolidation under combo 0's headers (types disagreeing
-    // across combos collapse to string, the consolidate() rule)
-    val posTypes = (0 until width).map { j =>
-      comboUnionCols.map(c => agg.schema(c(j)).dataType).distinct
-    }
-    if ((q0.limit.isDefined || q0.top.isDefined) && posTypes.exists(_.length > 1))
-      return None // string-fallback would reorder the per-combo slice
-    // top + limit together: the fan-out slices the limit over the
-    // top-derived order (by-level asc, measure desc), which is NOT a
-    // total order — ties make the member queries' own slices
-    // tie-arbitrary, and a fused replica could legitimately pick
-    // different ties. Decline rather than approximate.
-    if (q0.top.isDefined && q0.limit.isDefined && q0.sort.isEmpty) return None
-    def pickCol(j: Int, cast: Boolean): Column = {
-      val srcCols = comboUnionCols.map(_(j))
-      val t = if (posTypes(j).length == 1) posTypes(j).head else StringType
-      def c(name: String) = if (cast) cq(name).cast(t) else cq(name)
-      if (srcCols.distinct.length == 1) c(srcCols.head)
-      else srcCols.zipWithIndex.tail.foldLeft(
-        when(cq("__combo") === 0, c(srcCols.head))) {
-          case (acc, (s, i)) => acc.when(cq("__combo") === i, c(s))
-        }
-    }
-
-    // the applyOptions order: top_where → top → filters+sparse → limit —
-    // each stage per combo, replicated as __combo-partitioned operations
-    q0.top.foreach { top =>
-      q0.topWhere.foreach { tw =>
-        agg = agg.where(constraintPred(meaOrCalcCol(tw.byMeaOrCalc, calcs), tw.constraint))
-      }
-      // the by-level must be a drilldown of EVERY member query (the
-      // fan-out path resolves it per combo), so it is a shared base
-      // drill and maps to one union column for all combos
-      val byHeader = levelKeyHeader(unionOuts, top.byDimension)
-      val sortCols = top.sortMeaOrCalc.map(meaOrCalcCol(_, calcs))
-      val ordered = top.sortDirection match {
-        case SortDirection.Asc  => sortCols.map(_.asc)
-        case SortDirection.Desc => sortCols.map(_.desc)
-      }
-      val tiebreak = ordIdx
-        .filterNot(j => comboUnionCols.forall(_(j) == byHeader))
-        .map(j => pickCol(j, cast = false).asc)
-      val w = Window.partitionBy(cq("__combo"), cq(byHeader))
-        .orderBy(ordered ++ tiebreak: _*)
-      agg = agg.withColumn("__rn", row_number().over(w))
-        .where(cq("__rn") <= top.n).drop("__rn")
-    }
-
-    // HAVING filters + sparse are identical in every combo's CubeQuery —
-    // one pass on the fused aggregate
-    val filterPreds = q0.filters.map { f =>
-      val c = meaOrCalcCol(f.byMeaOrCalc, calcs)
-      val p1 = constraintPred(c, f.constraint)
-      (f.operator, f.constraint2) match {
-        case (Some(FilterOp.And), Some(c2)) => p1 && constraintPred(c, c2)
-        case (Some(FilterOp.Or), Some(c2))  => p1 || constraintPred(c, c2)
-        case _                              => p1
-      }
-    }
-    // planRate surfaces (measure, Rate) as the sparse-checked columns
-    val sparseNames = if (rate.isDefined) Seq(meaNames.head, "Rate") else meaNames
-    val sparsePreds = if (q0.sparse) sparseNames.map(cq(_).isNotNull) else Nil
-    (filterPreds ++ sparsePreds).reduceOption(_ && _).foreach(p => agg = agg.where(p))
-
-    // per-combo limit/offset: each combo slices its own frame under its
-    // deterministic total order, replicated as a combo-partitioned window
-    q0.limit.foreach { l =>
-      val tiebreak = ordIdx.map(j => pickCol(j, cast = false).asc)
-      val ordered: Seq[Column] = q0.sort match {
-        case Some(s) =>
-          val c = meaOrCalcCol(s.measure, calcs)
-          val head = s.direction match {
-            case SortDirection.Asc => c.asc
-            case SortDirection.Desc => c.desc
-          }
-          head +: tiebreak
-        case None => tiebreak // top+limit without sort declined above
-      }
-      val w = Window.partitionBy(cq("__combo")).orderBy(ordered: _*)
-      val off = l.offset.getOrElse(0L)
-      agg = agg.withColumn("__rn", row_number().over(w))
-        .where(cq("__rn") > off && cq("__rn") <= off + l.n).drop("__rn")
-    }
-
-    val outCols = ordIdx.map(j => pickCol(j, cast = true).as(comboHeaders.head(j)))
-    // the member path's growth reorder: growth measure to the back of the
-    // measures, then the two growth columns; rate emits (measure, Rate)
+    // the member path's output measures: rate emits (measure, Rate) —
+    // also its sparse-checked columns; growth moves the growth measure to
+    // the back of the measures, then the two growth columns
     val outMeas = (rate, fusedGrowth) match {
       case (Some(_), _) => Seq(meaNames.head, "Rate")
       case (None, Some(g)) => meaNames.filterNot(_ == g.mea.name) ++
         Seq(g.mea.name, s"${g.mea.name} Growth", s"${g.mea.name} Growth Value")
       case (None, None) => meaNames
     }
-    Some(agg.select(outCols ++ outMeas.map(cq): _*))
+    val sparseCols = if (rate.isDefined) outMeas else meaNames
+    fusedOptions(agg, q0, unionCols, drillHeaders(comboOuts.head), unionOuts, ordIdx,
+      calcCols(q0), sparseCols, outMeas)
   }
 
-  /** Fused fan-out for RCA queries — the round-15 book-closer: the one
-    * member shape that still declined fusion. N fan-out members each ran
-    * [[planRca]] over near-identical sources; here ONE plan runs:
+  /** Fused fan-out for RCA queries: N fan-out members each ran [[planRca]]
+    * over near-identical sources; here ONE plan runs:
     *
     *   1. the shared source carries the UNION of the members' ext levels
     *      plus drill1/drill2; cuts split per member into EXTERNAL
     *      (not on a drill1 level — the common ones push into the source,
-    *      the varying ones become the combo tag predicates, exactly the
-    *      generic path) and INTERNAL (on a drill1 level — applied
-    *      POST-aggregation so they never distort the b/d totals,
-    *      planRca's a-and-c-only rule, rca.rs:100-127 semantics);
+    *      the varying ones tag the combos, exactly the generic path) and
+    *      INTERNAL (on a drill1 level — applied POST-aggregation so they
+    *      never distort the b/d totals, planRca's a-and-c-only rule,
+    *      rca.rs:100-127 semantics);
     *   2. out-of-combo ext columns null-pad per combo; grouping over a
     *      null CONSTANT partitions identically to not grouping at all,
     *      and every group/window is additionally keyed by `__combo`, so
     *      a padded null never meets a genuine null key across combos;
-    *   3. ONE a-grain aggregate keyed by (__combo, union grain), with
-    *      b/c/d as __combo-keyed re-aggregations of the a column joined
-    *      back (planRca's one-scan re-aggregable form — one fact scan);
-    *      internal cuts filter per combo on the d1 key headers (shared
-    *      across combos by construction), and top/top_where/filters/
-    *      sparse/limit replicate as combo-partitioned stages with the
-    *      rca calc exposed, mirroring [[applyOptions]] with calcs = rca.
+    *   3. planRca's one-scan re-aggregable form ([[rcaReaggregated]])
+    *      keyed by `__combo` as well — one fact scan; internal cuts
+    *      filter per combo on the d1 key headers (shared across combos by
+    *      construction), and [[fusedOptions]] replicates the option
+    *      stages with the rca calc exposed.
     *
     * Declines (None → per-member fan-out) when the rca measure is not
     * re-aggregable ([[rcaReaggregable]] — the members then run the
     * raw-row grouping-sets form), when a member's ext levels intersect
     * drill1/drill2's (duplicate headers — the member path has the same
     * collision), when member caption resolution disagrees on the rca
-    * drills, on a type-consolidation fallback under top/limit, and on
-    * top+limit without an explicit sort — the generic rules. Growth and
-    * rate are ignored under rca, the plan() precedence. */
-  private[plan] def planFanOutFusedRca(
+    * drills, and on [[fusedOptions]]' declines. Growth and rate are
+    * ignored under rca, the plan() precedence. */
+  private def planFanOutFusedRca(
       spark: SparkSession, queries: Seq[CubeQuery]): Option[DataFrame] = {
     val q0 = queries.head
     val r = q0.rca.get
@@ -538,32 +359,26 @@ final class CubePlanner(
     if (d1PerCombo.distinct.length > 1 || d2PerCombo.distinct.length > 1) return None
     val d1Outs = d1PerCombo.head
     val d2Outs = d2PerCombo.head
-    def levelId(o: OutLevel) = (o.dim.name, o.hier.name, o.level.name)
-    val rcaLevels = (d1Outs ++ d2Outs).map(levelId).toSet
+    val rcaLevels = (d1Outs ++ d2Outs).map(_.id).toSet
 
     val comboExtOuts = queries.map(q =>
       outLevels(q.drilldowns, q.parents, q.properties, q.captions))
     // a member ext level duplicating an rca drill level would collide on
     // headers in the member path too — decline, identical failure either way
-    if (comboExtOuts.exists(_.exists(o => rcaLevels.contains(levelId(o))))) return None
+    if (comboExtOuts.exists(_.exists(o => rcaLevels.contains(o.id)))) return None
     val comboAllOuts = comboExtOuts.map(_ ++ d1Outs ++ d2Outs)
-    val comboHeaders = comboAllOuts.map(drillHeaders)
-    val width = comboHeaders.head.length
-    comboHeaders.drop(1).foreach { h =>
-      if (h.length != width)
-        fail(s"fan-out result width mismatch: ${h.length} vs $width")
-    }
 
     val unionDrills = queries.flatMap(_.drilldowns).distinct
     val unionCaptions = queries.flatMap(_.captions).distinct
     val unionExtOuts = outLevels(unionDrills, q0.parents, q0.properties, unionCaptions)
-    if (unionExtOuts.exists(o => rcaLevels.contains(levelId(o)))) return None
+    if (unionExtOuts.exists(o => rcaLevels.contains(o.id))) return None
     val unionAllOuts = unionExtOuts ++ d1Outs ++ d2Outs
     // the three outLevels calls disambiguate independently (the member
     // path's shape); a residual duplicate across the concatenation would
     // alias two source columns — decline
     val unionAllCols = groupHeaders(unionAllOuts)
     if (unionAllCols.distinct.length != unionAllCols.length) return None
+    val unionCols = comboUnionCols(comboAllOuts, unionAllOuts).getOrElse(return None)
 
     val rcaMea = cube.measure(r.mea.name).getOrElse(fail(s"rca measure '${r.mea.name}' not found"))
     // a non-re-aggregable rca measure needs the raw-row grouping-sets
@@ -574,174 +389,155 @@ final class CubePlanner(
       fail("grouped-median measures cannot combine with RCA (no single-pass form)")
 
     // internal/external cut split, per member (d1 levels are shared)
-    val d1Levels = d1Outs.map(levelId).toSet
+    val d1Levels = d1Outs.map(_.id).toSet
     def isInternal(c: CutSpec): Boolean = {
       val (d, h, i) = resolveLevel(c.levelName)
       d1Levels.contains((d.name, h.name, h.levels(i).name))
     }
-    val comboInternal = queries.map(_.cuts.filter(isInternal))
-    val comboExternal = queries.map(_.cuts.filterNot(isInternal))
-    val commonExternal = comboExternal.map(_.toSet).reduce(_ intersect _)
-    val varExternal = comboExternal.map(_.filterNot(commonExternal.contains))
+    val padded = fusedSource(spark, unionAllOuts, queries.map(_.cuts.filterNot(isInternal)),
+      unionAllCols, unionCols, q0, Nil)
+    var agg = rcaReaggregated(padded, Seq(Combo), unionAllCols,
+      unionExtOuts.map(_.keyHeader), d1Outs.map(_.keyHeader), d2Outs.map(_.keyHeader),
+      meas, rcaMea.aggregator, identity)
 
-    val wide = buildSource(spark, unionAllOuts, commonExternal.toSeq, q0, Nil)
-    val comboPreds = varExternal.map(
-      _.map(c => cutPredicate(wide, levelKeyHeader(unionAllOuts, c.levelName), c))
-        .reduceOption(_ && _).getOrElse(lit(true)))
+    // internal cuts: a-grain row predicates per combo, applied after the
+    // joins — the d1 key headers are join keys of the c-join, so filtering
+    // the joined frame equals planRca's filter-both-sides-then-join
+    queries.zipWithIndex.foreach { case (q, i) =>
+      q.cuts.filter(isInternal).foreach { cut =>
+        val header = levelKeyHeader(unionAllOuts, cut.levelName)
+        agg = agg.where(cq(Combo) =!= i || cutPredicate(agg, header, cut))
+      }
+    }
+
+    val rcaName = s"${r.mea.name} RCA"
+    agg = withRca(agg, rcaName)
+    val meaNames = rcaName +: q0.measures.map(_.name)
+    val debugCols = if (q0.debug) Seq(RcaA, RcaB, RcaC, RcaD) else Nil
+    fusedOptions(agg, q0, unionCols, drillHeaders(comboAllOuts.head), unionAllOuts,
+      unionCols.head.indices, Map("rca" -> rcaName), meaNames, debugCols ++ meaNames)
+  }
+
+  // ------------------------------------------------- fused fan-out stages
+
+  /** Each combo's output columns named in the union frame's namespace,
+    * positionally aligned with the combo's own headers (identity = (dim,
+    * hier, level); the header NAMES may differ between the combo-local
+    * and union-wide duplicate disambiguation, the column structure
+    * cannot). None when the combos' widths differ — the per-member
+    * fan-out then reports the mismatch. */
+  private def comboUnionCols(
+      comboOuts: Seq[Seq[OutLevel]], unionOuts: Seq[OutLevel]): Option[Seq[Seq[String]]] = {
+    def unionOf(o: OutLevel): OutLevel = unionOuts.find(_.id == o.id)
+      .getOrElse(fail(s"fan-out fusion lost level '${o.level.name}'"))
+    val cols = comboOuts.map(outs => drillHeaders(outs.map(unionOf)))
+    if (cols.map(_.length).distinct.length > 1) None else Some(cols)
+  }
+
+  /** The fused fan-out's source: cuts present in EVERY combo push into one
+    * shared [[buildSource]] over `outs`; each row is tagged (`__combo`)
+    * with EVERY combo whose remaining cuts it satisfies (a row can satisfy
+    * several — cuts on different levels of one dimension overlap) via an
+    * explode over the matching combo ids, after an OR-of-all-combos row
+    * filter. Then each of `groupCols` is null-padded outside the combos
+    * whose `unionCols` contain it — the manual grouping-sets expansion:
+    * a column groups only in the combos whose grouping set contains it. */
+  private def fusedSource(
+      spark: SparkSession, outs: Seq[OutLevel], comboCuts: Seq[Seq[CutSpec]],
+      groupCols: Seq[String], unionCols: Seq[Seq[String]],
+      q0: CubeQuery, hidden: Seq[OutLevel]): DataFrame = {
+    val common = comboCuts.map(_.toSet).reduce(_ intersect _)
+    val wide = buildSource(spark, outs, common.toSeq, q0, hidden)
+    val comboPreds = comboCuts.map(_.filterNot(common.contains)
+      .map(c => cutPredicate(wide, levelKeyHeader(outs, c.levelName), c))
+      .reduceOption(_ && _).getOrElse(lit(true)))
     val tagArr = array(comboPreds.zipWithIndex.map { case (p, i) =>
       when(p, lit(i)).otherwise(lit(null).cast("int"))
     }: _*)
     val tagged = wide
       .where(comboPreds.reduce(_ || _))
-      .withColumn("__combo", explode(filter(tagArr, x => x.isNotNull)))
-
-    // null-pad out-of-combo ext columns (rca drill columns are in every
-    // combo and never pad)
-    def unionOf(o: OutLevel): OutLevel = unionAllOuts
-      .find(u => levelId(u) == levelId(o))
-      .getOrElse(fail(s"fan-out fusion lost level '${o.level.name}'"))
-    def headersOf(o: OutLevel): Seq[String] =
-      (o.keyHeader +: o.nameHeader.toSeq) ++ o.props.map(_._1)
-    val comboUnionCols: Seq[Seq[String]] =
-      comboAllOuts.map(_.flatMap(o => headersOf(unionOf(o))))
-    val padded = unionAllCols.foldLeft(tagged) { (d, h) =>
-      val in = comboUnionCols.zipWithIndex.collect { case (cols, i) if cols.contains(h) => i }
-      if (in.length == queries.length) d
-      else d.withColumn(h, when(cq("__combo").isin(in: _*), cq(h)))
+      .withColumn(Combo, explode(filter(tagArr, x => x.isNotNull)))
+    groupCols.foldLeft(tagged) { (d, h) =>
+      val in = unionCols.zipWithIndex.collect { case (cols, i) if cols.contains(h) => i }
+      if (in.length == unionCols.length) d
+      else d.withColumn(h, when(cq(Combo).isin(in: _*), cq(h)))
     }
+  }
 
-    // ONE a-grain aggregate keyed by the combo tag, then b/c/d as
-    // __combo-keyed re-aggregations of the a column joined back — the
-    // same one-scan form as planRca's re-aggregable branch (the tagged
-    // grouping-sets rollup it replaces re-ran the Expand and fact scan
-    // once per gid frame; the four branches here share one exchange).
-    // The tag keys every group and join, so a padded null never meets a
-    // genuine null key across combos, and the d grain (union ext keys,
-    // which may be empty) still groups per combo.
-    val unionExtKeys = unionExtOuts.map(_.keyHeader)
-    val d1Keys = d1Outs.map(_.keyHeader)
-    val d2Keys = d2Outs.map(_.keyHeader)
-    val setB = unionExtKeys ++ d2Keys
-    val setC = unionExtKeys ++ d1Keys
-    val setD = unionExtKeys
-    // rca a-grain column in its native type (see [[rcaAGrainAgg]])
-    val aggs = meas.map { case (m, out) =>
-      (if (out == RcaA) rcaAGrainAgg(m) else AggExprs.single(m)).as(out)
-    }
-    // pinned for the same reason as planRca's re-aggregable branch:
-    // column pruning specializes each re-aggregation's copy of this
-    // subtree, so only the checkpoint barrier yields one fact scan
-    val aFrame = padded
-      .groupBy(("__combo" +: unionAllCols).map(cq): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .pinned(false)
-    def reagg(set: Seq[String], out: String): DataFrame =
-      aFrame.groupBy(("__combo" +: set).map(cq): _*)
-        .agg(rcaReagg(rcaMea.aggregator, cq(RcaA)).as(out))
-    def joinBack(l: DataFrame, rt: DataFrame, keys: Seq[String]): DataFrame = {
-      val jk = "__combo" +: keys
-      val rr = jk.foldLeft(rt)((d, k) => d.withColumnRenamed(k, s"__rj $k"))
-      val cond = jk.map(k => l(k) <=> rr(s"__rj $k")).reduce(_ && _)
-      l.join(rr, cond, "inner").drop(jk.map(k => s"__rj $k"): _*)
-    }
-    var agg = joinBack(aFrame, reagg(setB, RcaB), setB)
-    agg = joinBack(agg, reagg(setD, RcaD), setD)
-    agg = joinBack(agg, reagg(setC, RcaC), setC)
-    agg = rcaCastGrains(agg, rcaMea.aggregator)
-
-    // internal cuts: a-grain row predicates per combo, applied after the
-    // joins — the d1 key headers are join keys of the c-join, so filtering
-    // the joined frame equals planRca's filter-both-sides-then-join
-    queries.indices.foreach { i =>
-      comboInternal(i).foreach { cut =>
-        val (cd, ch, ci) = resolveLevel(cut.levelName)
-        val header = unionAllOuts
-          .find(o => o.dim.name == cd.name && o.hier.name == ch.name &&
-            o.level.name == ch.levels(ci).name)
-          .map(_.keyHeader)
-          .getOrElse(fail(s"internal RCA cut level '${cut.levelName}' must be drill_1"))
-        agg = agg.where(cq("__combo") =!= i || cutPredicate(agg, header, cut))
-      }
-    }
-
-    val rcaName = s"${r.mea.name} RCA"
-    // try_divide: NULL on zero denominators, session-ANSI-independent
-    agg = agg.withColumn(rcaName,
-      try_divide(try_divide(cq(RcaA), cq(RcaB)), try_divide(cq(RcaC), cq(RcaD))))
-    val calcs = Map("rca" -> rcaName)
-    val meaNames = rcaName +: q0.measures.map(_.name)
-
-    // positional consolidation + the applyOptions stages, replicated as
-    // combo-partitioned operations — the generic fused path's rules
+  /** The fused fan-outs' shared tail: positional consolidation under
+    * combo 0's headers (types disagreeing across combos collapse to
+    * string, LogicLayer's consolidate() rule), then applyOptions' stages
+    * in its order — top_where → top → HAVING+sparse → limit — each per
+    * combo as a `__combo`-partitioned operation, then the output
+    * projection (positions in `ordIdx` order, then `outMeas`). HAVING
+    * filters and `sparse` are identical in every combo's CubeQuery, so
+    * they apply once. A per-combo `limit` becomes a row_number window
+    * partitioned by the combo tag over the combo's own deterministic
+    * total order (the applyOptions no-top rule: explicit sort measure
+    * first, then drill columns asc).
+    *
+    * Declines (None) when a row slice (top/limit) meets a string
+    * consolidation, which would reorder numerics, and on top+limit
+    * without a sort: the fan-out slices the limit over the top-derived
+    * order (by-level asc, measure desc), which is NOT a total order — ties
+    * make the member queries' own slices tie-arbitrary, and a fused
+    * replica could legitimately pick different ties. */
+  private def fusedOptions(
+      agg0: DataFrame, q0: CubeQuery, unionCols: Seq[Seq[String]],
+      headers: Seq[String], outs: Seq[OutLevel], ordIdx: Seq[Int],
+      calcs: Map[String, String], sparseCols: Seq[String],
+      outMeas: Seq[String]): Option[DataFrame] = {
+    val width = unionCols.head.length
     val posTypes = (0 until width).map { j =>
-      comboUnionCols.map(c => agg.schema(c(j)).dataType).distinct
+      unionCols.map(c => agg0.schema(c(j)).dataType).distinct
     }
     if ((q0.limit.isDefined || q0.top.isDefined) && posTypes.exists(_.length > 1))
       return None
     if (q0.top.isDefined && q0.limit.isDefined && q0.sort.isEmpty) return None
     def pickCol(j: Int, cast: Boolean): Column = {
-      val srcCols = comboUnionCols.map(_(j))
+      val srcCols = unionCols.map(_(j))
       val t = if (posTypes(j).length == 1) posTypes(j).head else StringType
       def c(name: String) = if (cast) cq(name).cast(t) else cq(name)
       if (srcCols.distinct.length == 1) c(srcCols.head)
       else srcCols.zipWithIndex.tail.foldLeft(
-        when(cq("__combo") === 0, c(srcCols.head))) {
-          case (acc, (s, i)) => acc.when(cq("__combo") === i, c(s))
+        when(cq(Combo) === 0, c(srcCols.head))) {
+          case (acc, (s, i)) => acc.when(cq(Combo) === i, c(s))
         }
     }
 
+    var agg = agg0
     q0.top.foreach { top =>
       q0.topWhere.foreach { tw =>
         agg = agg.where(constraintPred(meaOrCalcCol(tw.byMeaOrCalc, calcs), tw.constraint))
       }
-      val byHeader = levelKeyHeader(unionAllOuts, top.byDimension)
-      val sortCols = top.sortMeaOrCalc.map(meaOrCalcCol(_, calcs))
-      val ordered = top.sortDirection match {
-        case SortDirection.Asc  => sortCols.map(_.asc)
-        case SortDirection.Desc => sortCols.map(_.desc)
-      }
-      val tiebreak = (0 until width)
-        .filterNot(j => comboUnionCols.forall(_(j) == byHeader))
+      // the by-level must be a drilldown of EVERY member query (the
+      // fan-out path resolves it per combo), so it is a shared base
+      // drill and maps to one union column for all combos
+      val byHeader = levelKeyHeader(outs, top.byDimension)
+      val tiebreak = ordIdx
+        .filterNot(j => unionCols.forall(_(j) == byHeader))
         .map(j => pickCol(j, cast = false).asc)
-      val w = Window.partitionBy(cq("__combo"), cq(byHeader))
-        .orderBy(ordered ++ tiebreak: _*)
+      val w = Window.partitionBy(cq(Combo), cq(byHeader))
+        .orderBy(top.sortMeaOrCalc.map(c => ordered(meaOrCalcCol(c, calcs), top.sortDirection)) ++
+          tiebreak: _*)
       agg = agg.withColumn("__rn", row_number().over(w))
         .where(cq("__rn") <= top.n).drop("__rn")
     }
 
-    val filterPreds = q0.filters.map { f =>
-      val c = meaOrCalcCol(f.byMeaOrCalc, calcs)
-      val p1 = constraintPred(c, f.constraint)
-      (f.operator, f.constraint2) match {
-        case (Some(FilterOp.And), Some(c2)) => p1 && constraintPred(c, c2)
-        case (Some(FilterOp.Or), Some(c2))  => p1 || constraintPred(c, c2)
-        case _                              => p1
-      }
-    }
-    val sparsePreds = if (q0.sparse) meaNames.map(cq(_).isNotNull) else Nil
-    (filterPreds ++ sparsePreds).reduceOption(_ && _).foreach(p => agg = agg.where(p))
+    havingPred(q0, calcs, sparseCols).foreach(p => agg = agg.where(p))
 
     q0.limit.foreach { l =>
-      val tiebreak = (0 until width).map(j => pickCol(j, cast = false).asc)
-      val ordered: Seq[Column] = q0.sort match {
-        case Some(s) =>
-          val c = meaOrCalcCol(s.measure, calcs)
-          val head = s.direction match {
-            case SortDirection.Asc => c.asc
-            case SortDirection.Desc => c.desc
-          }
-          head +: tiebreak
-        case None => tiebreak
-      }
-      val w = Window.partitionBy(cq("__combo")).orderBy(ordered: _*)
+      val tiebreak = ordIdx.map(j => pickCol(j, cast = false).asc)
+      // top+limit without sort declined above
+      val sortHead = q0.sort.map(s => ordered(meaOrCalcCol(s.measure, calcs), s.direction))
+      val w = Window.partitionBy(cq(Combo)).orderBy(sortHead.toSeq ++ tiebreak: _*)
       val off = l.offset.getOrElse(0L)
       agg = agg.withColumn("__rn", row_number().over(w))
         .where(cq("__rn") > off && cq("__rn") <= off + l.n).drop("__rn")
     }
 
-    val debugCols = if (q0.debug) Seq(RcaA, RcaB, RcaC, RcaD) else Nil
-    val outCols = (0 until width).map(j => pickCol(j, cast = true).as(comboHeaders.head(j)))
-    Some(agg.select(outCols ++ (debugCols ++ meaNames).map(cq): _*))
+    val outCols = ordIdx.map(j => pickCol(j, cast = true).as(headers(j)))
+    Some(agg.select(outCols ++ outMeas.map(cq): _*))
   }
 
   // ---------------------------------------------------------------- growth
@@ -771,19 +567,7 @@ final class CubePlanner(
     val w = Window
       .partitionBy(otherOuts.map(o => cq(o.keyHeader)): _*)
       .orderBy(timeKeyCols.map(c => cq(c).asc): _*)
-
-    val m     = cq(g.mea.name)
-    val prev  = lag(m, 1).over(w)
-    val mDiff = m - prev
-    // the reference emits `m_diff/0` when the previous value is <= 0 —
-    // NULL in its engines; when() without otherwise yields that NULL
-    // directly, independent of the session ANSI mode (prev > 0 guards the
-    // real division, so it can never divide by zero)
-    val growthCol = when(prev > lit(0), mDiff / prev)
-
-    val gdf = df
-      .withColumn(s"${g.mea.name} Growth", growthCol)
-      .withColumn(s"${g.mea.name} Growth Value", mDiff)
+    val gdf = withGrowth(df, w, g.mea.name)
 
     // header reordering (lib.rs:731-766): time drills move to the back;
     // growth measure moves to the back of the measures, then Growth cols.
@@ -791,6 +575,20 @@ final class CubePlanner(
     val finalCols = otherHeaders ++ timeHeaders ++ otherMeas ++
       Seq(g.mea.name, s"${g.mea.name} Growth", s"${g.mea.name} Growth Value")
     (gdf, (otherHeaders ++ timeHeaders, otherMeas :+ g.mea.name, finalCols))
+  }
+
+  /** `{mea} Growth` and `{mea} Growth Value` over window `w` (time order
+    * within each partition). The reference emits `m_diff/0` when the
+    * previous value is <= 0 — NULL in its engines; when() without
+    * otherwise yields that NULL directly, independent of the session ANSI
+    * mode (prev > 0 guards the real division, so it can never divide by
+    * zero). */
+  private def withGrowth(df: DataFrame, w: WindowSpec, mea: String): DataFrame = {
+    val m     = cq(mea)
+    val prev  = lag(m, 1).over(w)
+    val mDiff = m - prev
+    df.withColumn(s"$mea Growth", when(prev > lit(0), mDiff / prev))
+      .withColumn(s"$mea Growth Value", mDiff)
   }
 
   // ------------------------------------------------------------------- rca
@@ -807,8 +605,8 @@ final class CubePlanner(
     *     with the measure's own lossless combiner ([[rcaReagg]]:
     *     partial-agg groupBys — map-side combining, never a window's
     *     low-key-partition funnel over the a grain) and equi-join back
-    *     null-safely. The four branches share a byte-identical a-grain
-    *     exchange, so exchange reuse executes ONE fact scan.
+    *     null-safely ([[rcaReaggregated]]: the pinned a grain makes it
+    *     ONE fact scan).
     *   - otherwise (avg/moe-class …): each grain must aggregate from
     *     RAW rows — grouping sets of one `groupingSets` aggregate, the
     *     per-grain frames gid-filtered and joined back. Catalyst pushes
@@ -833,14 +631,14 @@ final class CubePlanner(
     // every downstream reference would be ambiguous — fail as a plan
     // error, not an analyzer artifact (reachable via a logic-layer cut
     // fan-out on drill_1's level, which auto-drills the cut level)
-    val rcaIds = (d1Outs ++ d2Outs).map(o => (o.dim.name, o.hier.name, o.level.name)).toSet
-    extOuts.find(o => rcaIds.contains((o.dim.name, o.hier.name, o.level.name)))
+    val rcaIds = (d1Outs ++ d2Outs).map(_.id).toSet
+    extOuts.find(o => rcaIds.contains(o.id))
       .foreach(o => fail(s"drilldown '${o.level.name}' duplicates an rca drilldown level"))
     val allOuts = extOuts ++ d1Outs ++ d2Outs
 
     // internal = the cut level is one of drill_1's output levels (by resolved
     // level, not by dimension name — rca.rs:100-127 classifies by column)
-    val d1Levels = d1Outs.map(o => (o.dim.name, o.hier.name, o.level.name)).toSet
+    val d1Levels = d1Outs.map(_.id).toSet
     val (internalCuts, externalCuts) = q.cuts.partition { c =>
       val (d, h, i) = resolveLevel(c.levelName)
       d1Levels.contains((d.name, h.name, h.levels(i).name))
@@ -857,121 +655,45 @@ final class CubePlanner(
     val extKeys = extOuts.map(_.keyHeader)
     val d1Keys  = d1Outs.map(_.keyHeader)
     val d2Keys  = d2Outs.map(_.keyHeader)
-
-    val setB = extKeys ++ d2Keys
-    val setC = extKeys ++ d1Keys
-    val setD = extKeys
-
-    def internalHeader(cut: CutSpec): String = {
-      val (cd, ch, ci) = resolveLevel(cut.levelName)
-      allOuts
-        .find(o => o.dim.name == cd.name && o.hier.name == ch.name && o.level.name == ch.levels(ci).name)
-        .map(_.keyHeader)
-        .getOrElse(fail(s"internal RCA cut level '${cut.levelName}' must be drill_1"))
+    // internal cuts filter the a side and the c frame; b/d aggregate the
+    // unfiltered a grain
+    def cutAC(df: DataFrame): DataFrame = internalCuts.foldLeft(df) { (d, cut) =>
+      d.where(cutPredicate(d, levelKeyHeader(allOuts, cut.levelName), cut))
     }
-    // the rca measure's a-grain column keeps its native type (the b/c/d
-    // re-aggregations sum it exactly; double casts come after, per grain)
-    val aggsAll = meas.map { case (m, out) =>
-      (if (out == RcaA) rcaAGrainAgg(m) else AggExprs.single(m)).as(out)
-    }
-    // null-safe equi-join back on the re-aggregation grain (<=> groups
-    // NULL keys together, matching aggregate grouping semantics)
-    def joinBack(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame =
-      if (keys.isEmpty) l.crossJoin(broadcast(r))
-      else {
-        val rr = keys.foldLeft(r)((d, k) => d.withColumnRenamed(k, s"__rj $k"))
-        val cond = keys.map(k => l(k) <=> rr(s"__rj $k")).reduce(_ && _)
-        l.join(rr, cond, "inner").drop(keys.map(k => s"__rj $k"): _*)
-      }
 
-    var df = if (rcaReaggregable(rcaMea.aggregator)) {
-      // Round 16: the grouping-sets rollup LOOKED like one pass, but the
-      // four gid-filtered frames pushed their filters below the rollup's
-      // exchange, defeating exchange reuse — the executed plan ran the
-      // Expand and the FACT SCAN four times. For re-aggregable rca
-      // measures (sum/count/weighted-sum/max/min — the b/c/d grains
-      // re-aggregate exactly from the a values via the measure's own
-      // combiner) the b/c/d frames instead RE-AGGREGATE the one a-grain
-      // aggregate and join back. The a frame is PINNED (lazy
-      // localCheckpoint): exchange reuse alone cannot share it — column
-      // pruning specializes each branch's copy of the aggregate, so the
-      // exchanges never canonicalize equal (measured: 4 fact scans, zero
-      // ReusedExchange) — while the checkpoint is a hard barrier that
-      // guarantees ONE fact scan, with the re-aggregations reading the
-      // RESULT-sized pinned rows. Every re-aggregation is a partial-agg
-      // groupBy (map-side combining, never a window's low-key-partition
-      // funnel over the a grain). Internal cuts still apply only to a
-      // and c (the b/d frames aggregate the UNFILTERED a frame), exactly
-      // the legacy branch's rule.
-      val aFrame = src.groupBy(allCols.map(cq): _*).agg(aggsAll.head, aggsAll.tail: _*)
-        .pinned(false)
-      def reagg(set: Seq[String], out: String): DataFrame =
-        if (set.isEmpty) aFrame.agg(rcaReagg(rcaMea.aggregator, cq(RcaA)).as(out))
-        else aFrame.groupBy(set.map(cq): _*)
-          .agg(rcaReagg(rcaMea.aggregator, cq(RcaA)).as(out))
-      var d0 = joinBack(aFrame, reagg(setB, RcaB), setB)
-      d0 = joinBack(d0, reagg(setD, RcaD), setD)
-      var cFrame = reagg(setC, RcaC)
-      internalCuts.foreach { cut =>
-        val header = internalHeader(cut)
-        d0 = d0.where(cutPredicate(d0, header, cut))
-        cFrame = cFrame.where(cutPredicate(cFrame, header, cut))
-      }
-      rcaCastGrains(joinBack(d0, cFrame, setC), rcaMea.aggregator)
-    } else {
-      // non-re-aggregable rca measure (avg / moe-class …): each
-      // grain must aggregate from RAW rows, which is exactly what the
-      // grouping-sets rollup does — keep it, accepting the multi-scan
-      // plan for this corner (the reference's semantics, rca.rs:50-283)
-      val setA = allCols
-      val sets = Seq(setA, setB, setC, setD)
+    var df = if (rcaReaggregable(rcaMea.aggregator))
+      rcaReaggregated(src, Nil, allCols, extKeys, d1Keys, d2Keys, meas, rcaMea.aggregator, cutAC)
+    else {
+      // non-re-aggregable rca measure (avg / moe-class …): each grain
+      // must aggregate from RAW rows, which is exactly what the
+      // grouping-sets rollup does (the reference's semantics,
+      // rca.rs:50-283). The rollup LOOKS like one pass, but each gid
+      // filter pushes below the rollup's exchange, so the plan runs the
+      // Expand and the fact scan once per grain frame. A pinned rollup
+      // (one scan + one Expand) was measured slower on RAM-resident facts
+      // (SCALING.md round 17: the pin loses the scans' overlap with the
+      // join stages).
+      val aggs = meas.map { case (m, out) => AggExprs.single(m).as(out) } :+
+        grouping_id().as("__gid")
       // grouping_id bit i (MSB-first over allCols) = 1 when the column is
       // aggregated away in that grouping set
       def gid(set: Seq[String]): Long =
         allCols.zipWithIndex.collect {
           case (c, i) if !set.contains(c) => 1L << (allCols.length - 1 - i)
         }.sum
-      val aggs = aggsAll :+ grouping_id().as("__gid")
-      // the rollup LOOKS like one pass, but each gid filter pushes below
-      // the rollup's exchange, so the UNPINNED plan runs the Expand and
-      // the fact scan once per grain frame (4x the scan WORK). Pinning
-      // the rollup (localCheckpoint barrier, same as the re-aggregable
-      // branch's a grain) buys ONE fact scan + one Expand at the cost of
-      // losing the scans' overlap with the join stages (measured ramp,
-      // SCALING.md round 17: the pin penalty tracks one scan-time and the
-      // 4x work is latency-invisible while the fact is RAM-resident).
-      // The default is therefore SIZE-AWARE: pin when the bare fact's
-      // estimated bytes exceed the threshold (scan work is the dominant
-      // term there), keep the overlapped multi-scan below it.
-      // -Dgraft.rca.pinRollup=true|false forces a shape.
-      val rolledRaw = src
-        .groupingSets(sets.map(_.map(cq)), allCols.map(cq): _*)
+      val grainSets = Seq(allCols, extKeys ++ d2Keys, extKeys ++ d1Keys, extKeys)
+      val rolled = src
+        .groupingSets(grainSets.map(_.map(cq)), allCols.map(cq): _*)
         .agg(aggs.head, aggs.tail: _*)
-      val pin = pinRollupForced(spark)
-        .getOrElse(factBytes(spark) > pinRollupBytes(spark))
-      val rolled = if (pin) rolledRaw.pinned(false) else rolledRaw
       def frame(set: Seq[String], out: String): DataFrame =
         rolled.where(cq("__gid") === gid(set))
           .select((set.map(cq) :+ cq(RcaA).as(out)): _*)
-      val aFrame = rolled.where(cq("__gid") === gid(setA)).drop("__gid")
-      var d0 = joinBack(aFrame, frame(setB, RcaB), setB)
-      d0 = joinBack(d0, frame(setD, RcaD), setD)
-      var cFrame = frame(setC, RcaC)
-      internalCuts.foreach { cut =>
-        val header = internalHeader(cut)
-        d0 = d0.where(cutPredicate(d0, header, cut))
-        cFrame = cFrame.where(cutPredicate(cFrame, header, cut))
-      }
-      joinBack(d0, cFrame, setC)
+      val aFrame = rolled.where(cq("__gid") === gid(allCols)).drop("__gid")
+      rcaJoinGrains(aFrame, Nil, extKeys, d1Keys, d2Keys, frame, cutAC)
     }
 
     val rcaName = s"${r.mea.name} RCA"
-    // try_divide: a zero denominator (possible for avg/max/min-class rca
-    // measures) yields NULL — the DuckDB oracle's division semantics —
-    // independent of the session's spark.sql.ansi.enabled; on nonzero
-    // denominators it is bit-identical to Divide
-    df = df.withColumn(rcaName,
-      try_divide(try_divide(cq(RcaA), cq(RcaB)), try_divide(cq(RcaC), cq(RcaD))))
+    df = withRca(df, rcaName)
 
     val drillHeads = drillHeaders(extOuts) ++ drillHeaders(d1Outs) ++ drillHeaders(d2Outs)
     val debugCols  = if (q.debug) Seq(RcaA, RcaB, RcaC, RcaD) else Nil
@@ -980,6 +702,70 @@ final class CubePlanner(
     df = applyOptions(df, q, allOuts, drillHeads, meaNames, Map("rca" -> rcaName))
     df.select((drillHeads ++ debugCols ++ meaNames).map(cq): _*)
   }
+
+  /** The one-scan RCA form for a re-aggregable rca measure: ONE a-grain
+    * aggregate over `src` (grouped by `tag ++ aCols`), b/c/d re-aggregated
+    * from its rca column with the measure's own lossless combiner
+    * ([[rcaReagg]]) and joined back ([[rcaJoinGrains]]). The a frame is
+    * PINNED (lazy localCheckpoint): exchange reuse alone cannot share it —
+    * column pruning specializes each branch's copy of the aggregate, so
+    * the exchanges never canonicalize equal (measured: 4 fact scans, zero
+    * ReusedExchange) — while the checkpoint is a hard barrier that
+    * guarantees ONE fact scan, with the re-aggregations reading the
+    * RESULT-sized pinned rows. Every re-aggregation is a partial-agg
+    * groupBy (map-side combining, never a window's low-key-partition
+    * funnel over the a grain). */
+  private def rcaReaggregated(
+      src: DataFrame, tag: Seq[String], aCols: Seq[String],
+      extKeys: Seq[String], d1Keys: Seq[String], d2Keys: Seq[String],
+      meas: Seq[(Measure, String)], rcaAgg: Aggregator,
+      cutAC: DataFrame => DataFrame): DataFrame = {
+    // the rca measure's a-grain column keeps its native type (the b/c/d
+    // re-aggregations sum it exactly; double casts come after, per grain)
+    val aggs = meas.map { case (m, out) =>
+      (if (out == RcaA) rcaAGrainAgg(m) else AggExprs.single(m)).as(out)
+    }
+    val aFrame = src.groupBy((tag ++ aCols).map(cq): _*).agg(aggs.head, aggs.tail: _*)
+      .pinned(false)
+    def reagg(set: Seq[String], out: String): DataFrame =
+      aFrame.groupBy((tag ++ set).map(cq): _*).agg(rcaReagg(rcaAgg, cq(RcaA)).as(out))
+    rcaCastGrains(rcaJoinGrains(aFrame, tag, extKeys, d1Keys, d2Keys, reagg, cutAC), rcaAgg)
+  }
+
+  /** Joins the b=(ext,d2), d=(ext) and c=(ext,d1) grain frames (`grain`
+    * builds each as its keys plus the named rca column) back onto the a
+    * frame, null-safely on `tag ++` the grain's keys (<=> groups NULL keys
+    * together, matching aggregate grouping semantics). `cutAC` filters
+    * the a side and the c frame before the c join, so b/d keep their full
+    * denominators. */
+  private def rcaJoinGrains(
+      aFrame: DataFrame, tag: Seq[String],
+      extKeys: Seq[String], d1Keys: Seq[String], d2Keys: Seq[String],
+      grain: (Seq[String], String) => DataFrame,
+      cutAC: DataFrame => DataFrame): DataFrame = {
+    def joinBack(l: DataFrame, r: DataFrame, set: Seq[String]): DataFrame = {
+      val keys = tag ++ set
+      if (keys.isEmpty) l.crossJoin(broadcast(r))
+      else {
+        val rr = keys.foldLeft(r)((d, k) => d.withColumnRenamed(k, s"__rj $k"))
+        val cond = keys.map(k => l(k) <=> rr(s"__rj $k")).reduce(_ && _)
+        l.join(rr, cond, "inner").drop(keys.map(k => s"__rj $k"): _*)
+      }
+    }
+    val setB = extKeys ++ d2Keys
+    val setC = extKeys ++ d1Keys
+    val bd = joinBack(joinBack(aFrame, grain(setB, RcaB), setB), grain(extKeys, RcaD), extKeys)
+    joinBack(cutAC(bd), cutAC(grain(setC, RcaC)), setC)
+  }
+
+  /** RCA = (a/b)/(c/d). try_divide: a zero denominator (possible for
+    * avg/max/min-class rca measures) yields NULL — the DuckDB oracle's
+    * division semantics — independent of the session's
+    * spark.sql.ansi.enabled; on nonzero denominators it is bit-identical
+    * to Divide. */
+  private def withRca(df: DataFrame, rcaName: String): DataFrame =
+    df.withColumn(rcaName,
+      try_divide(try_divide(cq(RcaA), cq(RcaB)), try_divide(cq(RcaC), cq(RcaD))))
 
   // ------------------------------------------------------------------ rate
 
@@ -997,25 +783,8 @@ final class CubePlanner(
     val outsOrig = outLevels(q.drilldowns.filterNot(_.levelName == r.levelName), q.parents, q.properties, q.captions)
     val rateOut  = outsAll.last
 
-    val mea     = cube.measure(q.measures.head.name).get
     val meaName = q.measures.head.name
-
     val src = buildSource(spark, outsAll, q.cuts, q, Nil)
-
-    val rateKey   = cq(rateOut.keyHeader)
-    val keyDt     = src.schema(rateOut.keyHeader).dataType
-    val memberLits = r.values.map(v => lit(typedMember(keyDt, v)))
-    val isMember  = rateKey.isin(memberLits: _*)
-
-    val v = cq(mea.column)
-    // member-part aggregates ignore non-member rows via when(...): for sum
-    // that is sum(when(m, v)); for count, sum(when(m, 1)) — both NULL (not
-    // 0) when a group has no member rows, which drops the group below
-    val (totalAgg, partAgg) = mea.aggregator match {
-      case Aggregator.Sum   => (sum(v), sum(when(isMember, v)))
-      case Aggregator.Count => (count(v).cast("long"), sum(when(isMember.and(v.isNotNull), lit(1L))))
-      case other => fail(s"rate requires a sum or count measure, got $other")
-    }
 
     // The joint outLevels call (output drills + the rate level) may
     // disambiguate a header collision the output grain alone doesn't have
@@ -1024,17 +793,11 @@ final class CubePlanner(
     // grain keeps the bare one). Group by the source frame's own headers,
     // then rename back to the output grain's — the grain is identical,
     // only the names differ.
-    val twins = outsOrig.map(o => o -> outsAll.find(a =>
-        a.dim.name == o.dim.name && a.hier.name == o.hier.name &&
-        a.level.name == o.level.name)
+    val twins = outsOrig.map(o => o -> outsAll.find(_.id == o.id)
       .getOrElse(fail(s"rate lost level '${o.level.name}'")))
     val headers = drillHeaders(outsOrig)
-    var df = src
-      .groupBy(twins.flatMap { case (_, a) =>
-        (a.keyHeader +: a.nameHeader.toSeq) ++ a.props.map(_._1) }.map(cq): _*)
-      .agg(totalAgg.as(meaName), partAgg.as("__part"))
-      .where(cq("__part").isNotNull)
-      .withColumn("Rate", try_divide(cq("__part"), cq(meaName)))
+    var df = rateAggregate(src, drillHeaders(twins.map(_._2)), rateOut.keyHeader, r,
+      cube.measure(meaName).get -> meaName)
     twins.foreach { case (o, a) =>
       if (a.keyHeader != o.keyHeader) df = df.withColumnRenamed(a.keyHeader, o.keyHeader)
       for (n <- o.nameHeader; an <- a.nameHeader; if n != an)
@@ -1045,6 +808,30 @@ final class CubePlanner(
     df.select((headers ++ Seq(meaName, "Rate")).map(cq): _*)
   }
 
+  /** Rate's one conditional-aggregate pass over `src`, grouped by
+    * `groupCols`: the measure's total, the member part (`__part`) and
+    * Rate = part/total; groups with no member rows drop. Member-part
+    * aggregates ignore non-member rows via when(...): for sum that is
+    * sum(when(m, v)); for count, sum(when(m, 1)) — both NULL (not 0) when
+    * a group has no member rows. */
+  private def rateAggregate(
+      src: DataFrame, groupCols: Seq[String], rateHeader: String, r: RateQuery,
+      mea: (Measure, String)): DataFrame = {
+    val (m, meaName) = mea
+    val keyDt = src.schema(rateHeader).dataType
+    val isMember = cq(rateHeader).isin(r.values.map(v => lit(typedMember(keyDt, v))): _*)
+    val v = cq(m.column)
+    val (totalAgg, partAgg) = m.aggregator match {
+      case Aggregator.Sum   => (sum(v), sum(when(isMember, v)))
+      case Aggregator.Count => (count(v).cast("long"), sum(when(isMember.and(v.isNotNull), lit(1L))))
+      case other => fail(s"rate requires a sum or count measure, got $other")
+    }
+    src.groupBy(groupCols.map(cq): _*)
+      .agg(totalAgg.as(meaName), partAgg.as("__part"))
+      .where(cq("__part").isNotNull)
+      .withColumn("Rate", try_divide(cq("__part"), cq(meaName)))
+  }
+
   // ---------------------------------------------------------- output model
 
   /** One level to project: its dim/hier, the output header names for the key
@@ -1053,7 +840,10 @@ final class CubePlanner(
       dim: Dimension, hier: Hierarchy, level: Level,
       keyHeader: String, nameHeader: Option[String],
       nameSourceColumn: Option[String],
-      props: Seq[(String, String)]) // header -> source column
+      props: Seq[(String, String)]) { // header -> source column
+    /** Level identity, independent of header disambiguation. */
+    def id: (String, String, String) = (dim.name, hier.name, level.name)
+  }
 
   private def resolveLevel(ln: LevelName): (Dimension, Hierarchy, Int) =
     cube.findLevel(ln).getOrElse(fail(s"level '$ln' not found in cube '${cube.name}'"))
@@ -1321,19 +1111,41 @@ final class CubePlanner(
     case Comparison.Gte => c >= lit(k.n)
   }
 
-  /** Wrapping options applied after aggregation/calculation, in the
-    * reference's order (options.rs): top_where → top (windowed row_number
-    * replaces ClickHouse `LIMIT n BY`) → HAVING filters + sparse → sort →
-    * limit/offset. */
+  private def ordered(c: Column, d: SortDirection): Column = d match {
+    case SortDirection.Asc  => c.asc
+    case SortDirection.Desc => c.desc
+  }
+
+  /** HAVING-style measure filters plus `sparse` (every one of
+    * `sparseCols` non-null), ANDed; None when the query has neither. */
+  private def havingPred(
+      q: CubeQuery, calcs: Map[String, String], sparseCols: Seq[String]): Option[Column] = {
+    val filterPreds = q.filters.map { f =>
+      val c  = meaOrCalcCol(f.byMeaOrCalc, calcs)
+      val p1 = constraintPred(c, f.constraint)
+      (f.operator, f.constraint2) match {
+        case (Some(FilterOp.And), Some(c2)) => p1 && constraintPred(c, c2)
+        case (Some(FilterOp.Or), Some(c2))  => p1 || constraintPred(c, c2)
+        case _                              => p1
+      }
+    }
+    val sparsePreds = if (q.sparse) sparseCols.map(cq(_).isNotNull) else Nil
+    (filterPreds ++ sparsePreds).reduceOption(_ && _)
+  }
+
   /** Resolves a level reference to its output key header via the OutLevel
     * list (robust to duplicate-header disambiguation prefixes). */
   private def levelKeyHeader(outs: Seq[OutLevel], ln: LevelName): String = {
     val (d, h, i) = resolveLevel(ln)
-    outs.find(o => o.dim.name == d.name && o.hier.name == h.name && o.level.name == h.levels(i).name)
+    outs.find(_.id == (d.name, h.name, h.levels(i).name))
       .map(_.keyHeader)
       .getOrElse(fail(s"level '$ln' must be a drilldown of the query"))
   }
 
+  /** Wrapping options applied after aggregation/calculation, in the
+    * reference's order (options.rs): top_where → top (windowed row_number
+    * replaces ClickHouse `LIMIT n BY`) → HAVING filters + sparse → sort →
+    * limit/offset. */
   private def applyOptions(
       df0: DataFrame, q: CubeQuery, outs: Seq[OutLevel],
       drillHeaderCols: Seq[String], meaNames: Seq[String],
@@ -1346,39 +1158,20 @@ final class CubePlanner(
         df = df.where(constraintPred(meaOrCalcCol(tw.byMeaOrCalc, calcs), tw.constraint))
       }
       val byHeader = levelKeyHeader(outs, top.byDimension)
-      val sortCols = top.sortMeaOrCalc.map(meaOrCalcCol(_, calcs))
-      val ordered = top.sortDirection match {
-        case SortDirection.Asc  => sortCols.map(_.asc)
-        case SortDirection.Desc => sortCols.map(_.desc)
-      }
+      val sortCols = top.sortMeaOrCalc.map(c => ordered(meaOrCalcCol(c, calcs), top.sortDirection))
       // extra drill-col tiebreakers make top-k deterministic (the reference
       // inherits ClickHouse's arbitrary tie order)
       val tiebreak = drillHeaderCols.filterNot(_ == byHeader).map(cq(_).asc)
-      val w = Window.partitionBy(cq(byHeader)).orderBy(ordered ++ tiebreak: _*)
+      val w = Window.partitionBy(cq(byHeader)).orderBy(sortCols ++ tiebreak: _*)
       df = df.withColumn("__rn", row_number().over(w)).where(cq("__rn") <= top.n).drop("__rn")
     }
 
-    // HAVING-style measure filters + sparse, in the final wrapper
-    val filterPreds = q.filters.map { f =>
-      val c  = meaOrCalcCol(f.byMeaOrCalc, calcs)
-      val p1 = constraintPred(c, f.constraint)
-      (f.operator, f.constraint2) match {
-        case (Some(FilterOp.And), Some(c2)) => p1 && constraintPred(c, c2)
-        case (Some(FilterOp.Or), Some(c2))  => p1 || constraintPred(c, c2)
-        case _                              => p1
-      }
-    }
-    val sparsePreds = if (q.sparse) meaNames.map(cq(_).isNotNull) else Nil
-    (filterPreds ++ sparsePreds).reduceOption(_ && _).foreach(p => df = df.where(p))
+    havingPred(q, calcs, meaNames).foreach(p => df = df.where(p))
 
     // final ordering: explicit sort > top's by-col > drill columns asc
     val sortCols: Seq[Column] = q.sort match {
       case Some(s) =>
-        val c = meaOrCalcCol(s.measure, calcs)
-        val head = s.direction match {
-          case SortDirection.Asc => c.asc; case SortDirection.Desc => c.desc
-        }
-        head +: drillHeaderCols.map(cq(_).asc)
+        ordered(meaOrCalcCol(s.measure, calcs), s.direction) +: drillHeaderCols.map(cq(_).asc)
       case None =>
         q.top match {
           case Some(top) =>
@@ -1442,7 +1235,7 @@ final class CubePlanner(
 object CubePlanner {
   /** rca measures whose coarser grains (b/c/d) re-aggregate EXACTLY from
     * the a-grain values — the precondition for the one-scan form of
-    * [[planRca]]/[[planFanOutFusedRca]]. count re-aggregates as a sum of
+    * [[rcaReaggregated]]. count re-aggregates as a sum of
     * partial counts; weighted sum is a sum of products; max/min are
     * idempotent-associative (max of per-grain maxes IS the raw max). */
   private def rcaReaggregable(a: Aggregator): Boolean = a match {
@@ -1481,32 +1274,12 @@ object CubePlanner {
     case _ => df
   }
 
-  /** Force the non-re-aggregable rca rollup shape (see planRca):
-    * Some(true) = pinned one-scan, Some(false) = overlapped multi-scan,
-    * None = size-aware auto (pin above [[pinRollupBytes]]). Overrides are
-    * SESSION-scoped first (`spark.conf.set("graft.rca.pinRollup", …)` —
-    * parallel tests and concurrent sessions don't leak forced shapes into
-    * each other's plans), with the JVM-wide -D as the CLI fallback. A
-    * persist()-based shared-cache shape was measured and rejected: the
-    * join analyzer's relation dedup re-aliases three of the four rollup
-    * subtrees, cache lookup replaces only one, and the executed plan
-    * still scans the fact four times (SCALING.md round 17). */
-  private def pinRollupForced(spark: SparkSession): Option[Boolean] =
-    spark.conf.getOption("graft.rca.pinRollup")
-      .orElse(sys.props.get("graft.rca.pinRollup")).map(_.toBoolean)
-
-  /** Auto threshold: above this estimated bare-fact size, scan work
-    * dominates the lost overlap and the rollup pins (default 8 GiB;
-    * session conf `graft.rca.pinRollupBytes`, then -D, overrides). */
-  private def pinRollupBytes(spark: SparkSession): BigInt =
-    BigInt(spark.conf.getOption("graft.rca.pinRollupBytes")
-      .orElse(sys.props.get("graft.rca.pinRollupBytes"))
-      .getOrElse("8589934592"))
-
   private val RcaA = "__rca_a"
   private val RcaB = "__rca_b"
   private val RcaC = "__rca_c"
   private val RcaD = "__rca_d"
+  /** The fused fan-out's combo id column. */
+  private val Combo = "__combo"
 
   private[plan] def fail(msg: String): Nothing = throw PlanError(msg)
 
@@ -1515,15 +1288,21 @@ object CubePlanner {
 
   /** Cut members become typed literals matching the key column's type —
     * no string splicing, so the reference's member-cache injection defense
-    * (handlers/util.rs:133-146) is unnecessary. */
-  private[plan] def typedMember(dt: DataType, s: String): Any = dt match {
-    case ByteType | ShortType | IntegerType | LongType => s.trim.toLong
-    case FloatType | DoubleType                        => s.trim.toDouble
-    case _: DecimalType                                => BigDecimal(s.trim)
-    case BooleanType                                   => s.trim.toBoolean
-    case DateType                                      => java.sql.Date.valueOf(s.trim)
-    case _                                             => s
-  }
+    * (handlers/util.rs:133-146) is unnecessary. A member that does not
+    * parse as that type is a query error (PlanError), not a server fault. */
+  private[plan] def typedMember(dt: DataType, s: String): Any =
+    try dt match {
+      case ByteType | ShortType | IntegerType | LongType => s.trim.toLong
+      case FloatType | DoubleType                        => s.trim.toDouble
+      case _: DecimalType                                => BigDecimal(s.trim)
+      case BooleanType                                   => s.trim.toBoolean
+      case DateType                                      => java.sql.Date.valueOf(s.trim)
+      case _                                             => s
+    } catch {
+      // NumberFormatException included
+      case _: IllegalArgumentException =>
+        fail(s"member '$s' is not a valid ${dt.simpleString} level key")
+    }
 
   /** Inline schema tables become true LocalRelations
     * (reference compiles them to `select … union all …`, schema.rs:448-486).

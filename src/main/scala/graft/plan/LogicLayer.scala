@@ -53,17 +53,6 @@ final class LogicLayer(
     /** Property → unique display name (config.rs:108-127): the property
       * header (= the property's name) renames to the unique name. */
     uniquePropNames: Map[PropertyName, String] = Map.empty,
-    /** Flag-gated single-plan fan-out (SURVEY §7.4 risk 2): the N member
-      * plans of a cut fan-out
-      * fuse into one scan + one tagged aggregate
-      * ([[CubePlanner.planFanOutFused]]) instead of an N-way union of
-      * near-identical plans. Default ON since round 13 (proven
-      * result-identical on the q31 family + the logic-layer fuzz corpus
-      * in LogicLayerFusedSpec, and 2.2× throughput / p95 −62% at 16-way
-      * load, SCALING.md); `-Dgraft.ll.fusedFanOut=false` is the
-      * off-switch. Ineligible queries fall back to the fan-out either
-      * way. */
-    fusedFanOut: Boolean = sys.props.get("graft.ll.fusedFanOut").forall(_.toBoolean),
     /** Summary-cube planners tried before the base planner, in order —
       * [[PreaggPlanner]]'s routing applied to the /data surface (round
       * 12): a member query a summary can answer (drills at/above the
@@ -261,37 +250,25 @@ final class LogicLayer(
     }
   }
 
-  def plan(spark: SparkSession, q: LogicLayerQuery): DataFrame = {
+  /** A cut fan-out of N member queries plans as ONE fused scan + tagged
+    * aggregate ([[CubePlanner.planFanOutFused]]) instead of an N-way union
+    * of near-identical plans (2.2× throughput / p95 −62% at 16-way load,
+    * SCALING.md); a declined fusion (None) falls back to the per-member
+    * union. */
+  def plan(spark: SparkSession, q: LogicLayerQuery): DataFrame = planWith(spark, q, fuse = true)
+
+  /** [[plan]] through the per-member union only: the fallback a declined
+    * fusion takes, and the oracle the fused plan is proven against
+    * (LogicLayerFusedSpec). */
+  private[plan] def planUnfused(spark: SparkSession, q: LogicLayerQuery): DataFrame =
+    planWith(spark, q, fuse = false)
+
+  private def planWith(spark: SparkSession, q: LogicLayerQuery, fuse: Boolean): DataFrame = {
     val timeCut = q.time.map(resolveTime(spark, _)).toSeq
     val cuts = resolveCutOps(spark, substituteSets(q.cuts)) ++ timeCut
     val queries = fanOut(q, cuts)
-    val merged = {
-      // Every member shape is fusable; declines are per-plan (None →
-      // per-member fan-out): filters and sparse apply identically per
-      // combo, top/top_where and limit become combo-partitioned windows,
-      // a sort without a limit selects no rows (the union is
-      // deterministically re-sorted below either way), growth (round 13)
-      // is a combo-partitioned lag over the fused aggregate — the member
-      // window's non-time partition keys are per-combo null-padded
-      // constants in the fused frame, so one window replicates every
-      // member's — rate (round 14) is already ONE conditional-aggregate
-      // pass in the member plan, which replicates verbatim as the fused
-      // (combo, grain) aggregate with the rate level riding the shared
-      // source, and rca (round 16, the last member shape) fuses through
-      // [[CubePlanner.planFanOutFusedRca]]: ONE __combo-keyed a-grain
-      // aggregate pinned and re-aggregated for b/c/d (one fact scan),
-      // with its own declines (non-re-aggregable rca measure, ext levels
-      // colliding with the rca drills, caption disagreement on the rca
-      // drills). planFanOutFused itself declines data-dependent cases
-      // (a type-consolidation fallback under a row slice, top+limit
-      // without an explicit sort — a tie-arbitrary slice in the fan-out —
-      // and a varying cut on the growth time dimension, which would break
-      // the positional identity of the time columns).
-      val fused =
-        if (fusedFanOut && queries.length > 1) routeFused(spark, queries)
-        else None
-      fused.getOrElse(consolidate(queries.map(route(spark, _))))
-    }
+    val fused = if (fuse && queries.length > 1) routeFused(spark, queries) else None
+    val merged = fused.getOrElse(consolidate(queries.map(route(spark, _))))
     val out = applyExclude(merged, q.exclude)
     // the union (or fused equivalent) of independently-ordered sub-results
     // is unordered; re-sort on all columns for a deterministic response

@@ -179,9 +179,8 @@ final class GraftServer(
   /** How long a follower waits on the leader's future before giving up and
     * computing independently. Generous — any query this slow should itself
     * be investigated — but finite, so a wedged leader can never pin the
-    * whole request pool. Tests shrink it via the env override. */
-  private val leaderWaitSeconds: Long =
-    sys.env.get("GRAFT_LEADER_WAIT_SECONDS").map(_.toLong).getOrElse(300L)
+    * whole request pool. */
+  private val leaderWaitSeconds = 300L
 
   /** Admission gate: at most this many requests COMPUTE (plan + run Spark
     * jobs) at once; the rest queue FIFO on a fair semaphore. Cache hits and

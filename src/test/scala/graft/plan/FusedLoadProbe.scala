@@ -9,7 +9,8 @@ import graft.core._
 /** Measurement harness (not a spec): the fused fan-out's concurrency
   * benefit — SURVEY §7.4 risk 2's motivation was "N-way unions of
   * near-identical plans waste scheduler time at high concurrency". Runs a
-  * fan-out-heavy query mix at fixed concurrency with the flag off and on
+  * fan-out-heavy query mix at fixed concurrency through the per-member
+  * union (LogicLayer.planUnfused) and the fused plan (LogicLayer.plan)
   * and reports wall/p50/p95 per mode. Run with:
   *   sbt "Test/runMain graft.plan.FusedLoadProbe /root/testdata/sf0.1 48 16"
   */
@@ -61,14 +62,15 @@ object FusedLoadProbe {
     val planner = graft.engine.TpchStar.planner(sfDir)
     implicit val pool: scala.concurrent.ExecutionContextExecutorService =
       ExecutionContext.fromExecutorService(Executors.newFixedThreadPool(conc))
+    val ll = new LogicLayer(planner)
     def run(fused: Boolean): (Double, Double, Double) = {
-      val ll = new LogicLayer(planner, fusedFanOut = fused)
       val t0 = System.nanoTime()
       val lat = Await.result(
         Future.sequence(mix.map { q =>
           Future {
             val s = System.nanoTime()
-            ll.plan(spark, q).write.format("noop").mode("overwrite").save()
+            (if (fused) ll.plan(spark, q) else ll.planUnfused(spark, q))
+              .write.format("noop").mode("overwrite").save()
             (System.nanoTime() - s) / 1e9
           }(pool)
         }), Duration.Inf).sorted

@@ -6,13 +6,14 @@ import graft.engine.TpchStar
 import graft.fuzz.QueryFuzzer
 import graft.SparkTestSession.{spark, SfDir}
 
-/** The flag-gated single-plan fan-out (SURVEY §7.4 risk 2, landed round
-  * 12): eligible logic-layer cut fan-outs fuse into one scan + one tagged
-  * aggregate instead of an N-way union of near-identical plans. This spec
-  * proves the fused path result-identical to the fan-out on the q31
-  * family and the SAME 60-case fuzz corpus FuzzSpec gates against its SQL
-  * oracle — and that fusion actually engages (no Union in the physical
-  * plan) where eligible. */
+/** The single-plan fan-out: eligible logic-layer cut fan-outs fuse into
+  * one scan + one tagged aggregate instead of an N-way union of
+  * near-identical plans. This spec proves [[LogicLayer.plan]] (fused)
+  * result-identical to the per-member union ([[LogicLayer.planUnfused]],
+  * the fallback a declined fusion takes) on the q31 family and the SAME
+  * 60-case fuzz corpus FuzzSpec gates against its SQL oracle — and that
+  * fusion actually engages (no Union in the physical plan) where
+  * eligible. */
 class LogicLayerFusedSpec extends AnyFunSuite {
 
   private def die(m: String): Nothing = throw PlanError(m)
@@ -22,12 +23,11 @@ class LogicLayerFusedSpec extends AnyFunSuite {
   private def image(df: org.apache.spark.sql.DataFrame) = graft.SparkTestSession.rowImage(df)
 
   private val planner = TpchStar.planner(SfDir)
-  private val fan = new LogicLayer(planner, fusedFanOut = false)
-  private val fused = new LogicLayer(planner, fusedFanOut = true)
+  private val ll = new LogicLayer(planner)
 
   private def bothAgree(q: LogicLayerQuery, mustFuse: Boolean): Unit = {
-    val f = fused.plan(spark, q)
-    assert(image(f) == image(fan.plan(spark, q)), s"fused != fan-out for $q")
+    val f = ll.plan(spark, q)
+    assert(image(f) == image(ll.planUnfused(spark, q)), s"fused != fan-out for $q")
     if (mustFuse) {
       val p = f.queryExecution.executedPlan.toString
       assert(!p.contains("Union"),
@@ -117,8 +117,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
       measures = Seq(mea("Quantity")),
       top = Some(TopQuery.parse("2,Ship Date.Year,Quantity,desc").fold(die, identity)),
       limit = Some(LimitQuery.parse("3").fold(die, identity)))
-    val f = fused.plan(spark, q)
-    assert(image(f) == image(fan.plan(spark, q)))
+    val f = ll.plan(spark, q)
+    assert(image(f) == image(ll.planUnfused(spark, q)))
     assert(f.queryExecution.executedPlan.toString.contains("Union"),
       "tie-arbitrary top+limit must keep the union fan-out")
   }
@@ -159,8 +159,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
       cuts = Seq(cut("Ship Date.Year.1996,1997"), cut("Ship Date.Month.3,4,5")),
       measures = Seq(mea("Quantity")),
       growth = Some(GrowthQuery.parse("Geography.Region,Quantity").fold(die, identity)))
-    val f = fused.plan(spark, timeFan)
-    assert(image(f) == image(fan.plan(spark, timeFan)))
+    val f = ll.plan(spark, timeFan)
+    assert(image(f) == image(ll.planUnfused(spark, timeFan)))
   }
 
   test("growth-augmented LL fuzz slice: fused == fan-out wherever a time level is drilled") {
@@ -176,8 +176,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
           // the fan-out threads top per combo over the GROWN frame; the
           // corpus' tops are rare and already covered — drop only rca/rate
           rca = None, rate = None)
-        val a = try Right(fan.plan(spark, q)) catch { case e: PlanError => Left(e) }
-        val b = try Right(fused.plan(spark, q)) catch { case e: PlanError => Left(e) }
+        val a = try Right(ll.planUnfused(spark, q)) catch { case e: PlanError => Left(e) }
+        val b = try Right(ll.plan(spark, q)) catch { case e: PlanError => Left(e) }
         (a, b) match {
           case (Right(x), Right(y)) =>
             exercised += 1
@@ -235,8 +235,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
       if (!okMea) None
       else {
         val q = q0.copy(rate = Some(r), rca = None, growth = None)
-        val a = try Right(fan.plan(spark, q)) catch { case e: PlanError => Left(e) }
-        val b = try Right(fused.plan(spark, q)) catch { case e: PlanError => Left(e) }
+        val a = try Right(ll.planUnfused(spark, q)) catch { case e: PlanError => Left(e) }
+        val b = try Right(ll.plan(spark, q)) catch { case e: PlanError => Left(e) }
         (a, b) match {
           case (Right(x), Right(y)) =>
             exercised += 1
@@ -295,8 +295,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
       cuts = Seq(cut("Geography.Nation.1,2,3"), cut("Geography.Region.0,2")),
       measures = Seq(mea("Quantity")),
       rca = Some(RcaQuery.parse("Geography.Nation,Part.Brand,Quantity").fold(die, identity)))
-    val ef = intercept[PlanError](fused.plan(spark, collide))
-    val eu = intercept[PlanError](fan.plan(spark, collide))
+    val ef = intercept[PlanError](ll.plan(spark, collide))
+    val eu = intercept[PlanError](ll.planUnfused(spark, collide))
     assert(ef.getMessage == eu.getMessage &&
       ef.getMessage.contains("duplicates an rca drilldown level"))
   }
@@ -308,8 +308,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
     val failures = QueryFuzzer.llCases(60).flatMap { fc =>
       val q0 = graft.server.QueryParams.toLogicLayerQuery(fc.params, TpchStar.salesCube)
       val q = q0.copy(rca = Some(r), rate = None, growth = None)
-      val a = try Right(fan.plan(spark, q)) catch { case e: PlanError => Left(e) }
-      val b = try Right(fused.plan(spark, q)) catch { case e: PlanError => Left(e) }
+      val a = try Right(ll.planUnfused(spark, q)) catch { case e: PlanError => Left(e) }
+      val b = try Right(ll.plan(spark, q)) catch { case e: PlanError => Left(e) }
       (a, b) match {
         case (Right(x), Right(y)) =>
           exercised += 1
@@ -327,8 +327,8 @@ class LogicLayerFusedSpec extends AnyFunSuite {
     var fusedCount = 0
     val failures = QueryFuzzer.llCases(60).flatMap { fc =>
       val q = graft.server.QueryParams.toLogicLayerQuery(fc.params, TpchStar.salesCube)
-      val a = fan.plan(spark, q)
-      val b = fused.plan(spark, q)
+      val a = ll.planUnfused(spark, q)
+      val b = ll.plan(spark, q)
       val (ia, ib) = (image(a), image(b))
       val pa = a.queryExecution.executedPlan.toString
       val pb = b.queryExecution.executedPlan.toString

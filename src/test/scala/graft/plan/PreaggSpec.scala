@@ -222,14 +222,13 @@ class PreaggSpec extends AnyFunSuite {
     val plain = new LogicLayer(base)
     // fan-out path: both member queries route to the summary
     val routed = new LogicLayer(base, summaries = Seq(summaryPlanner))
-    val r = routed.plan(spark, llq("Quantity"))
+    val r = routed.planUnfused(spark, llq("Quantity"))
     assert(img(r) == img(plain.plan(spark, llq("Quantity"))))
     val p = r.queryExecution.executedPlan.toString
     assert(p.contains("sales_nation_year") && !p.contains("lineitem.parquet"),
       "fan-out members must scan the summary, never the fact:\n" + p.take(800))
     // fused fan-out path: the single plan fuses ON the summary cube
-    val fusedRouted = new LogicLayer(base, fusedFanOut = true, summaries = Seq(summaryPlanner))
-    val f = fusedRouted.plan(spark, llq("Quantity"))
+    val f = routed.plan(spark, llq("Quantity"))
     assert(img(f) == img(plain.plan(spark, llq("Quantity"))))
     val fp = f.queryExecution.executedPlan.toString
     assert(!fp.contains("Union") && fp.contains("sales_nation_year") &&

@@ -72,32 +72,17 @@ class ScaleInvariantsSpec extends AnyFunSuite {
     assert(pm.contains("ExistingRDD"), "expected the pinned a-grain scans:\n" + pm.take(1200))
   }
 
-  test("rca (avg measure): pinned rollup — one Expand inside the barrier, no raw re-scan") {
-    // the non-re-aggregable branch above the size threshold: each grain
-    // aggregates from raw rows via ONE grouping-sets rollup, pinned so
-    // the four gid frames read the checkpoint instead of pushing their
-    // filters below the exchange and re-running Expand + fact scan per
-    // grain (the small-fact shape, asserted below)
+  test("rca (avg measure): grouping-sets rollup, multi-scan shape") {
+    // the non-re-aggregable branch: each grain aggregates from raw rows
+    // via ONE grouping-sets rollup, unpinned, so the gid frames push their
+    // filters below the exchange and scan the fact per grain (the 4x scan
+    // WORK is latency-invisible while the fact is RAM-resident)
     val avgRca = CubeQuery(
       measures = Seq(mea("Quantity")),
       rca = Some(RcaQuery.parse("Geography.Nation,Part.Brand,Avg Discount").fold(die, identity)))
-    // session-scoped force (round 18): a sys.props force would leak the
-    // shape into concurrently-planning suites sharing this JVM
-    spark.conf.set("graft.rca.pinRollup", "true")
-    try {
-      val pm = plan(avgRca)
-      assert(!pm.contains("Expand"),
-        "the Expand must live inside the pinned rollup, not the consumer plan:\n" + pm.take(1200))
-      assert(!pm.contains("lineitem"),
-        "grain frames must read the pinned rollup, not re-scan the fact:\n" + pm.take(1600))
-      assert(pm.contains("ExistingRDD"), "expected the pinned rollup scans:\n" + pm.take(1200))
-    } finally spark.conf.unset("graft.rca.pinRollup")
-    // size-aware auto at the tiny fixture: the fact is far below the pin
-    // threshold, so auto keeps the overlapped multi-scan shape (the 4x
-    // scan WORK is latency-invisible while the fact is RAM-resident)
     val pa = plan(avgRca)
     assert(pa.contains("Expand") && pa.contains("lineitem"),
-      "auto must keep the multi-scan shape below the size threshold:\n" + pa.take(1200))
+      "avg rca must keep the multi-scan rollup shape:\n" + pa.take(1200))
   }
 
   test("rca (max measure): re-agg branch — pinned a-grain, max-of-max joins, no Expand") {
@@ -120,7 +105,7 @@ class ScaleInvariantsSpec extends AnyFunSuite {
       cuts = Seq(cut("Ship Date.Year.1996,1997"), cut("Ship Date.Month.3,4")),
       measures = Seq(mea("Quantity")),
       rca = Some(RcaQuery.parse("Geography.Nation,Part.Brand,Quantity").fold(die, identity)))
-    val p = new LogicLayer(planner, fusedFanOut = true).plan(spark, q)
+    val p = new LogicLayer(planner).plan(spark, q)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Union"), "fused rca must be a single plan:\n" + p.take(1200))
     assert(!p.contains("Expand"), "fused rca must not grouping-set:\n" + p.take(1200))

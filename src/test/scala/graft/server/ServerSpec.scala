@@ -292,7 +292,13 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("/cubes/Sales/aggregate.csv?drilldowns=Geography.Region&measures=Quantity&filters=Bogus.gt.1",
         400, "filter measure 'Bogus' must be a measure in the query"),
       ("/cubes/Sales/aggregate.csv?drilldowns=Geography.Region&measures=Quantity&sort=rca.desc",
-        400, "sort references the rca calculation but the query has no rca"))
+        400, "sort references the rca calculation but the query has no rca"),
+      // a member that does not parse as the level key's type is a query
+      // error, not a NumberFormatException 500
+      ("/cubes/Sales/aggregate.csv?measures=Quantity&cuts=Geography.Region.abc",
+        400, "member 'abc' is not a valid int level key"),
+      ("/data.jsonrecords?cube=Sales&drilldowns=Region&measures=Quantity&Region=abc",
+        400, "member 'abc' is not a valid int level key"))
     for ((path, wantCode, wantMsg) <- cases) {
       val (code, body) = get(path)
       assert(code == wantCode, s"$path: expected $wantCode, got $code ($body)")
