@@ -81,14 +81,6 @@ object PipelineOps {
       org.apache.spark.sql.graft.CheckpointStats.capEstimate(df.localCheckpoint(eager))
   }
 
-  /** Bench seam: overrides [[Hashing.MaxBucketSize]] for the three
-    * hot-bucket-capped operators (p04/p35/p14) so SkewBench can measure
-    * the uncapped blowup on adversarial fixtures. Read at PLAN time —
-    * set before building the DataFrame. Production callers never touch
-    * it; None = the shipped cap. */
-  @volatile private[graft] var maxBucketSizeOverride: Option[Int] = None
-  private def maxBucket: Int = maxBucketSizeOverride.getOrElse(MaxBucketSize)
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
   private def embs(spark: SparkSession, dir: String): DataFrame =
@@ -733,7 +725,7 @@ object PipelineOps {
     * plan's cost is O(docs × bands + bucket collisions), the only shape that
     * survives a 100 TB corpus. */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsParam(spark, dir, NumHashes, Bands, maxBucket, MinSigMatches, 0.5)
+    minhashPairsParam(spark, dir, NumHashes, Bands, MaxBucketSize, MinSigMatches, 0.5)
 
   /** Parameterized core of p04 over an arbitrary LSH geometry — signature
     * width, band count, hot-bucket cap, signature prefilter bound, and
@@ -872,7 +864,7 @@ object PipelineOps {
       .select(col("doc_id"), col("bb.blk").as("band"), col("bb.bval").as("bkey"))
 
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsParam(spark, dir, SimhashBlocks, SimhashBlockBits, SimhashMaxHamming, maxBucket)
+    simhashPairsParam(spark, dir, SimhashBlocks, SimhashBlockBits, SimhashMaxHamming, MaxBucketSize)
 
   /** Parameterized core of p35 over an arbitrary block geometry. The
     * pigeonhole recall guarantee — hamming ≤ maxHamming forces exact
@@ -2015,6 +2007,9 @@ object PipelineOps {
       .select(col("node"), coalesce(col("v"), col("node")).as("label"))
   }
 
+  /** [[ccWithForest]]'s default driver-tail bound, in int64 edges. */
+  private[graft] val ForestEdgeBound: Long = 1L << 20
+
   /** [[connectedComponents]] plus a SPANNING FOREST of original edges —
     * the connectivity certificate [[graft.streaming.IncrementalCc]] uses
     * to skip re-running connectivity on non-disconnecting deletions.
@@ -2035,23 +2030,15 @@ object PipelineOps {
     * labeler, emitting ORIGINAL edges — so a 100 TB initial build gets
     * full certificate coverage too, where a labels-only fallback would
     * leave every deletion rebuilding until components individually
-    * regrew bounded forests. */
+    * regrew bounded forests.
+    *
+    * Specs pass other bounds: 0 forces the pure Borůvka path, a tiny
+    * bound interleaves the driver tail with the hybrid finish, and
+    * `Long.MaxValue` (the only way to reach the UNBOUNDED collect branch)
+    * pins driver-path semantics on known-small inputs. */
   private[graft] def ccWithForest(
       pairs: DataFrame,
-      forestEdgeBound: Long = -1L): (DataFrame, DataFrame) = {
-    // -1 = resolve the driver-tail bound per call: the default 2^20, or
-    // the -Dgraft.cc.forestEdgeBound override (the test seam that forces
-    // the full maintenance stack over the distributed Borůvka path).
-    // The property is clamped below the plain-collect threshold: an
-    // operator-set bound can widen the driver tail but never disable the
-    // limit(bound+1) gate — the UNBOUNDED collect branch is reachable
-    // only through this private[graft] parameter (specs pass
-    // Long.MaxValue to pin driver-path semantics on known-small inputs).
-    val bound =
-      if (forestEdgeBound >= 0) forestEdgeBound
-      else math.min(
-        sys.props.get("graft.cc.forestEdgeBound").map(_.toLong).getOrElse(1L << 20),
-        (Int.MaxValue - 2).toLong)
+      forestEdgeBound: Long = ForestEdgeBound): (DataFrame, DataFrame) = {
     val Seq(a, b) = pairs.columns.toSeq.map(col)
     val int64Ids =
       pairs.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
@@ -2061,15 +2048,15 @@ object PipelineOps {
     // rows ARE the driver tail's input — no second scan
     val probed: Option[Array[org.apache.spark.sql.Row]] =
       if (!int64Ids) None
-      else if (bound >= Int.MaxValue - 1) // forced-driver test seam: plain collect
+      else if (forestEdgeBound >= Int.MaxValue - 1) // forced-driver test seam: plain collect
         Some(pairs.select(a.cast("long").as("a"), b.cast("long").as("b")).collect())
       else {
         val r = pairs.select(a.cast("long").as("a"), b.cast("long").as("b"))
-          .limit(bound.toInt + 1).collect()
-        if (r.length > bound) None else Some(r)
+          .limit(forestEdgeBound.toInt + 1).collect()
+        if (r.length > forestEdgeBound) None else Some(r)
       }
     if (probed.isEmpty)
-      return distributedForest(pairs, bound)
+      return distributedForest(pairs, forestEdgeBound)
     // walk edges ascending by (min, max): on clique-ish components every
     // (min, x) edge lands first, so the forest comes out STAR-shaped
     // around the component minimum — maximizing leaves, which maximizes
@@ -2132,17 +2119,12 @@ object PipelineOps {
     * the round count runs on data that stopped being distributed work
     * rounds ago. The same small-side cutoff reasoning as
     * [[connectedComponents]]'s driver tail, applied mid-loop. */
-  private[graft] def distributedForest(
-      pairs: DataFrame, hybridBound: Long = -1L): (DataFrame, DataFrame) = {
+  private def distributedForest(
+      pairs: DataFrame, hybridBound: Long): (DataFrame, DataFrame) = {
     val Seq(a, b) = pairs.columns.toSeq.map(col)
     val int64Ids =
       pairs.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
-    val hb =
-      if (hybridBound >= 0) hybridBound
-      else math.min( // same clamp as ccWithForest: prop never unbounds a collect
-        sys.props.get("graft.cc.forestEdgeBound").map(_.toLong).getOrElse(1L << 20),
-        (Int.MaxValue - 2).toLong)
-    val hybrid = int64Ids && hb >= 1 && hb < Int.MaxValue - 1
+    val hybrid = int64Ids && hybridBound >= 1 && hybridBound < Int.MaxValue - 1
     val edges0 = truncateLineage(
       pairs.select(a.as("ea"), b.as("eb")).where(col("ea") =!= col("eb")).distinct(),
       eager = true)
@@ -2173,10 +2155,10 @@ object PipelineOps {
       // to the driver — the full residual row transfer happens only on
       // the one round that actually takes the driver finish, never as
       // per-round overhead on graphs whose residual stays over the bound
-      val probeCap = if (hybrid) hb else 0L
+      val probeCap = if (hybrid) hybridBound else 0L
       val nResid = eP.limit(probeCap.toInt + 1).count()
       if (nResid == 0) done = true
-      else if (hybrid && nResid <= hb) {
+      else if (hybrid && nResid <= hybridBound) {
         // hybrid finish: residual fits the driver bound → one union-find
         // over the contracted rows ends the loop
         val rows = eP.select(col("ea"), col("eb"), col("ca"), col("cb"))
@@ -3199,7 +3181,7 @@ object PipelineOps {
 
   def embDedup(spark: SparkSession, dir: String): DataFrame =
     embDedupParam(spark, dir, DedupBands, dedupBits(embs(spark, dir).count()),
-      maxBucket, EmbDupThreshold)
+      MaxBucketSize, EmbDupThreshold)
 
   /** Parameterized core of p14 over an arbitrary hyperplane-LSH geometry
     * (band count, signature bits per band, hot-bucket cap, cosine

@@ -195,12 +195,11 @@ final class GraftServer(
     * multiprogramming at k keeps per-query latency at its k-way value and
     * queues the excess, so with equal throughput the i-th of N queries
     * finishes at ~(i/N) x makespan instead of ~makespan — p50 halves.
-    * k defaults to half the cores: queries here run ~8 shuffle partitions
+    * k is half the cores (at least 4): queries here run ~8 shuffle partitions
     * (ServerMain), so k = C/2 keeps all cores busy through each job's
     * narrow final stages while adding minimal queueing delay. */
   private val maxConcurrentQueries: Int =
-    sys.env.get("GRAFT_MAX_CONCURRENT_QUERIES").map(_.toInt)
-      .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors() / 2))
+    math.max(4, Runtime.getRuntime.availableProcessors() / 2)
   private val admission = new java.util.concurrent.Semaphore(maxConcurrentQueries, true)
 
   private var server: HttpServer = _

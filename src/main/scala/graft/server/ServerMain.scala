@@ -30,7 +30,8 @@ import graft.sources.FormatResolver
   *                                      cache — the reference's Redis
   *                                      slot); unset → per-instance LRU
   *   GRAFT_SPARK_MASTER                 default local[*]
-  *   GRAFT_SHUFFLE_PARTITIONS           default = executor cores
+  *   GRAFT_SHUFFLE_PARTITIONS           default 8 (unless
+  *                                      spark.sql.shuffle.partitions is set)
   *
   * The reference's TESSERACT_STREAMING_RESPONSE global switch is per-request
   * here (`stream=true`).
@@ -72,13 +73,26 @@ object ServerMain {
     server
   }
 
+  /** `GRAFT_ADDRESS` as (host, port), split on the LAST `:` so an IPv6
+    * host keeps its colons. */
+  private[server] def parseAddress(address: String): (String, Int) = {
+    def bad(why: String) = new IllegalArgumentException(
+      s"GRAFT_ADDRESS must be host:port, got '$address' ($why)")
+    val i = address.lastIndexOf(':')
+    if (i < 0) throw bad("no ':'")
+    val port = address.substring(i + 1).toIntOption
+      .filter(p => p >= 0 && p <= 65535)
+      .getOrElse(throw bad("port is not a number in 0-65535"))
+    (address.substring(0, i), port)
+  }
+
   def main(args: Array[String]): Unit = {
     def required(k: String): String = sys.env.getOrElse(k,
       throw new IllegalArgumentException(s"$k not set"))
 
     val schemaPath = required("GRAFT_SCHEMA_FILEPATH")
     val dataDir    = required("GRAFT_DATA_DIR")
-    val address    = sys.env.getOrElse("GRAFT_ADDRESS", "127.0.0.1:7777")
+    val (host, port) = parseAddress(sys.env.getOrElse("GRAFT_ADDRESS", "127.0.0.1:7777"))
     val master     = sys.env.getOrElse("GRAFT_SPARK_MASTER", "local[*]")
 
     val spark = {
@@ -91,8 +105,7 @@ object ServerMain {
         .config("spark.scheduler.mode", "FAIR")
         // a long-lived server reclaims per-query pinned frames (e.g. the
         // rca a-grain checkpoint) and shuffle metadata on a wall-clock
-        // cadence, not heap pressure — the SCALING.md ops note; same
-        // setting as Bench/LoadBench
+        // cadence, not heap pressure — the SCALING.md ops note
         .config("spark.cleaner.periodicGC.interval", "5min")
       // serving workload = many small concurrent aggregates: Spark's
       // 200-partition default multiplies task-scheduling overhead by the
@@ -119,8 +132,7 @@ object ServerMain {
       geoserviceUrl = sys.env.get("GRAFT_GEOSERVICE_URL"),
       cacheDir = sys.env.get("GRAFT_CACHE_DIR"))
 
-    val Array(host, port) = address.split(":", 2)
-    val bound = server.start(port.toInt, host)
+    val bound = server.start(port, host)
     println(s"graft server listening on $host:$bound (schema: $schemaPath, data: $dataDir)")
     Thread.currentThread.join() // serve until killed
   }

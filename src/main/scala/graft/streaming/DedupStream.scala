@@ -110,8 +110,8 @@ object DedupStream {
     * new edges. Persisting these (plus the retirement keys) via
     * [[StateStore.saveDelta]] makes the per-bump state WRITE O(delta),
     * where re-saving the folded [[PairState]] rewrites the corpus-sized
-    * gram history on every ingest (the write-amplification term the
-    * CdcMarginalProbe decomposition exposed). New pairs are disjoint
+    * gram history on every ingest (the write-amplification term of the
+    * round-13 CDC decomposition). New pairs are disjoint
     * from every retained pair by construction — a retained edge has both
     * endpoints in the valid-old set, a new edge has ≥1 endpoint in the
     * batch, and the batch is anti-joined against valid ids — so the fold

@@ -81,25 +81,16 @@ object IncrementalCc {
 
   private val PairCols = Seq("doc_a", "doc_b", "elabel", "in_forest")
 
-  /** Measurement seam: [[graft.pipeline.CcRefreshDecomp]] installs a
-    * forcing/timing wrapper here to split [[refresh]]'s internal pinned
-    * stages without replicating the production body (the lock-step
-    * discipline TextMarginalDecomp uses, applied via a hook instead of a
-    * copy). Production leaves the identity — stages stay lazily pinned
-    * and materialize under the caller's actions exactly as before. */
-  @volatile private[graft] var stagePin: (String, DataFrame) => DataFrame =
-    (_, df) => df
-  private implicit class StagePinned(private val df: DataFrame) {
-    def spinned(tag: String): DataFrame = stagePin(tag, df.pinned(false))
-    /** [[spinned]] dropping the checkpoint's stashed origin constraints —
+  private implicit class UnconstrainedPin(private val df: DataFrame) {
+    /** `pinned` dropping the checkpoint's stashed origin constraints —
       * the driver-composed path's pin. Its InSet/alias-heavy plans can
       * stash a constraint referencing a non-output attribute, which kills
       * Spark 4's Union constraint rewrite in the consuming maintained-state
       * folds (see [[org.apache.spark.sql.graft.CheckpointStats
       * .dropConstraints]]); constraints are planning-only, so the
       * truncation boundary sheds them. */
-    def spinnedNC(tag: String, eager: Boolean = false): DataFrame = stagePin(tag,
-      org.apache.spark.sql.graft.CheckpointStats.dropConstraints(df.pinned(eager)))
+    def pinnedNC(eager: Boolean = false): DataFrame =
+      org.apache.spark.sql.graft.CheckpointStats.dropConstraints(df.pinned(eager))
   }
 
   /** Bounded-collect gate shared by the driver-composed path's probes:
@@ -130,16 +121,20 @@ object IncrementalCc {
     * delta-sized frames never exist as plans, so there is nothing to
     * broadcast — while every surviving distributed operation is a single
     * InSet-filtered scan. An over-bound delta (or non-int64 ids, or
-    * `spark.conf` `graft.cc.driverRefresh=never` — the test seam) keeps
-    * the distributed body verbatim. */
+    * `driverRefresh = false`) keeps the distributed body verbatim.
+    *
+    * `forestEdgeBound` is every inner CC's driver-tail bound
+    * ([[PipelineOps.ccWithForest]]; 0 forces the distributed Borůvka
+    * forest). Specs vary it and `driverRefresh` to drive each path;
+    * production runs the defaults. */
   def refresh(
       labels: DataFrame,
       labeledPairs: DataFrame,
       retiredIds: DataFrame,
-      newPairs: DataFrame): LabelDelta = {
+      newPairs: DataFrame,
+      forestEdgeBound: Long = PipelineOps.ForestEdgeBound,
+      driverRefresh: Boolean = true): LabelDelta = {
     import org.apache.spark.sql.types.LongType
-    val spark = labels.sparkSession
-    val mode = spark.conf.get("graft.cc.driverRefresh", "auto")
     val longIds =
       Seq("node", "label").forall(c => labels.schema(c).dataType == LongType) &&
       Seq("doc_a", "doc_b", "elabel")
@@ -164,7 +159,7 @@ object IncrementalCc {
     require(!rProbe.contains(null),
       "IncrementalCc state contract violated: NULL doc_id in the retired set")
     val npProbe: Option[Array[(Long, Long)]] =
-      if (mode == "never" || !longIds || rProbe.length > DriverBound) None
+      if (!driverRefresh || !longIds || rProbe.length > DriverBound) None
       else {
         val rows = newPairs.select(col("doc_a"), col("doc_b"))
           .limit(DriverBound + 1).collect()
@@ -176,8 +171,9 @@ object IncrementalCc {
     npProbe match {
       case Some(np) =>
         refreshDriver(labels, labeledPairs,
-          rProbe.map(_.asInstanceOf[Long]).toArray, np)
-      case None => refreshDistributed(labels, labeledPairs, retiredIds, newPairs, rProbe)
+          rProbe.map(_.asInstanceOf[Long]).toArray, np, forestEdgeBound)
+      case None => refreshDistributed(labels, labeledPairs, retiredIds, newPairs, rProbe,
+        forestEdgeBound)
     }
   }
 
@@ -190,7 +186,8 @@ object IncrementalCc {
       labels: DataFrame,
       labeledPairs: DataFrame,
       rVals: Array[Long],
-      np: Array[(Long, Long)]): LabelDelta = {
+      np: Array[(Long, Long)],
+      forestEdgeBound: Long): LabelDelta = {
     val spark = labels.sparkSession
     import spark.implicits._
     val rSet = rVals.toSet
@@ -384,7 +381,7 @@ object IncrementalCc {
         // and each recomputes the labels scan (the overlapped-actions-
         // over-shared-lazy-pins trap measured at 2.5× on the delta
         // probes). One eager job here makes every consumer a cache read.
-        .spinnedNC("member-cls", eager = true)
+        .pinnedNC(eager = true)
     val alRebuild = memberCls.where(col("rb") === 1).select(col("node"), col("label"))
     val mergeMembers = memberCls.where(col("mg") === 1).select(col("node"), col("label"))
 
@@ -399,7 +396,7 @@ object IncrementalCc {
     // rb-labels checkpoints, no rbl/rbForest broadcast builds, and the
     // probe's semi-join materializes the member-cls pin before the
     // commit's parallel writes can race it. An over-bound rebuild (or
-    // graft.cc.forestEdgeBound=0, the distributed-forest seam) keeps the
+    // forestEdgeBound = 0, the distributed-forest path) keeps the
     // round-18 distributed bucket verbatim.
     val (rbLabelsP, rbPairs) =
       if (rebuildCids.isEmpty)
@@ -412,9 +409,7 @@ object IncrementalCc {
           .select(col("doc_a"), col("doc_b"))
         val rebuildNewRows: Array[(Long, Long)] = cEdges.iterator
           .filter(e => rebuildCidSet(e._3)).map(e => (e._1, e._2)).toArray
-        val bound = math.min(
-          sys.props.get("graft.cc.forestEdgeBound").map(_.toLong).getOrElse(1L << 20),
-          (Int.MaxValue - 2).toLong)
+        val bound = math.min(forestEdgeBound, (Int.MaxValue - 2).toLong)
         val oldProbe: Option[Array[org.apache.spark.sql.Row]] =
           if (bound <= 0) None
           else {
@@ -461,9 +456,9 @@ object IncrementalCc {
           case None =>
             val rebuildNew = rebuildNewRows.toSeq.toDF("doc_a", "doc_b")
             val rebuildEdges = rebuildOld.unionByName(rebuildNew).distinct()
-              .spinnedNC("rebuild-edges")
-            val (rbLabels, rbForest) = PipelineOps.ccWithForest(rebuildEdges)
-            val rbl = rbLabels.spinnedNC("rb-labels")
+              .pinnedNC()
+            val (rbLabels, rbForest) = PipelineOps.ccWithForest(rebuildEdges, forestEdgeBound)
+            val rbl = rbLabels.pinnedNC()
             val rbp = rebuildEdges
               .join(rbl.select(col("node").as("doc_a"), col("label").as("elabel")), "doc_a")
               .join(rbForest.select(col("doc_a"), col("doc_b"), lit(true).as("in_forest")),
@@ -516,14 +511,14 @@ object IncrementalCc {
     val labelsIn = rbLabelsP.select(col("node"), col("label"))
       .unionByName(mgLabels)
       .unionByName(mgFreshRows.toDF("node", "label"))
-      .spinnedNC("labels-in")
+      .pinnedNC()
     val pairsIn = rbPairs
       .unionByName(mgNewRows.toSeq.toDF("doc_a", "doc_b", "elabel", "in_forest"))
-      .select(PairCols.map(col): _*).spinnedNC("pairs-in")
+      .select(PairCols.map(col): _*).pinnedNC()
     val labelsOut = rVals.toSeq.toDF("node")
       .unionByName(alRebuild.select("node"))
       .unionByName(mergeMembers.select("node"))
-      .distinct().spinnedNC("labels-out")
+      .distinct().pinnedNC()
     // not pinned: a bare projection of the already-pinned memberCls
     val pairsOut = alRebuild.select("node")
     LabelDelta(labelsOut, labelsIn, pairsIn, pairsOut)
@@ -536,8 +531,9 @@ object IncrementalCc {
       labeledPairs: DataFrame,
       retiredIds: DataFrame,
       newPairs: DataFrame,
-      rProbe: Seq[Any]): LabelDelta = {
-    val r = retiredIds.select(col("doc_id").as("node")).distinct().spinned("retired")
+      rProbe: Seq[Any],
+      forestEdgeBound: Long): LabelDelta = {
+    val r = retiredIds.select(col("doc_id").as("node")).distinct().pinned(false)
     val rA = r.select(col("node").as("doc_a"))
     val rB = r.select(col("node").as("doc_b"))
 
@@ -588,7 +584,7 @@ object IncrementalCc {
         if (rSmall) {
           val touched = labeledPairs
             .where(inR(col("doc_a")) || inR(col("doc_b")) || inR(col("elabel")))
-            .spinned("touched")
+            .pinned(false)
           val f = touched.where(col("in_forest"))
           (f.where(inR(col("doc_a"))).select(col("doc_a").as("node"))
              .unionByName(f.where(inR(col("doc_b"))).select(col("doc_b").as("node")))
@@ -613,7 +609,7 @@ object IncrementalCc {
         }
       }
     val leaves = fdeg.where(col("fd") === 1).select("node")
-    val retiredInGraph = semiR(labels, "node").spinned("retired-in-graph")
+    val retiredInGraph = semiR(labels, "node").pinned(false)
     // unsafe = not a certified leaf (over-degree, no forest coverage),
     // forest-adjacent to another retired node (removing both could
     // orphan the subtree between them), or carried as an EPOCH STAMP on
@@ -651,12 +647,12 @@ object IncrementalCc {
     val cidOf = liveLabels
       .join(broadcast(endNodes), Seq("node"), "right_outer")
       .select(col("node"), coalesce(col("label"), col("node")).as("cid"))
-      .spinned("cid-of")
+      .pinned(false)
     val cEdges = newPairs
       .join(cidOf.select(col("node").as("doc_a"), col("cid").as("ca")), "doc_a")
       .join(cidOf.select(col("node").as("doc_b"), col("cid").as("cb")), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("ca"), col("cb"))
-      .spinned("c-edges")
+      .pinned(false)
     // contracted component per cid (delta-sized CC; self-edges drop out),
     // plus a spanning forest of the contraction so each merge adds
     // exactly the connecting edges to the certificate
@@ -666,7 +662,7 @@ object IncrementalCc {
     val cInter = cEdges.where(col("ca") =!= col("cb"))
       .select(least(col("ca"), col("cb")).as("ca"), greatest(col("ca"), col("cb")).as("cb"))
       .distinct()
-    val (cLabels, cForest) = PipelineOps.ccWithForest(cInter)
+    val (cLabels, cForest) = PipelineOps.ccWithForest(cInter, forestEdgeBound)
     // groupOf: cid -> merged group label (itself when untouched by merges).
     // Seeded with BOTH the new-edge endpoints' cids and every
     // deletion-touched component's label, so a deletion-only component is
@@ -692,7 +688,7 @@ object IncrementalCc {
       .join(cidU.groupBy("glabel").agg(count(lit(1)).as("n"), max(col("u")).as("rb")),
         Seq("glabel"))
       .select(col("cid"), col("glabel"), col("n"), col("rb"))
-      .spinned("cid-full")
+      .pinned(false)
     // rebuild group/cid sets: groups containing an unsafe deletion.
     // relabel set: merge groups of ≥2 cids minus the rebuild groups —
     // their edges are NOT touched, elabels go stale-but-covered (still
@@ -708,7 +704,7 @@ object IncrementalCc {
     val memberCls = labels
       .join(cidFull.select(col("cid").as("label"), col("n"), col("rb")), "label")
       .select(col("node"), col("label"), col("n"), col("rb"))
-      .spinned("member-cls")
+      .pinned(false)
     val alRebuild = memberCls.where(col("rb") === 1).select(col("node"), col("label"))
     val mergeMembers = memberCls.where(col("rb") === 0 && col("n") > 1)
       .select(col("node"), col("label"))
@@ -729,9 +725,9 @@ object IncrementalCc {
         val rebuildNew = cEdges
           .join(rebuildCids.select(col("cid").as("ca")), Seq("ca"), "left_semi")
           .select(col("doc_a"), col("doc_b"))
-        val rebuildEdges = rebuildOld.unionByName(rebuildNew).distinct().spinned("rebuild-edges")
-        val (rbLabels, rbForest) = PipelineOps.ccWithForest(rebuildEdges)
-        val rbl = rbLabels.spinned("rb-labels")
+        val rebuildEdges = rebuildOld.unionByName(rebuildNew).distinct().pinned(false)
+        val (rbLabels, rbForest) = PipelineOps.ccWithForest(rebuildEdges, forestEdgeBound)
+        val rbl = rbLabels.pinned(false)
         val rbp = rebuildEdges
           .join(rbl.select(col("node").as("doc_a"), col("label").as("elabel")), "doc_a")
           .join(rbForest.select(col("doc_a"), col("doc_b"), lit(true).as("in_forest")),
@@ -783,16 +779,16 @@ object IncrementalCc {
 
     val labelsIn = rbLabelsP.select(col("node"), col("label"))
       .unionByName(mgLabels).unionByName(mgFreshLabels)
-      .spinned("labels-in")
+      .pinned(false)
     val pairsIn = rbPairs.unionByName(mgNewPairs)
-      .select(PairCols.map(col): _*).spinned("pairs-in")
+      .select(PairCols.map(col): _*).pinned(false)
     // labelsOut: every retired node's membership row, plus the rebuilt
     // AND merged components' memberships (re-entering via labelsIn);
     // pairsOut: only the REBUILT memberships — merged components keep
     // their edge rows, stale elabels covered by the retained membership
     val labelsOut = r.unionByName(alRebuild.select("node"))
       .unionByName(mergeMembers.select("node"))
-      .distinct().spinned("labels-out")
+      .distinct().pinned(false)
     // not pinned: a bare projection of the already-pinned alRebuild —
     // every consumer re-reads the checkpoint, never the upstream plan
     val pairsOut = alRebuild.select("node")
@@ -805,9 +801,11 @@ object IncrementalCc {
     * label, the spanning forest flagged at ANY scale (driver union-find
     * within the tail bound, [[PipelineOps.distributedForest]] Borůvka
     * above it — certificate coverage is total either way). */
-  def initial(pairs: DataFrame): (DataFrame, DataFrame) = {
+  def initial(
+      pairs: DataFrame,
+      forestEdgeBound: Long = PipelineOps.ForestEdgeBound): (DataFrame, DataFrame) = {
     val p = pairs.select(col("doc_a"), col("doc_b"))
-    val (labels, forest) = PipelineOps.ccWithForest(p)
+    val (labels, forest) = PipelineOps.ccWithForest(p, forestEdgeBound)
     val labeled = p
       .join(labels.select(col("node").as("doc_a"), col("label").as("elabel")), "doc_a")
       .join(forest.select(col("doc_a"), col("doc_b"), lit(true).as("in_forest")),

@@ -33,6 +33,16 @@ class DeploymentSmokeSpec extends AnyFunSuite {
       |  }]
       |}""".stripMargin
 
+  test("GRAFT_ADDRESS parses host:port and names itself when malformed") {
+    assert(ServerMain.parseAddress("127.0.0.1:7777") == ("127.0.0.1", 7777))
+    assert(ServerMain.parseAddress("::1:8080") == ("::1", 8080))
+    for (bad <- Seq("7777", "localhost:http", "localhost:70000")) {
+      val e = intercept[IllegalArgumentException](ServerMain.parseAddress(bad))
+      assert(e.getMessage.contains("GRAFT_ADDRESS") && e.getMessage.contains("host:port"),
+        e.getMessage)
+    }
+  }
+
   test("README walkthrough serves metadata, aggregate, /data and /flush") {
     val dir = Files.createTempDirectory("graft-demo")
     val schemaPath = dir.resolve("schema.json")

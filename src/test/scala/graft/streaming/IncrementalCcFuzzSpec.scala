@@ -69,9 +69,7 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
   }
 
   test("the same chains through the DISTRIBUTED refresh body (driver-composed path forced off)") {
-    spark.conf.set("graft.cc.driverRefresh", "never")
-    try driveChains(Seq(7L, 23L))
-    finally spark.conf.unset("graft.cc.driverRefresh")
+    driveChains(Seq(7L, 23L), driverRefresh = false)
   }
 
   test("driver-composed refresh ≡ distributed refresh: delta parity row-for-row across the chains") {
@@ -81,23 +79,25 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
   test("the same chains over the DISTRIBUTED Borůvka forest path (driver tail forced off)") {
     // every ccWithForest call inside refresh/initial takes the
     // distributed path — the shape a 100 TB initial build runs
-    sys.props("graft.cc.forestEdgeBound") = "0"
-    try driveChains(Seq(7L, 23L))
-    finally sys.props.remove("graft.cc.forestEdgeBound")
+    driveChains(Seq(7L, 23L), forestEdgeBound = 0L)
   }
 
   test("the same chains with a tiny driver bound (4): driver tail, Borůvka, and the HYBRID mid-loop finish all interleave") {
-    sys.props("graft.cc.forestEdgeBound") = "4"
-    try driveChains(Seq(7L))
-    finally sys.props.remove("graft.cc.forestEdgeBound")
+    driveChains(Seq(7L), forestEdgeBound = 4L)
   }
 
   /** With `parity`, every step ALSO computes the distributed body's delta
     * on identical inputs and asserts all four LabelDelta components match
     * the driver-composed ones row-for-row (duplicates included — the state
     * fold is multiset-sensitive). The chain itself advances on the
-    * driver-composed outputs, so the invariants keep gating those. */
-  private def driveChains(seeds: Seq[Long], parity: Boolean = false): Unit = {
+    * driver-composed outputs, so the invariants keep gating those.
+    * `forestEdgeBound` and `driverRefresh` pass through to every
+    * [[IncrementalCc.initial]]/[[IncrementalCc.refresh]] call. */
+  private def driveChains(
+      seeds: Seq[Long],
+      parity: Boolean = false,
+      forestEdgeBound: Long = PipelineOps.ForestEdgeBound,
+      driverRefresh: Boolean = true): Unit = {
     for (seed <- seeds) {
       val rnd = new scala.util.Random(seed)
       var nextId = 1000L
@@ -114,7 +114,7 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
       base += 100
       for (i <- 1 to 6) edges += ((base, base + i)) // star
       val init = edges.result().toDF("doc_a", "doc_b")
-      val (labels0, pairs0) = IncrementalCc.initial(init)
+      val (labels0, pairs0) = IncrementalCc.initial(init, forestEdgeBound)
       var labels = labels0.localCheckpoint(true)
       var pairs = pairs0.localCheckpoint(true)
       assertInvariants(labels, pairs, s"seed $seed init")
@@ -160,11 +160,10 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
         }
         val retired = retiredIds.toDF("doc_id").localCheckpoint(true)
         val np = newEdges.result().distinct.toDF("doc_a", "doc_b").localCheckpoint(true)
-        val d = IncrementalCc.refresh(labels, pairs, retired, np)
+        val d = IncrementalCc.refresh(labels, pairs, retired, np, forestEdgeBound, driverRefresh)
         if (parity) {
-          spark.conf.set("graft.cc.driverRefresh", "never")
-          val d2 = try IncrementalCc.refresh(labels, pairs, retired, np)
-            finally spark.conf.unset("graft.cc.driverRefresh")
+          val d2 = IncrementalCc.refresh(labels, pairs, retired, np, forestEdgeBound,
+            driverRefresh = false)
           val ctx = s"seed $seed step $step (retired ${retiredIds.mkString(",")};" +
             s" new ${newEdges.result().mkString(",")})"
           assert(rowImage(d.labelsOut) == rowImage(d2.labelsOut), s"labelsOut diverged at $ctx")
