@@ -108,9 +108,7 @@ final case class Level(
 final case class TableDef(
     name: String,
     schema: Option[String] = None,
-    primaryKey: Option[String] = None) {
-  def fullName: String = schema.map(s => s"$s.$name").getOrElse(name)
-}
+    primaryKey: Option[String] = None)
 
 /** Literal rows declared in the schema file (reference compiles to
   * `select … union all …`; we build a LocalRelation). */

@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned, segmented persistence for the GROW-IN-PLACE ANN index tree
-  * that [[graft.streaming.IngestBump]] maintains across ingest bumps —
-  * the same commit discipline [[graft.streaming.StateStore]] gives the
-  * dedup state, applied to an LSM/segment layout so appends stay
-  * O(delta):
+  * that [[graft.streaming.IngestBump]] maintains across ingest bumps — an
+  * LSM/segment layout committed through [[ArtifactStore]]'s
+  * versioned-directory protocol (claim, write, publish the `_COMMITTED`
+  * marker, resolve max committed, prune; its doc carries the crash and
+  * object-store contract), so appends stay O(delta):
   *
   *   - `ivf_cents.parquet` / `pq_cents.parquet` at the root: the FROZEN
   *     quantizer, written once at the first build and never touched (how
@@ -20,75 +21,43 @@ import org.apache.spark.sql.functions._
   *     on file contents and no eager checkpoint is needed anywhere.
   *   - `v{N}/`: a version = `_MANIFEST` (the segment list, in commit
   *     order) + `tombstones.parquet` (the departed-id mask, possibly
-  *     empty) + the `_ALLOC` claim marker + the `_COMMITTED` marker.
-  *     Readers resolve the current version as MAX committed
-  *     ([[graft.streaming.StateStore]]'s protocol — and its caveat:
-  *     CREATE-EXCLUSIVE beats rename everywhere, but on S3 it is only
-  *     atomic under Hadoop 3.4.1+/HADOOP-19256 conditional create;
-  *     [[commit]] runs the same capability probe and degraded-mode
-  *     warning StateStore does).
+  *     empty) + the protocol's claim and commit markers.
   *
-  * Why a version is ATOMIC here where the previous flat layout was not:
-  * the old tree appended arrivals into a shared `ivf_assign.parquet` and
-  * then overwrote `tombstones.parquet` in place, so a crash between the
-  * two exposed a mixed index (new arrivals live while departures were
-  * still un-tombstoned and a restored vector stayed masked), a concurrent
-  * reader could catch the tombstone overwrite half-done, and two racing
-  * bumpers could both read the physical set before either appended and
-  * double-append the same arrivals. Under this store every one of those
-  * interleavings resolves to a complete committed version: a crashed bump
-  * leaves an orphaned (invisible) version + segment that a later prune
-  * removes, racing bumpers claim DISTINCT versions whose manifests each
-  * reference their own arrival segment (max committed wins, the loser's
-  * segment prunes as unreferenced), and a replayed bump sees its arrivals
-  * already in the current manifest's physical set and appends nothing.
+  * Segment + tombstones + manifest become visible in ONE marker create,
+  * so every interleaving resolves to a complete committed version: a
+  * crashed bump leaves an orphaned (invisible) version + segment that a
+  * later prune removes, a concurrent reader never sees a mixed index,
+  * racing bumpers claim DISTINCT versions whose manifests each reference
+  * their own arrival segment (max committed wins, the loser's segment
+  * prunes as unreferenced), and a replayed bump sees its arrivals already
+  * in the current manifest's physical set and appends nothing.
   *
   * Compaction rewrites the live rows as ONE merged segment referenced by
   * a fresh version (tombstones empty) — the dead-row reclaim is a new
   * segment plus a manifest swap, never an in-place overwrite.
   *
-  * The flat single-directory layout is still what the build-once
-  * lifecycles (p49/p58/p63) write INSIDE their per-invocation exclusive
-  * version directories — those are single-writer by construction and
-  * never grown after publication, so they don't need per-bump commits. */
+  * The flat single-directory layout is what the build-once lifecycles
+  * (p49/p58/p63) write INSIDE their per-invocation scratch versions
+  * ([[ArtifactStore.withScratchVersion]]) — those are single-writer by
+  * construction and never grown after publication, so they don't need
+  * per-bump commits. */
 object AnnIndexStore {
 
   private def segName(v: Long) = s"seg-$v"
 
   /** Max committed version and its manifest (segment names in commit
     * order); None before the first committed build. */
-  def current(spark: SparkSession, idx: String): Option[(Long, Seq[String])] = {
-    val committed = ArtifactStore.versions(spark, idx)
-      .filter(v => ArtifactStore.exists(spark, s"$idx/v$v/_COMMITTED"))
-    if (committed.isEmpty) None
-    else {
-      val v = committed.max
-      Some((v, readManifest(spark, s"$idx/v$v/_MANIFEST")))
-    }
-  }
+  def current(spark: SparkSession, idx: String): Option[(Long, Seq[String])] =
+    ArtifactStore.currentVersion(spark, idx).map(v => (v, manifest(spark, idx, v)))
 
   /** True once any version committed — the "does the bump tree exist"
     * probe. */
   def exists(spark: SparkSession, idx: String): Boolean =
     current(spark, idx).isDefined
 
-  private def readManifest(spark: SparkSession, path: String): Seq[String] = {
-    val fs = ArtifactStore.fsOf(spark, path)
-    val in = fs.open(new HPath(path))
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8").split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    } finally in.close()
-  }
-
-  private def writeManifest(spark: SparkSession, path: String, segs: Seq[String]): Unit = {
-    val fs = ArtifactStore.fsOf(spark, path)
-    val out = fs.create(new HPath(path), true)
-    try out.write(segs.mkString("\n").getBytes("UTF-8")) finally out.close()
-  }
+  private def manifest(spark: SparkSession, idx: String, v: Long): Seq[String] =
+    ArtifactStore.readText(spark, s"$idx/v$v/_MANIFEST").get
+      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** The physical assignment relation of a manifest: every row of every
     * segment, tombstoned or not — what arrival/departure reconciliation
@@ -112,7 +81,7 @@ object AnnIndexStore {
       .getOrElse(0L)
 
   /** Commit a new version: claim `v{N}` exclusively, write its tombstone
-    * mask and manifest, then CREATE-EXCLUSIVE the `_COMMITTED` marker.
+    * mask and manifest, then publish it.
     * `writeSeg` (if any) encodes this bump's arrival segment as
     * `seg-{N}` BEFORE the version becomes visible; `segs` is the
     * manifest to publish, already including `seg-{N}` when a segment is
@@ -123,12 +92,11 @@ object AnnIndexStore {
       tomb: DataFrame,
       segsOf: Long => Seq[String],
       writeSeg: Option[(Long, String)  => Unit] = None): Long = {
-    graft.streaming.StateStore.probeAtomicCreate(ArtifactStore.fsOf(spark, idx), idx)
     val (n, vdir) = ArtifactStore.claimVersion(spark, idx)
     writeSeg.foreach(w => w(n, s"$idx/${segName(n)}"))
     tomb.write.mode("overwrite").parquet(s"$vdir/tombstones.parquet")
-    writeManifest(spark, s"$vdir/_MANIFEST", segsOf(n))
-    ArtifactStore.createMarker(spark, s"$vdir/_COMMITTED")
+    ArtifactStore.writeText(spark, s"$vdir/_MANIFEST", segsOf(n).mkString("\n"))
+    ArtifactStore.publish(spark, idx, vdir)
     prune(spark, idx, n)
     n
   }
@@ -142,16 +110,11 @@ object AnnIndexStore {
     * numbered above the previous committed version (they may belong to a
     * concurrent claimant that has not committed yet). */
   private def prune(spark: SparkSession, idx: String, cur: Long): Unit = {
-    val committed = ArtifactStore.versions(spark, idx)
-      .filter(v => ArtifactStore.exists(spark, s"$idx/v$v/_COMMITTED"))
-    val keepFrom = committed.filter(_ < cur) match {
-      case Seq() => cur
-      case older => older.max
-    }
-    ArtifactStore.versions(spark, idx).filter(_ < keepFrom)
-      .foreach(v => ArtifactStore.delete(spark, s"$idx/v$v"))
-    val referenced = committed.filter(_ >= keepFrom)
-      .flatMap(v => readManifest(spark, s"$idx/v$v/_MANIFEST")).toSet
+    val keepFrom = ArtifactStore.currentVersion(spark, idx, below = cur).getOrElse(cur)
+    ArtifactStore.pruneBelow(spark, idx, keepFrom)
+    val referenced = ArtifactStore.versions(spark, idx)
+      .filter(v => ArtifactStore.isCommitted(spark, idx, v))
+      .flatMap(manifest(spark, idx, _)).toSet
     val fs = ArtifactStore.fsOf(spark, idx)
     fs.listStatus(new HPath(idx)).foreach { st =>
       val n = st.getPath.getName

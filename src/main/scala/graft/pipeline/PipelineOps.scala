@@ -707,16 +707,6 @@ object PipelineOps {
         concat_ws("_", (0 until rowsPerBand).map(r => col("sig")(b * rowsPerBand + r)): _*).as("bkey"))
     }
 
-  /** p04's 16 per-band bucket keys over a `sig` column. */
-  private def minhashBandCols: Seq[Column] = bandCols(Bands, RowsPerBand)
-
-  /** Standalone p04 banding pass (doc_id, band, bkey) — skew-bench probe. */
-  private[graft] def minhashBuckets(spark: SparkSession, dir: String): DataFrame =
-    shingled(spark, dir)
-      .withColumn("sig", graft.functions.MinHashSig(col("hashes"), minhashA, minhashB, P))
-      .select(col("doc_id"), explode(array(minhashBandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bkey"))
-
   /** p04: near-dup pairs via minhash + banded LSH, verified with exact
     * shingle Jaccard ≥ 0.5.
     *
@@ -851,18 +841,6 @@ object PipelineOps {
           .bitwiseAND(lit((1L << blockBits) - 1))).as("bval"))
     }
 
-  /** p35's 4 disjoint 12-bit block keys over an `fp` column. */
-  private def simhashBlockCols: Seq[Column] = blockColsFor(SimhashBlocks, SimhashBlockBits)
-
-  /** Standalone p35 banding pass (doc_id, band, bkey) — skew-bench probe. */
-  private[graft] def simhashBuckets(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("hashes", StringHashes(col("toks"), 0L))
-      .withColumn("fp", graft.functions.SimHash48(col("hashes")))
-      .select(col("doc_id"), explode(array(simhashBlockCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.blk").as("band"), col("bb.bval").as("bkey"))
-
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     simhashPairsParam(spark, dir, SimhashBlocks, SimhashBlockBits, SimhashMaxHamming, MaxBucketSize)
 
@@ -934,7 +912,7 @@ object PipelineOps {
     * narrow enough that per-version partition directories stay coarse. */
   private[graft] val GramStateBuckets = 64
 
-  private[graft] def gramBucketCol: org.apache.spark.sql.Column =
+  private def gramBucketCol: org.apache.spark.sql.Column =
     pmod(hash(gramBlockCols.map(col): _*), lit(GramStateBuckets))
 
   /** Restrict the gram HISTORY to the buckets `batch` can collide with.
@@ -1467,9 +1445,9 @@ object PipelineOps {
     // tear the served table or leave a ready-marker pointing at a
     // half-overwritten file, and readers of the previous version
     // survive one publish cycle (the ArtifactStore.commitTable prune)
-    if (ArtifactStore.committedVersion(spark, root).isEmpty)
+    if (ArtifactStore.currentVersion(spark, root).isEmpty)
       verdictBuildLock.synchronized {
-        if (ArtifactStore.committedVersion(spark, root).isEmpty)
+        if (ArtifactStore.currentVersion(spark, root).isEmpty)
           ArtifactStore.commitTable(spark, root, "verdict",
             dedupVerdictOf(docs(spark, dir)))
       }
@@ -1943,26 +1921,12 @@ object PipelineOps {
         if (r.length > localEdgeThreshold) None else Some(r)
       }
     if (tailRows.isDefined) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      tailRows.get.foreach { row =>
-        val (x, y) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(x, x); parent.getOrElseUpdate(y, y)
-        val (rx, ry) = (find(x), find(y))
-        if (rx != ry) { if (rx < ry) parent(ry) = rx else parent(rx) = ry }
-      }
+      val uf = new MinUnionFind
+      tailRows.get.foreach(row => uf.union(row.getLong(0), row.getLong(1)))
       // label every input node (self-loop-only nodes label themselves,
       // exactly as the distributed path's left join does)
-      val labels = nodes.select(col("node").cast("long")).collect().map { row =>
-        val n = row.getLong(0)
-        (n, if (parent.contains(n)) find(n) else n)
-      }.toSeq
+      val labels = nodes.select(col("node").cast("long")).collect()
+        .map(row => (row.getLong(0), uf.labelOf(row.getLong(0)))).toSeq
       val sess = pairs.sparkSession
       import sess.implicits._
       return labels.toDF("node", "label")
@@ -2057,14 +2021,19 @@ object PipelineOps {
       }
     if (probed.isEmpty)
       return distributedForest(pairs, forestEdgeBound)
-    // walk edges ascending by (min, max): on clique-ish components every
-    // (min, x) edge lands first, so the forest comes out STAR-shaped
-    // around the component minimum — maximizing leaves, which maximizes
-    // the deletions the certificate can declare safe
-    val rows = probed.get
-      .sortBy(r => (math.min(r.getLong(0), r.getLong(1)),
-        math.max(r.getLong(0), r.getLong(1))))
-    val parent = scala.collection.mutable.LongMap.empty[Long]
+    val (uf, forestRows) = driverForest(probed.get.map(r => (r.getLong(0), r.getLong(1))))
+    val sess = pairs.sparkSession
+    import sess.implicits._
+    (uf.labels.toDF("node", "label"),
+      forestRows.toDF(pairs.columns.head, pairs.columns(1)))
+  }
+
+  /** Min-hooked, path-compressing union-find over int64 ids: [[union]]
+    * hooks the larger root under the smaller, so every root is its
+    * component's MINIMUM id — the label every CC path emits. */
+  private[graft] final class MinUnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -2072,23 +2041,36 @@ object PipelineOps {
       while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
       r
     }
-    val forestRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    rows.foreach { row =>
-      val (x, y) = (row.getLong(0), row.getLong(1))
+
+    /** Register both ids; true iff they were in different components. */
+    def union(x: Long, y: Long): Boolean = {
       parent.getOrElseUpdate(x, x); parent.getOrElseUpdate(y, y)
-      if (x != y) {
-        val (rx, ry) = (find(x), find(y))
-        if (rx != ry) {
-          if (rx < ry) parent(ry) = rx else parent(rx) = ry
-          forestRows += ((x, y))
-        }
-      }
+      val (rx, ry) = (find(x), find(y))
+      if (rx == ry) false
+      else { if (rx < ry) parent(ry) = rx else parent(rx) = ry; true }
     }
-    val labels = parent.keys.toSeq.sorted.map(n => (n, find(n)))
-    val sess = pairs.sparkSession
-    import sess.implicits._
-    (labels.toDF("node", "label"),
-      forestRows.toSeq.toDF(pairs.columns.head, pairs.columns(1)))
+
+    def contains(x: Long): Boolean = parent.contains(x)
+
+    /** The component minimum of `x`; an unregistered id labels itself. */
+    def labelOf(x: Long): Long = if (contains(x)) find(x) else x
+
+    /** (node, label) for every registered id, ascending by node. */
+    def labels: Seq[(Long, Long)] = parent.keys.toSeq.sorted.map(n => (n, find(n)))
+  }
+
+  /** [[ccWithForest]]'s driver tail: walk `edges` ascending by (min, max)
+    * through a [[MinUnionFind]], keeping each edge that merges two
+    * components (in walk order). On clique-ish components every (min, x)
+    * edge lands first, so the forest comes out STAR-shaped around the
+    * component minimum — maximizing leaves, which maximizes the
+    * deletions the certificate can declare safe. */
+  private[graft] def driverForest(
+      edges: Array[(Long, Long)]): (MinUnionFind, Seq[(Long, Long)]) = {
+    val uf = new MinUnionFind
+    val forest = edges.sortBy(e => (math.min(e._1, e._2), math.max(e._1, e._2)))
+      .filter { case (x, y) => uf.union(x, y) }
+    (uf, forest.toSeq)
   }
 
   /** Distributed labels + spanning forest: Borůvka min-hooking. Each
@@ -2165,23 +2147,9 @@ object PipelineOps {
           .collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
           .sortBy(t => (math.min(t._3, t._4), math.max(t._3, t._4), t._1, t._2))
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        rows.foreach { case (ea, eb, ca, cb) =>
-          parent.getOrElseUpdate(ca, ca); parent.getOrElseUpdate(cb, cb)
-          val (ra, rb) = (find(ca), find(cb))
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            picks += ((ea, eb))
-          }
-        }
+        val uf = new MinUnionFind
+        val picks = rows.filter { case (_, _, ca, cb) => uf.union(ca, cb) }
+          .map { case (ea, eb, _, _) => (ea, eb) }
         val sess = pairs.sparkSession
         import sess.implicits._
         if (picks.nonEmpty)
@@ -2189,7 +2157,7 @@ object PipelineOps {
             forest.unionByName(picks.toSeq.toDF("ea", "eb")), eager = true)
         // comps outside the residual are already final and map to
         // themselves through the left join's coalesce
-        val rootOf = parent.keys.toSeq.map(c => (c, find(c))).toDF("comp", "fr")
+        val rootOf = uf.labels.toDF("comp", "fr")
         comp = truncateLineage(
           comp.join(broadcast(rootOf), Seq("comp"), "left")
             .select(col("node"), coalesce(col("fr"), col("comp")).as("comp")),
@@ -2801,23 +2769,17 @@ object PipelineOps {
     * directory and read exactly the version they built — no
     * overwrite-vs-append-vs-read interleaving on shared parquet files.
     * The previous version survives one extra cycle for in-flight readers
-    * (the StateStore prune contract); a reader holding a plan across two
-    * newer builds is out of the supported window. */
+    * ([[ArtifactStore.withScratchVersion]]); a reader holding a plan
+    * across two newer builds is out of the supported window. */
   private def withFreshIndexVersion(tag: String, spark: SparkSession, dir: String)(
       build: String => Unit): String = annBuildLock.synchronized {
     // FS-routed ([[ArtifactStore]]): the index tree lives under the
-    // configurable GRAFT_INDEX_DIR root, version allocation is
-    // CREATE-EXCLUSIVE on v{N}/_ALLOC (crash leftovers and concurrent
-    // claimants advance past each other), and the prune acts on the
-    // SAME filesystem the parquet writers target — keyed additionally
-    // by the embeddings fingerprint so a rewritten corpus rebuilds
-    // instead of serving a stale index.
+    // configurable GRAFT_INDEX_DIR root, version claims and the prune
+    // act on the SAME filesystem the parquet writers target — keyed
+    // additionally by the embeddings fingerprint so a rewritten corpus
+    // rebuilds instead of serving a stale index.
     val root = ArtifactStore.artifactPath(spark, tag, dir, "embeddings.parquet")
-    val (n, vdir) = ArtifactStore.claimVersion(spark, root)
-    build(vdir)
-    ArtifactStore.versions(spark, root).filter(_ < n - 1)
-      .foreach(old => ArtifactStore.delete(spark, s"$root/v$old"))
-    vdir
+    ArtifactStore.withScratchVersion(spark, root) { vdir => build(vdir); vdir }
   }
 
   def annIndexed(spark: SparkSession, dir: String): DataFrame = {
@@ -4094,13 +4056,11 @@ object PipelineOps {
     val s1 = snap(rev(d.where(col("doc_id") % 10 =!= 0), 7, 3, " rev2"))
     val s2 = snap(rev(rev(d.where(col("doc_id") % 10 =!= 1), 7, 3, " rev2"), 13, 4, " rev3"))
     val root = ArtifactStore.artifactPath(spark, "ingest-bump", dir, "documents.parquet")
-    val (n, vroot) = ArtifactStore.claimVersion(spark, root)
-    IngestBump.bump(spark, vroot, s0)
-    IngestBump.bump(spark, vroot, s1)
-    val out = IngestBump.bump(spark, vroot, s2).verdict.orderBy("doc_id")
-    ArtifactStore.versions(spark, root).filter(_ < n - 1)
-      .foreach(old => ArtifactStore.delete(spark, s"$root/v$old"))
-    out
+    ArtifactStore.withScratchVersion(spark, root) { vroot =>
+      IngestBump.bump(spark, vroot, s0)
+      IngestBump.bump(spark, vroot, s1)
+      IngestBump.bump(spark, vroot, s2).verdict.orderBy("doc_id")
+    }
   }
 
   /** p72: the CDC-FED ingest chain — [[ingestBumpChain]]'s snapshots
@@ -4140,13 +4100,11 @@ object PipelineOps {
         added = next.join(pk, Seq("doc_id"), "left_anti"))
     }
     val root = ArtifactStore.artifactPath(spark, "ingest-cdc", dir, "documents.parquet")
-    val (n, vroot) = ArtifactStore.claimVersion(spark, root)
-    IngestBump.bump(spark, vroot, s0)
-    IngestBump.bumpTextCdc(spark, vroot, feed(s0, s1), s1)
-    val out = IngestBump.bumpTextCdc(spark, vroot, feed(s1, s2), s2).orderBy("doc_id")
-    ArtifactStore.versions(spark, root).filter(_ < n - 1)
-      .foreach(old => ArtifactStore.delete(spark, s"$root/v$old"))
-    out
+    ArtifactStore.withScratchVersion(spark, root) { vroot =>
+      IngestBump.bump(spark, vroot, s0)
+      IngestBump.bumpTextCdc(spark, vroot, feed(s0, s1), s1)
+      IngestBump.bumpTextCdc(spark, vroot, feed(s1, s2), s2).orderBy("doc_id")
+    }
   }
 
   /** p73: the trained-quantizer CDC chain — the p52/p55 lifecycle under
@@ -4169,14 +4127,12 @@ object PipelineOps {
       .localCheckpoint(false)
     val trained = trainCentroids(q, semCells(e.count()))
     val root = ArtifactStore.artifactPath(spark, "trained-cdc", dir, "embeddings.parquet")
-    val (n, vroot) = ArtifactStore.claimVersion(spark, root)
-    IngestBump.bumpTrained(spark, vroot,
-      IngestBump.TrainedSnapshot(q.where(col("vec_id") % 10 =!= 9), trained))
-    val out = IngestBump.bumpTrained(spark, vroot,
-      IngestBump.TrainedSnapshot(q.where(col("vec_id") % 10 =!= 7), trained))
-    ArtifactStore.versions(spark, root).filter(_ < n - 1)
-      .foreach(old => ArtifactStore.delete(spark, s"$root/v$old"))
-    out
+    ArtifactStore.withScratchVersion(spark, root) { vroot =>
+      IngestBump.bumpTrained(spark, vroot,
+        IngestBump.TrainedSnapshot(q.where(col("vec_id") % 10 =!= 9), trained))
+      IngestBump.bumpTrained(spark, vroot,
+        IngestBump.TrainedSnapshot(q.where(col("vec_id") % 10 =!= 7), trained))
+    }
   }
 
   /** p69: ANN recall report — the index-quality gate a production pipeline

@@ -146,9 +146,8 @@ object DedupStream {
     * certificate), drops the `labelsOut` nodes from the labels table and
     * the `pairsOut` epochs from the edge set (two DIFFERENT keys: a
     * merge relabels memberships without rewriting edges, so its members
-    * are in labelsOut but not pairsOut; pre-round-15 deltas carry no
-    * pairsOut table and fall back to labelsOut — their exact original
-    * semantics), drops its `departed` corpus ids from the live arrival
+    * are in labelsOut but not pairsOut), drops its `departed` corpus ids
+    * from the live arrival
     * log, then unions its new rows. Lazy — the fold is parquet scans +
     * broadcast anti-joins under the consuming query's plan, cost
     * O(state projections), no rewrite. Chain tables: snapshot (grams,
@@ -168,7 +167,7 @@ object DedupStream {
     deltas.foreach { d =>
       val r = d("retired").select(col("doc_id"))
       val out = d("labelsOut").select(col("node"))
-      val pOut = d.getOrElse("pairsOut", d("labelsOut")).select(col("node"))
+      val pOut = d("pairsOut").select(col("node"))
       grams = grams.join(r, Seq("doc_id"), "left_anti").unionByName(d("grams"))
       pairs = pairs
         .join(r.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")

@@ -291,28 +291,12 @@ object IncrementalCc {
       .filter(e => e._3 != e._4)
       .map(e => (math.min(e._3, e._4), math.max(e._3, e._4)))
       .toArray.distinct.sorted
-    // min-hooked union-find over ascending canonical edges — the exact
-    // ccWithForest driver-tail shape (star forests around minima), so the
-    // contracted labels/forest match what the distributed body's
+    // ccWithForest's driver tail over the canonical contracted edges, so
+    // the contracted labels/forest match what the distributed body's
     // ccWithForest(cInter) would produce
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    val cForest = scala.collection.mutable.Set.empty[(Long, Long)]
-    cInter.foreach { case (x, y) =>
-      parent.getOrElseUpdate(x, x); parent.getOrElseUpdate(y, y)
-      val (rx, ry) = (find(x), find(y))
-      if (rx != ry) {
-        if (rx < ry) parent(ry) = rx else parent(rx) = ry
-        cForest += ((x, y))
-      }
-    }
-    def glabelOf(c: Long): Long = if (parent.contains(c)) find(c) else c
+    val (cUf, cForestSeq) = PipelineOps.driverForest(cInter)
+    val cForest: Set[(Long, Long)] = cForestSeq.toSet
+    def glabelOf(c: Long): Long = cUf.labelOf(c)
 
     // ---- seed classification (groupOf/cidU/cidFull as driver maps) ---
     val seeds: Array[Long] = (endNodes.map(cidOf) ++ retLabel.values).distinct
@@ -421,37 +405,15 @@ object IncrementalCc {
             val allEdges: Array[(Long, Long)] =
               (oldRows.iterator.map(r => (r.getLong(0), r.getLong(1))) ++
                 rebuildNewRows.iterator).toArray.distinct
-            // ccWithForest's driver tail verbatim: walk edges ascending by
-            // (min, max) — clique-ish components come out STAR-shaped
-            // around their minimum — through a min-hooked union-find
-            val sorted = allEdges.sortBy(e =>
-              (math.min(e._1, e._2), math.max(e._1, e._2)))
-            val rparent = scala.collection.mutable.LongMap.empty[Long]
-            def rfind(x: Long): Long = {
-              var r = x
-              while (rparent(r) != r) r = rparent(r)
-              var c = x
-              while (rparent(c) != c) { val nx = rparent(c); rparent(c) = r; c = nx }
-              r
-            }
-            val forest = scala.collection.mutable.Set.empty[(Long, Long)]
-            sorted.foreach { case (x, y) =>
-              rparent.getOrElseUpdate(x, x); rparent.getOrElseUpdate(y, y)
-              if (x != y) {
-                val (rx, ry) = (rfind(x), rfind(y))
-                if (rx != ry) {
-                  if (rx < ry) rparent(ry) = rx else rparent(rx) = ry
-                  forest += ((x, y))
-                }
-              }
-            }
+            // ccWithForest's driver tail itself
+            val (uf, forestSeq) = PipelineOps.driverForest(allEdges)
+            val forest = forestSeq.toSet
             // rbp ≡ rebuildEdges ⋈ labels-on-doc_a ⋈ forest-membership:
             // every node is labeled, so the inner join keeps every edge
-            val rblRows = rparent.keys.toArray.sorted.map(n => (n, rfind(n))).toSeq
             val rbpRows = allEdges.toSeq.map { case (a, b) =>
-              (a, b, rfind(a), forest((a, b)))
+              (a, b, uf.find(a), forest((a, b)))
             }
-            (rblRows.toDF("node", "label"),
+            (uf.labels.toDF("node", "label"),
               rbpRows.toDF("doc_a", "doc_b", "elabel", "in_forest"))
           case None =>
             val rebuildNew = rebuildNewRows.toSeq.toDF("doc_a", "doc_b")
@@ -483,7 +445,7 @@ object IncrementalCc {
     // witnessed as a label AND absent from the presence scan) + appears
     // in the contraction's labeling
     val mgFreshRows: Seq[(Long, Long)] = mergeSeeds.iterator
-      .filter(c => !witnessed(c) && ntot.getOrElse(c, 0L) == 0L && parent.contains(c))
+      .filter(c => !witnessed(c) && ntot.getOrElse(c, 0L) == 0L && cUf.contains(c))
       .map(c => (c, glabelOfSeed(c))).toSeq
     // forest-edge pick per contracted pair: the lexicographically first
     // (doc_a, doc_b) — the rk=1 row of the distributed window — flagged

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.pipeline.PipelineOps
+import graft.pipeline.{ArtifactStore, PipelineOps}
 import graft.pipeline.PipelineOps.PinnedFrame
 
 /** The ingest-version-bump driver: ONE orchestrated pass that takes the
@@ -41,10 +41,10 @@ import graft.pipeline.PipelineOps.PinnedFrame
   * three-snapshot chain against from-scratch oracles, through a
   * state-on-disk restart.
   *
-  * Crash contract: each family's state commits via StateStore's
-  * per-version CREATE-EXCLUSIVE `_COMMITTED` marker (object-store-safe
-  * under a conditional-create-capable connector; see [[StateStore]]'s
-  * capability probe), so a crash mid-bump leaves every
+  * Crash contract: each family's state commits through
+  * [[graft.pipeline.ArtifactStore]]'s versioned-directory protocol (one
+  * marker create publishes a version; its doc carries the object-store
+  * caveat), so a crash mid-bump leaves every
   * family at EITHER snapshot N or N+1, and re-running the bump converges:
   * the text/sem refreshes are idempotent (valid-id retirement and
   * membership anti-joins make a replayed delta a no-op), the index
@@ -55,6 +55,12 @@ import graft.pipeline.PipelineOps.PinnedFrame
   * natural shape); two racing bumpers degrade to
   * highest-committed-version-wins between internally-consistent versions,
   * never a torn state.
+  *
+  * On-disk format: a root is stamped with [[FormatVersion]] (the
+  * `_FORMAT` file at the root) when its first family state is founded,
+  * and every public entry refuses a root that holds family state under
+  * another stamp, or under none, with a [[StateFormatException]] — such
+  * a root is founded again from a snapshot with [[bump]].
   *
   * Reference: the reference engine has no ingest maintenance at all (a
   * schema reload is a full flush, tesseract-server `handlers/flush.rs`);
@@ -102,6 +108,34 @@ object IngestBump {
     * p49 query half). */
   def indexDir(root: String): String = s"$root/ann"
 
+  /** The on-disk format every state family under a root is written in;
+    * bump it with any change a reader of older state cannot fold. */
+  val FormatVersion = 1
+
+  /** A root whose family state was written in another (or no stamped)
+    * format — refused rather than misread. */
+  final class StateFormatException(val root: String, val found: Option[String])
+      extends IllegalStateException(
+        s"ingest state root $root has format ${found.fold("(no _FORMAT stamp)")(f => s"'$f'")}, " +
+        s"this build reads format $FormatVersion only — found the root again from a " +
+        "snapshot with IngestBump.bump on an empty root")
+
+  private def stampPath(root: String) = s"$root/_FORMAT"
+  private val FamilyDirs = Seq("text", "sem", "trained", "ann", "summary")
+
+  /** Require `root`'s format stamp to be [[FormatVersion]]; a root with
+    * no family state yet is founded (stamped) when `found`, else left
+    * alone. Hadoop-FS metadata reads only — no Spark job. */
+  private def requireFormat(spark: SparkSession, root: String, found: Boolean): Unit =
+    ArtifactStore.readText(spark, stampPath(root)).map(_.trim) match {
+      case Some(f) if f == FormatVersion.toString => ()
+      case Some(f) => throw new StateFormatException(root, Some(f))
+      case None =>
+        if (FamilyDirs.exists(d => ArtifactStore.exists(spark, s"$root/$d")))
+          throw new StateFormatException(root, None)
+        if (found) ArtifactStore.writeText(spark, stampPath(root), FormatVersion.toString)
+    }
+
   /** A registered OLAP summary riding the bump: the Preagg store of one
     * grain, maintained per fact delta through the same StateStore commit
     * protocol the dedup families use. `partialsOf` computes a fact
@@ -133,17 +167,9 @@ object IngestBump {
     s"${r.get(0)}_${r.getLong(1)}"
   }
 
-  /** The replay stamp of `dir`'s committed store — the bump identity its
-    * summary last folded. None for a store predating the stamp (treated
-    * as unknown: the fold applies, matching the pre-stamp behavior). */
-  private def lastApplied(spark: SparkSession, dir: String): Option[String] =
-    StateStore.currentTablePath(spark, dir, "applied").flatMap { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp)) None
-      else spark.read.parquet(p).select("bump_id").collect()
-        .headOption.map(_.getString(0))
-    }
+  /** The bump identity a summary store's `applied` stamp table holds. */
+  private def appliedId(applied: DataFrame): Option[String] =
+    applied.select("bump_id").collect().headOption.map(_.getString(0))
 
   /** Fold one fact delta into every registered summary store under
     * `root` — the OLAP half of an ingest bump. Each store commits as its
@@ -178,6 +204,16 @@ object IngestBump {
       factDelta: DataFrame,
       specs: Seq[SummarySpec],
       bumpId: Option[String] = None): Unit = {
+    requireFormat(spark, root, found = true)
+    foldSummaries(spark, root, factDelta, specs, bumpId)
+  }
+
+  private def foldSummaries(
+      spark: SparkSession,
+      root: String,
+      factDelta: DataFrame,
+      specs: Seq[SummarySpec],
+      bumpId: Option[String]): Unit = {
     if (specs.isEmpty) return
     lazy val id = bumpId.getOrElse(contentId(factDelta))
     specs.foreach { s =>
@@ -187,8 +223,8 @@ object IngestBump {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("bump_id",
             org.apache.spark.sql.types.StringType, nullable = false))))
-      StateStore.load(spark, dir, Seq("summary")) match {
-        case Some(_) if lastApplied(spark, dir).contains(id) => () // replay: no-op
+      StateStore.load(spark, dir, Seq("summary", "applied")) match {
+        case Some(m) if appliedId(m("applied")).contains(id) => () // replay: no-op
         case Some(m) =>
           val merged = s.combine(m("summary"), s.partialsOf(factDelta))
           StateStore.save(dir, Map("summary" -> merged, "applied" -> stamp))
@@ -224,6 +260,7 @@ object IngestBump {
       factDelta: Option[DataFrame] = None,
       summaries: Seq[SummarySpec] = Nil,
       bumpId: Option[String] = None): Artifacts = {
+    requireFormat(spark, root, found = true)
     val verdict = bumpText(spark, textDir(root), newDocs)
     publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
     val sem = vectors.map { vs =>
@@ -231,8 +268,8 @@ object IngestBump {
       bumpIndex(spark, indexDir(root), vs.vecs)
       sv
     }
-    val tv = trainedVectors.map(ts => bumpTrained(spark, root, ts))
-    factDelta.foreach(fd => bumpSummaries(spark, root, fd, summaries, bumpId))
+    val tv = trainedVectors.map(ts => bumpTrainedAt(spark, trainedStateDir(root), ts))
+    factDelta.foreach(fd => foldSummaries(spark, root, fd, summaries, bumpId))
     Artifacts(verdict, sem, tv)
   }
 
@@ -244,8 +281,10 @@ object IngestBump {
     * entry point too: a vector-only deployment bumps this family without
     * carrying a document corpus (the p73 chain does exactly that). */
   def bumpTrained(
-      spark: SparkSession, root: String, ts: TrainedSnapshot): DataFrame =
+      spark: SparkSession, root: String, ts: TrainedSnapshot): DataFrame = {
+    requireFormat(spark, root, found = true)
     bumpTrainedAt(spark, trainedStateDir(root), ts)
+  }
 
   private def bumpTrainedAt(
       spark: SparkSession, dir: String, ts: TrainedSnapshot): DataFrame = {
@@ -332,6 +371,7 @@ object IngestBump {
       corpus: DataFrame,
       publishDir: Option[String] = None,
       auditSampleMod: Long = 64L): DataFrame = {
+    requireFormat(spark, root, found = false)
     val dir = textDir(root)
     val m = loadTextState(spark, dir).getOrElse(throw new IllegalStateException(
       "bumpTextCdc needs an ingested base — run bump() on the first snapshot"))
@@ -490,56 +530,20 @@ object IngestBump {
     "retired", "departed", "labelsOut", "pairsOut", "labelsIn",
     "grams", "pairs", "survhash", "livelog")
 
-  /** Delta tables that may be ABSENT in chains written by earlier
-    * rounds; the fold supplies the legacy fallback (pairsOut ← labelsOut,
-    * the pre-split semantics). */
-  private val TextOptionalTables = Set("pairsOut")
-
   /** The folded text state under a bump root — the delta chain's
     * snapshot with every retirement + new-row layer applied, lazily.
     * What a restarted driver (and the canonicality spec) reads. */
-  def textState(spark: SparkSession, root: String): Option[Map[String, DataFrame]] =
+  def textState(spark: SparkSession, root: String): Option[Map[String, DataFrame]] = {
+    requireFormat(spark, root, found = false)
     loadTextState(spark, textDir(root))
-
-  /** The folded sem state under a bump root (same contract as
-    * [[textState]]). */
-  def semState(spark: SparkSession, root: String): Option[SemDedupStream.SemState] =
-    StateStore.loadChain(spark, semDir(root), Seq("members", "edges"),
-        Seq("retired", "cellsOut", "members", "edges"))
-      .map { case (snap, ds) => SemDedupStream.foldSemChain(snap, ds) }
-
-  /** Migration shim for gram state persisted BEFORE the `gbucket`
-    * physical-layout column existed: the bucket is a pure function of the
-    * (lang, source, block) key the rows already carry, so derive it on
-    * read. Correctness is identical (the prune filter is lossless either
-    * way); the partition prune simply cannot fire against the legacy flat
-    * files until the next SnapshotEvery compaction rewrites the state
-    * partitioned — the natural migration point, no re-ingest needed. */
-  private def withGbucket(g: DataFrame): DataFrame =
-    if (g.columns.contains("gbucket")) g
-    else g.withColumn("gbucket", PipelineOps.gramBucketCol)
-
-  /** Migration shim for edge state persisted BEFORE the spanning-forest
-    * certificate ([[IncrementalCc]]'s `in_forest` flag): no flag means no
-    * coverage, which the classifier reads as "cannot certify — rebuild"
-    * (the exact pre-certificate behavior), and each touched component
-    * regrows its forest as it is rebuilt. Correct from the first bump,
-    * no re-ingest. */
-  private def withInForest(p: DataFrame): DataFrame =
-    if (p.columns.contains("in_forest")) p
-    else p.withColumn("in_forest", lit(false))
+  }
 
   /** The folded text state: the chain's snapshot with every delta's
     * retirement + new rows applied, lazily. None before the first bump. */
   private def loadTextState(
       spark: SparkSession, dir: String): Option[Map[String, DataFrame]] =
-    StateStore.loadChain(spark, dir, TextSnapTables, TextDeltaTables,
-        TextOptionalTables)
-      .map { case (snap, deltas) => DedupStream.foldPairChain(
-        snap + ("grams" -> withGbucket(snap("grams")),
-                "pairs" -> withInForest(snap("pairs"))),
-        deltas.map(d => d + ("grams" -> withGbucket(d("grams")),
-                             "pairs" -> withInForest(d("pairs"))))) }
+    StateStore.loadChain(spark, dir, TextSnapTables, TextDeltaTables)
+      .map { case (snap, deltas) => DedupStream.foldPairChain(snap, deltas) }
 
   /** First-bump text state: one batch ingest, global CC, every edge
     * epoch-stamped; committed as the chain's founding snapshot. */
@@ -695,8 +699,7 @@ object IngestBump {
     *
     * The bump commits through [[AnnIndexStore]]'s versioned segment
     * manifest — segment + tombstones + manifest become visible in ONE
-    * `_COMMITTED` marker create, so a crash mid-bump can never expose a
-    * mixed index (the pre-store layout's append-then-overwrite window),
+    * marker create, so a crash mid-bump can never expose a mixed index,
     * concurrent readers only ever see complete committed versions, and
     * two racing bumpers claim distinct versions instead of
     * double-appending into a shared file. Compaction (tombstone ratio
@@ -706,34 +709,12 @@ object IngestBump {
     * rewrite. No eager checkpoints anywhere: every read below is against
     * immutable segment files. */
   private def bumpIndex(spark: SparkSession, idx: String, vecs: DataFrame): Unit = {
-    import graft.pipeline.{AnnIndexStore, ArtifactStore}
+    import graft.pipeline.AnnIndexStore
     def writeSegFrom(assigned: DataFrame, codes: DataFrame)(v: Long, segDir: String): Unit = {
       assigned.write.mode("overwrite").parquet(s"$segDir/ivf_assign.parquet")
       codes.write.mode("overwrite").parquet(s"$segDir/pq_codes.parquet")
     }
     AnnIndexStore.current(spark, idx) match {
-      case None if ArtifactStore.exists(spark, s"$idx/ivf_assign.parquet") =>
-        // migration shim: a pre-segment-store bump tree (flat assign/
-        // codes/tombstones at the root). Without it, current() = None
-        // read as "first build" would re-derive the frozen quantizer from
-        // the NEW snapshot — a different corpus basis — while the stale
-        // flat files lingered under the root. Fold the flat files into
-        // the store as the founding segment + mask (the root quantizer
-        // files are layout-invariant and stay put), drop the flat copies,
-        // then bump normally against the committed version.
-        val a = spark.read.parquet(s"$idx/ivf_assign.parquet").pinned(false)
-        val c = spark.read.parquet(s"$idx/pq_codes.parquet").pinned(false)
-        val tomb =
-          if (ArtifactStore.exists(spark, s"$idx/tombstones.parquet"))
-            spark.read.parquet(s"$idx/tombstones.parquet")
-              .select("vec_id").pinned(false)
-          else a.select(col("nbr_id").as("vec_id")).limit(0)
-        AnnIndexStore.commit(spark, idx, tomb,
-          segsOf = v => Seq(AnnIndexStore.segNameOf(v)),
-          writeSeg = Some(writeSegFrom(a, c)))
-        Seq("ivf_assign.parquet", "pq_codes.parquet", "tombstones.parquet")
-          .foreach(f => ArtifactStore.delete(spark, s"$idx/$f"))
-        bumpIndex(spark, idx, vecs)
       case None =>
         val n = vecs.pinned(false)
         PipelineOps.writeAnnQuantizer(n, idx)

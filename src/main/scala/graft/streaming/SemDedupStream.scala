@@ -225,8 +225,8 @@ object SemDedupStream {
     * [[PipelineOps.IvfProbes]] rows per vector — plus the cell-keyed edge
     * set. Same retirement/census logic as [[SemState]], with the census
     * counting membership rows (p52's cap is on probe-membership, so the
-    * incremental and one-shot caps bite at identical sizes). Persisted by
-    * [[StateStore.saveTrainedState]]. */
+    * incremental and one-shot caps bite at identical sizes). Persisted as
+    * an LSM chain by [[IngestBump.bumpTrained]]. */
   final case class TrainedState(members: DataFrame, edges: DataFrame)
 
   /** One refresh of the p55 trained-quantizer dedup over a quantized batch

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipeline.ArtifactStore
 
 /** Durable checkpoint store for the incremental-dedup carried state — the
   * "production deployment persists both to DFS parquet between refreshes"
@@ -10,148 +11,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * refresh silently degrades to a from-scratch rebuild (or, worse, a
   * partial state that yields a wrong verdict).
   *
-  * All filesystem traffic goes through the Hadoop `FileSystem` resolved
-  * from the path itself, so `dir` may be a local path, HDFS, S3A, or any
-  * other Hadoop-supported scheme — the same resolution Spark's own
-  * parquet writers use.
+  * A state version is a TABLE SET (one parquet relation per name) under a
+  * `v{N}/` directory, committed through [[graft.pipeline.ArtifactStore]]'s
+  * versioned-directory protocol (claim, write, publish the `_COMMITTED`
+  * marker, resolve max committed, prune) — see its doc for the crash and
+  * object-store contract. This store adds the payload: snapshot versions
+  * ([[save]]) and LSM delta versions ([[saveDelta]]) chained by a `_DELTA`
+  * base pointer, the chain walk ([[loadChain]]), and the prune point — a
+  * snapshot commit retires everything before the previous chain's START.
   *
-  * Commit protocol — versioned directories with per-version commit
-  * markers (and the reason a parquet `overwrite` alone is NOT a
-  * checkpoint: it deletes the old state before the new one is fully
-  * written, so a crash mid-save loses both):
-  *
-  *   1. claim a fresh version directory by CREATE-EXCLUSIVE on its
-  *      `_ALLOC` marker — two writers that both observe current = N land
-  *      on DISTINCT versions instead of racing file contents inside one
-  *      directory (the single-writer guard: the deployment is meant to be
-  *      single-writer, but a misconfigured second writer now degrades to
-  *      highest-committed-version-wins between two internally-consistent
-  *      versions, never to a torn state);
-  *   2. write all state tables under the claimed `v{N+1}/` directory;
-  *   3. commit by CREATE-EXCLUSIVE on the version's `_COMMITTED` marker.
-  *      Readers resolve the current version as MAX committed — never a
-  *      pointer file, never a rename (rename is copy+delete on object
-  *      stores, and a rename-based pointer flip can be observed torn).
-  *      On POSIX/HDFS create-exclusive is plain O_EXCL. On object stores
-  *      its atomicity is a property of the CONNECTOR, not of the
-  *      `FileSystem.create(overwrite=false)` call: S3A implements it as
-  *      a conditional `If-None-Match` PUT only on Hadoop 3.4.1+
-  *      (HADOOP-19256) with conditional create enabled — older or
-  *      unconfigured connectors fall back to HEAD-then-PUT, which two
-  *      racers can interleave; GCS precondition-creates (generation 0)
-  *      unconditionally. [[commit]] probes `hasPathCapability` once per
-  *      filesystem and logs a degraded-mode warning on an S3-family
-  *      store without the capability — the protocol still degrades
-  *      SAFELY there (two racers land on distinct `_ALLOC`-claimed
-  *      versions in all but the HEAD-to-PUT window, and max-committed
-  *      resolution never serves a torn version), but the single-writer
-  *      deployment rule becomes load-bearing instead of belt-and-
-  *      suspenders. A version is visible if and only if every one of its
-  *      files is.
-  *   4. prune versions older than the previous one (the previous survives
-  *      one extra cycle for in-flight readers).
-  *
-  * A crash between (2) and (3) leaves an orphaned `v{N+1}` that later
-  * allocations skip (its `_ALLOC` marker loses the exclusivity race) and
-  * a later prune removes; `load` keeps serving `vN` — an uncommitted
-  * version is invisible to the max-committed resolution. StreamStateSpec
-  * kills the in-memory state between refreshes, reloads from disk, and
-  * proves the final verdict identical to the never-restarted run — plus
-  * the crash-before-commit, two-concurrent-writers, and prune behaviors
-  * of the protocol itself. */
+  * StreamStateSpec kills the in-memory state between refreshes, reloads
+  * from disk, and proves the final verdict identical to the
+  * never-restarted run — plus the crash-before-commit,
+  * two-concurrent-writers, and prune behaviors of the protocol itself. */
 object StateStore {
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The Hadoop capability key for conditional (If-None-Match) create —
-    * `Options.CreateFileOptionKeys.FS_OPTION_CREATE_CONDITIONAL_OVERWRITE`,
-    * inlined so the reference compiles against any 3.x client jar. */
-  private val ConditionalCreateCapability = "fs.option.create.conditional.overwrite"
-
-  private val probedFs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** One-time (per filesystem URI) probe of the commit protocol's
-    * object-store assumption: on an S3-family store whose connector lacks
-    * conditional create (pre-3.4.1/HADOOP-19256, or disabled),
-    * CREATE-EXCLUSIVE is HEAD-then-PUT and two RACING writers have a
-    * small window to claim the same version. The protocol degrades
-    * safely (see the class doc) but the single-writer deployment rule
-    * becomes load-bearing — say so once, loudly, at the first commit.
-    * Returns whether THIS call fired the degraded-mode warning (false on
-    * capable stores, non-S3 schemes, and every repeat probe of an
-    * already-seen filesystem) — the observable a spec pins without
-    * scraping log output. */
-  private[graft] def probeAtomicCreate(fs: FileSystem, dir: String): Boolean = {
-    if (probedFs.add(fs.getUri.toString)) {
-      val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-      val s3Family = Set("s3a", "s3", "s3n").contains(scheme)
-      val conditional =
-        try fs.hasPathCapability(new HPath(dir), ConditionalCreateCapability)
-        catch { case _: IllegalArgumentException | _: UnsupportedOperationException => false }
-      if (s3Family && !conditional) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"StateStore commit markers on ${fs.getUri} rely on create-exclusive, but this " +
-          s"connector does not report '$ConditionalCreateCapability' (needs Hadoop " +
-          "3.4.1+/HADOOP-19256 with conditional create enabled). Marker creation " +
-          "degrades to HEAD-then-PUT: versions stay internally consistent and readers " +
-          "can never observe a torn state, but two CONCURRENT writers racing the same " +
-          "version number are no longer excluded — enforce one writer per state root.")
-        true
-      } else false
-    } else false
-  }
-
-  /** Version numbers allocated under `dir` (`v{N}` children), committed
-    * or not — the allocation floor. */
-  private def allocated(fs: FileSystem, dir: String): Seq[Long] = {
-    val p = new HPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.length > 1 && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong)
-  }
-
-  /** The current version: MAX v{N} carrying a `_COMMITTED` marker. One
-    * listing + one marker probe per allocated-but-newer version — a
-    * handful of round-trips on any store (prune keeps the version count
-    * small). */
-  private def currentVersion(fs: FileSystem, dir: String): Option[Long] = {
-    val committed = allocated(fs, dir).sorted(Ordering[Long].reverse)
-      .find(v => fs.exists(new HPath(s"$dir/v$v/_COMMITTED")))
-    committed
-  }
-
-  private def baseOf(fs: FileSystem, dir: String, v: Long): Option[Long] = {
-    val p = new HPath(s"$dir/v$v/_DELTA")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](64)
-        var total = 0
-        var n = 0
-        while (total < buf.length &&
-               { n = in.read(buf, total, buf.length - total); n > 0 }) total += n
-        Some(new String(buf, 0, total, "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
+  private def baseOf(spark: SparkSession, dir: String, v: Long): Option[Long] =
+    ArtifactStore.readText(spark, s"$dir/v$v/_DELTA").map(_.trim.toLong)
 
   /** The version chain ending at `v`: snapshot first, deltas in commit
     * order. A base pointer must strictly DECREASE along the walk (a
     * delta's base is always an earlier version) — a corrupted or
     * hand-edited `_DELTA` file that points at itself or forward would
     * otherwise spin this loop forever; fail fast instead. */
-  private def chainOf(fs: FileSystem, dir: String, v: Long): Seq[Long] = {
+  private def chainOf(spark: SparkSession, dir: String, v: Long): Seq[Long] = {
     var chain = List(v)
-    var base = baseOf(fs, dir, v)
+    var base = baseOf(spark, dir, v)
     while (base.isDefined) {
       if (base.get >= chain.head)
         throw new IllegalStateException(
           s"$dir v${chain.head} has a non-decreasing _DELTA base ${base.get} — corrupt chain")
       chain = base.get :: chain
-      base = baseOf(fs, dir, base.get)
+      base = baseOf(spark, dir, base.get)
     }
     chain
   }
@@ -189,32 +80,22 @@ object StateStore {
   /** Number of delta versions stacked on the current chain's snapshot —
     * 0 when the current version is itself a snapshot; the compaction
     * trigger input. */
-  def chainLength(spark: SparkSession, dir: String): Int = {
-    val fs = fsOf(spark, dir)
-    currentVersion(fs, dir).map(v => chainOf(fs, dir, v).length - 1).getOrElse(0)
-  }
+  def chainLength(spark: SparkSession, dir: String): Int =
+    ArtifactStore.currentVersion(spark, dir)
+      .map(v => chainOf(spark, dir, v).length - 1).getOrElse(0)
 
   /** The committed chain: the snapshot version's tables (names in
     * `snapshotNames`) plus each delta version's tables (`deltaNames`) in
-    * commit order, for the domain to fold. None if nothing committed.
-    * Names in `optionalNames` may be absent from a version (tables added
-    * after that version was written) — they are simply omitted from that
-    * version's map, and the domain's fold supplies the legacy fallback. */
+    * commit order, for the domain to fold. None if nothing committed. */
   def loadChain(
       spark: SparkSession,
       dir: String,
       snapshotNames: Seq[String],
-      deltaNames: Seq[String],
-      optionalNames: Set[String] = Set.empty): Option[(Map[String, DataFrame], Seq[Map[String, DataFrame]])] = {
-    val fs = fsOf(spark, dir)
+      deltaNames: Seq[String]): Option[(Map[String, DataFrame], Seq[Map[String, DataFrame]])] = {
     def read(v: Long, names: Seq[String]): Map[String, DataFrame] =
-      names.flatMap { n =>
-        val p = s"$dir/v$v/$n.parquet"
-        if (optionalNames.contains(n) && !fs.exists(new HPath(p))) None
-        else Some(n -> spark.read.parquet(p))
-      }.toMap
-    currentVersion(fs, dir).map { v =>
-      val chain = chainOf(fs, dir, v)
+      names.map(n => n -> spark.read.parquet(s"$dir/v$v/$n.parquet")).toMap
+    ArtifactStore.currentVersion(spark, dir).map { v =>
+      val chain = chainOf(spark, dir, v)
       (read(chain.head, snapshotNames), chain.tail.map(read(_, deltaNames)))
     }
   }
@@ -242,25 +123,12 @@ object StateStore {
       partitions: Map[String, Seq[String]] = Map.empty): Long = {
     require(tables.nonEmpty, "cannot checkpoint an empty table set")
     val spark = tables.head._2.sparkSession
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(new HPath(dir))
-    probeAtomicCreate(fs, dir)
-    val prev = currentVersion(fs, dir)
+    val fs = ArtifactStore.fsOf(spark, dir)
+    val prev = ArtifactStore.currentVersion(spark, dir)
     require(!delta || prev.isDefined, "a delta commit needs a base version")
-    // (1) claim a version: first writer to create v{N}/_ALLOC owns v{N};
-    // a loser (concurrent writer, or a crashed save's leftover) advances
-    var next = prev.getOrElse(0L) + 1
-    var claimed = false
-    while (!claimed) {
-      try {
-        fs.create(new HPath(s"$dir/v$next/_ALLOC"), false).close()
-        claimed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => next += 1
-        case _: java.nio.file.FileAlreadyExistsException => next += 1
-      }
-    }
-    // (2) state tables into the claimed directory; a delta also records
+    val (next, vdir) = ArtifactStore.claimVersion(spark, dir)
+
+    // state tables into the claimed directory; a delta also records
     // its base version — the chain pointer loadChain walks. Written
     // BEFORE the _COMMITTED marker, so a committed delta always has its
     // base. The writes are INDEPENDENT (distinct paths under the claimed
@@ -277,7 +145,7 @@ object StateStore {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(writePool)
       val writes: Seq[(String, Future[Try[Unit]])] = tables.toSeq.map { case (name, df) =>
         name -> Future {
-          val path = s"$dir/v$next/$name.parquet"
+          val path = s"$vdir/$name.parquet"
           partitions.getOrElse(name, Seq.empty) match {
             case Seq() => df.write.mode("overwrite").parquet(path)
             case cols =>
@@ -314,32 +182,16 @@ object StateStore {
         }.get
       }
     }
-    if (delta) {
-      val out = fs.create(new HPath(s"$dir/v$next/_DELTA"), true)
-      try out.write(prev.get.toString.getBytes("UTF-8")) finally out.close()
-    }
-    // (3) commit: CREATE-EXCLUSIVE on the version's _COMMITTED marker —
-    // atomic on POSIX/HDFS (O_EXCL) and on object stores (conditional
-    // PUT), unlike rename. We own the claimed directory, so the create
-    // cannot lose a race; readers resolving MAX committed see this
-    // version only once every table file under it is fully written.
-    fs.create(new HPath(s"$dir/v$next/_COMMITTED"), false).close()
-    // (4) prune: a SNAPSHOT commit retires the previous chain — delete
+    if (delta) ArtifactStore.writeText(spark, s"$vdir/_DELTA", prev.get.toString)
+    ArtifactStore.publish(spark, dir, vdir)
+    // prune: a SNAPSHOT commit retires the previous chain — delete
     // everything older than the previous version's chain START, so
     // in-flight readers mid-walk over that chain stay whole for one more
-    // cycle (for all-snapshot stores this is exactly the old "keep one
-    // prior version" rule). A DELTA commit prunes nothing: every version
-    // back to its snapshot IS the live state. (listStatus returns a
-    // materialized array — nothing to leak on repeated saves.)
-    if (!delta) prev.foreach { p =>
-      val keepFrom = chainOf(fs, dir, p).head
-      fs.listStatus(new HPath(dir)).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v") && n.drop(1).nonEmpty && n.drop(1).forall(_.isDigit) &&
-            n.drop(1).toLong < keepFrom)
-          fs.delete(st.getPath, true)
-      }
-    }
+    // cycle (for all-snapshot stores this is exactly the "keep one prior
+    // version" rule). A DELTA commit prunes nothing: every version back
+    // to its snapshot IS the live state.
+    if (!delta) prev.foreach(p =>
+      ArtifactStore.pruneBelow(spark, dir, chainOf(spark, dir, p).head))
     next
   }
 
@@ -347,25 +199,21 @@ object StateStore {
     * Fails fast if the head version is a delta — a chained store must be
     * read through [[loadChain]] (reading a delta's tables as if they were
     * the full state would silently serve a fragment). */
-  def load(spark: SparkSession, dir: String, names: Seq[String]): Option[Map[String, DataFrame]] = {
-    val fs = fsOf(spark, dir)
-    currentVersion(fs, dir).map { v =>
-      if (baseOf(fs, dir, v).isDefined)
+  def load(spark: SparkSession, dir: String, names: Seq[String]): Option[Map[String, DataFrame]] =
+    ArtifactStore.currentVersion(spark, dir).map { v =>
+      if (baseOf(spark, dir, v).isDefined)
         throw new IllegalStateException(
           s"$dir head v$v is a delta — read the chain via loadChain")
       names.map(n => n -> spark.read.parquet(s"$dir/v$v/$n.parquet")).toMap
     }
-  }
 
   /** Physical path of `name`'s parquet in the CURRENT committed version —
     * for serving layers that resolve relations by path (the Preagg
     * router's summary TableDef). Re-resolve after each save; a plan still
     * holding the previous version's path survives one save cycle (the
     * prune contract). */
-  def currentTablePath(spark: SparkSession, dir: String, name: String): Option[String] = {
-    val fs = fsOf(spark, dir)
-    currentVersion(fs, dir).map(v => s"$dir/v$v/$name.parquet")
-  }
+  def currentTablePath(spark: SparkSession, dir: String, name: String): Option[String] =
+    ArtifactStore.committedTablePath(spark, dir, name)
 
   // ------------------------------------------------- typed wrappers
 
@@ -382,11 +230,4 @@ object StateStore {
   def loadSemState(spark: SparkSession, dir: String): Option[SemDedupStream.SemState] =
     load(spark, dir, Seq("members", "edges")).map(m =>
       SemDedupStream.SemState(m("members"), m("edges")))
-
-  def saveTrainedState(dir: String, s: SemDedupStream.TrainedState): Long =
-    save(dir, Map("members" -> s.members, "edges" -> s.edges))
-
-  def loadTrainedState(spark: SparkSession, dir: String): Option[SemDedupStream.TrainedState] =
-    load(spark, dir, Seq("members", "edges")).map(m =>
-      SemDedupStream.TrainedState(m("members"), m("edges")))
 }

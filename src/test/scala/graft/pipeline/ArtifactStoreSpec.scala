@@ -32,7 +32,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       val fs = new HPath(vr).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // round 14: the table commits as a marker-resolved version (the
       // object-store-safe protocol), never a flat file + ready marker
-      val v = ArtifactStore.committedVersion(spark, vr)
+      val v = ArtifactStore.currentVersion(spark, vr)
         .getOrElse(fail("no committed verdict version on the routed FS"))
       assert(fs.exists(new HPath(s"$vr/v$v", "_COMMITTED")), "commit marker on the routed FS")
       assert(fs.exists(new HPath(s"$vr/v$v", "verdict.parquet")), "data on the routed FS")

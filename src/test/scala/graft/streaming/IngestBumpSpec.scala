@@ -187,56 +187,43 @@ class IngestBumpSpec extends AnyFunSuite {
     assert(rowImage(v) == rowImage(PipelineOps.dedupVerdictOf(s0)))
   }
 
-  test("legacy gram state without the gbucket column derives it on read: bumps over " +
-       "pre-round-14 persisted state converge without a re-ingest") {
-    val root = Files.createTempDirectory("graft_bump_gmig").toString
-    IngestBump.bump(spark, root, s0)
-    // simulate the pre-round-14 layout: rewrite the committed grams table
-    // flat, without the gbucket column (the legacy schema)
-    val p = StateStore.currentTablePath(spark, s"$root/text", "grams").get
-    val legacy = spark.read.parquet(p).drop("gbucket").localCheckpoint(true)
-    legacy.write.mode("overwrite").parquet(p)
-    // pre-shim this bump failed loudly (pruneGramHistory/unionByName on a
-    // missing column); now it derives the bucket from (lang, source,
-    // block) and converges
-    val a = IngestBump.bump(spark, root, s1)
-    assert(rowImage(a.verdict) == rowImage(PipelineOps.dedupVerdictOf(s1)))
-    val st = IngestBump.textState(spark, root).get
-    assert(rowImage(st("grams").select("doc_id", "grams")) ==
-      rowImage(PipelineOps.ngramGrams(PipelineOps.survivorsOf(s1)
-        .select("doc_id", "text", "lang", "source", "n_chars")).select("doc_id", "grams")))
-  }
+  test("format stamp: an empty root is founded with the current stamp; a root holding " +
+       "state under no stamp or another stamp fails every entry with the typed error") {
+    val fact = spark.range(1).toDF("id")
+    val ts = IngestBump.TrainedSnapshot(fact, fact)
+    val feed = IngestBump.CorpusDelta(fact, fact, fact)
+    def refusedEverywhere(root: String, found: Option[String]): Unit = {
+      val entries: Seq[(String, () => Any)] = Seq(
+        "bump" -> (() => IngestBump.bump(spark, root, s0)),
+        "bumpTextCdc" -> (() => IngestBump.bumpTextCdc(spark, root, feed, s0)),
+        "bumpTrained" -> (() => IngestBump.bumpTrained(spark, root, ts)),
+        "bumpSummaries" -> (() => IngestBump.bumpSummaries(spark, root, fact, Nil)),
+        "textState" -> (() => IngestBump.textState(spark, root)))
+      entries.foreach { case (name, call) =>
+        val e = intercept[IngestBump.StateFormatException](call())
+        assert(e.root == root && e.found == found, name)
+        assert(e.getMessage.contains(root) && e.getMessage.contains("IngestBump.bump"), name)
+      }
+    }
+    val stamp = (r: String) => ArtifactStore.readText(spark, s"$r/_FORMAT")
 
-  test("legacy flat ANN bump tree migrates into the segment store on the next bump: " +
-       "frozen quantizer preserved, flat files dropped, answers track from-scratch") {
-    val root = Files.createTempDirectory("graft_bump_amig").toString
-    val full = PipelineOps.quantized(spark, SfDir)
-      .select(col("vec_id"), col("q"), col("nrm")).localCheckpoint(false)
-    val nEmb = spark.read.parquet(s"$SfDir/embeddings.parquet").count()
-    val k = PipelineOps.semCells(nEmb)
-    val cents = PipelineOps.semCents(full, k).localCheckpoint(false)
-    val seedBound = Seq(k, PipelineOps.IvfCentroids.toLong,
-      PipelineOps.PqCentroids.toLong, 10L).max
-    val keep = col("vec_id") < seedBound
-    val v0 = full.where(keep || col("vec_id") % 10 =!= 9)
-    val v1 = full.where(keep || col("vec_id") % 10 =!= 0)
-    val idx = IngestBump.indexDir(root)
-    // the pre-segment-store layout: flat assign/codes + root quantizer
-    PipelineOps.buildAnnIndexOf(v0.localCheckpoint(false), idx)
-    assert(ArtifactStore.exists(spark, s"$idx/ivf_assign.parquet"))
-    val centsBefore = rowImage(spark.read.parquet(s"$idx/ivf_cents.parquet"))
-    IngestBump.bump(spark, root, s0, Some(IngestBump.VectorSnapshot(v1, cents)))
-    // flat files folded into a committed version and removed; pre-shim the
-    // bump silently re-derived the quantizer from v1 (a different corpus
-    // basis) and left the stale flat files lingering
-    assert(!ArtifactStore.exists(spark, s"$idx/ivf_assign.parquet"))
-    assert(graft.pipeline.AnnIndexStore.current(spark, idx).isDefined)
-    assert(rowImage(spark.read.parquet(s"$idx/ivf_cents.parquet")) == centsBefore,
-      "migration must keep the frozen quantizer, not re-derive it")
-    val scratch = Files.createTempDirectory("graft_bump_amig_scratch").toString
-    PipelineOps.buildAnnIndexOf(v1.localCheckpoint(false), scratch)
-    assert(rowImage(PipelineOps.queryAnnIndex(spark, SfDir, idx)) ==
-      rowImage(PipelineOps.queryAnnIndex(spark, SfDir, scratch)))
+    // founding: a read leaves an empty root alone; a write entry stamps it,
+    // also when the root is a claimed scratch version holding only _ALLOC
+    val (_, fresh) = ArtifactStore.claimVersion(spark,
+      Files.createTempDirectory("graft_bump_fmt").toString)
+    assert(IngestBump.textState(spark, fresh).isEmpty && stamp(fresh).isEmpty)
+    IngestBump.bumpSummaries(spark, fresh, fact, Nil)
+    assert(stamp(fresh).contains(IngestBump.FormatVersion.toString))
+
+    // another stamp
+    ArtifactStore.writeText(spark, s"$fresh/_FORMAT", "0")
+    refusedEverywhere(fresh, Some("0"))
+
+    // state under no stamp
+    val unstamped = Files.createTempDirectory("graft_bump_fmt_none").toString
+    Files.createDirectories(java.nio.file.Paths.get(unstamped, "summary", "s", "v1"))
+    refusedEverywhere(unstamped, None)
+    assert(stamp(unstamped).isEmpty, "a refused root must not be stamped")
   }
 
   test("survivor promotion under a CDC feed: removing an exact-dup's keeper promotes " +
