@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.plan.{CubePlanner, TableResolver}
+import graft.plan.{CubePlanner, MemoizedResolver, TableResolver}
 
 /** Binds the driver's TPC-H-ish star (`/root/testdata/sf*`) to a
   * tesseract-style cube (see FIXTURES.md §3).
@@ -170,6 +170,10 @@ object TpchStar {
   /** Full schema for the HTTP server. */
   val schema: Schema = Schema("Tpch", Seq(salesCube, salesCubeDM))
 
-  def planner(sfDir: String): CubePlanner = new CubePlanner(salesCube, new Resolver(sfDir))
-  def plannerDM(sfDir: String): CubePlanner = new CubePlanner(salesCubeDM, new Resolver(sfDir))
+  /** Planners over memoized tables: each resolves the star once, then plans
+    * every query over the same frames. */
+  def planner(sfDir: String): CubePlanner =
+    new CubePlanner(salesCube, new MemoizedResolver(new Resolver(sfDir)))
+  def plannerDM(sfDir: String): CubePlanner =
+    new CubePlanner(salesCubeDM, new MemoizedResolver(new Resolver(sfDir)))
 }

@@ -13,6 +13,26 @@ trait TableResolver {
   def resolve(spark: SparkSession, table: TableDef): DataFrame
 }
 
+/** Resolves each table through `inner` at most once per session and hands
+  * every later call the same frame, so a planner's requests skip the file
+  * listing, footer reads and dim joins a resolve costs. The frame reads the
+  * table's files as of its first resolve: a holder that wants newer files
+  * starts a new memo (the server does on every `/flush`).
+  *
+  * Concurrent first calls for one table resolve once (the slot's lazy val
+  * serializes them). A failed resolve stores nothing, so the next call
+  * retries. A call under another session than the slot's resolves afresh
+  * and the slot moves to that session. */
+final class MemoizedResolver(inner: TableResolver) extends TableResolver {
+  private final class Slot(val spark: SparkSession, table: TableDef) {
+    lazy val frame: DataFrame = inner.resolve(spark, table)
+  }
+  private val slots = new java.util.concurrent.ConcurrentHashMap[TableDef, Slot]()
+
+  def resolve(spark: SparkSession, table: TableDef): DataFrame =
+    slots.compute(table, (_, s) => if (s != null && (s.spark eq spark)) s else new Slot(spark, table)).frame
+}
+
 final case class PlanError(message: String) extends RuntimeException(message)
 
 /** Compiles a resolved [[CubeQuery]] into one declarative DataFrame plan.

@@ -6,7 +6,7 @@ import java.util.concurrent.Executors
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
-import graft.plan.{CubePlanner, Diagnosis, LogicLayer, LogicLayerQuery, NamedSet, PlanError, TableResolver}
+import graft.plan.{CubePlanner, Diagnosis, LogicLayer, LogicLayerQuery, MemoizedResolver, NamedSet, PlanError, TableResolver}
 import Format.{FormatType, SourceMetadata}
 
 /** HTTP API over the planner (reference tesseract-server routes,
@@ -21,7 +21,7 @@ import Format.{FormatType, SourceMetadata}
   *   GET /members.{fmt}?cube=&level=           → logic-layer members (bare or unique level name)
   *   GET /cubes/{cube}/diagnosis.{fmt}         → referential-integrity QA
   *   GET /diagnosis.{fmt}[?cube=]              → QA for one or all accessible cubes
-  *   GET /flush?secret=                        → schema reload hook
+  *   GET /flush?secret=                        → schema reload hook + fresh tables
   *
   * Built on the JDK's HttpServer with a small thread pool: each request
   * builds a DataFrame plan and streams it out via the Format module; Spark
@@ -70,6 +70,10 @@ final class GraftServer(
     * reload, main.rs:127-128 + flush.rs). */
   private final case class SchemaState(
       schema: Schema,
+      /** Every route reads tables through this memo, so each table is
+        * resolved once per state: its files are read as of the start or
+        * the last /flush, the same freshness the response cache has. */
+      tables: MemoizedResolver,
       planners: Map[String, CubePlanner],
       aggPlanners: Map[String, graft.plan.PreaggPlanner],
       logicLayers: Map[String, LogicLayer],
@@ -114,8 +118,9 @@ final class GraftServer(
     }.nextOption()
 
   private def buildState(s: Schema): SchemaState = {
+    val tables = new MemoizedResolver(resolver)
     val planners: Map[String, CubePlanner] =
-      s.cubes.map(c => c.name -> new CubePlanner(c, resolver, geoService)).toMap
+      s.cubes.map(c => c.name -> new CubePlanner(c, tables, geoService)).toMap
     val aggPlanners = planners.map { case (n, p) =>
       n -> new graft.plan.PreaggPlanner(p, summaries.getOrElse(n, Nil))
     }
@@ -145,15 +150,16 @@ final class GraftServer(
     val version = java.security.MessageDigest.getInstance("SHA-256")
       .digest(canonical.getBytes(StandardCharsets.UTF_8))
       .take(8).map("%02x".format(_)).mkString
-    SchemaState(s, planners, aggPlanners, logicLayers, llDuplicate(s), version)
+    SchemaState(s, tables, planners, aggPlanners, logicLayers, llDuplicate(s), version)
   }
 
   @volatile private var state: SchemaState = buildState(schema)
 
   /** Swap in a re-read schema (served by /flush through `onFlush`, or
     * called directly). In-flight requests keep the state they resolved;
-    * new requests see the new schema. Member caches rebuild lazily; the
-    * response cache drops so no stale bodies survive the swap. */
+    * new requests see the new schema. Tables re-resolve and member caches
+    * rebuild lazily; the response cache drops so no stale bodies survive
+    * the swap. */
   def reload(newSchema: Schema): Unit = { state = buildState(newSchema); cache.clear() }
 
   // NOTE: requests never read the volatile `state` more than once — handle()
@@ -425,7 +431,7 @@ final class GraftServer(
       case DiagRe(cube, fmt) =>
         withCube(dec(cube), token) { case (c, _) =>
           withFormat(fmt) { f =>
-            Right(out(Diagnosis.run(spark, c, resolver), f, None))
+            Right(out(Diagnosis.run(spark, c, st.tables), f, None))
           }
         }
       // top-level diagnosis (handlers/diagnosis.rs:79-96): ?cube= picks one,
@@ -436,13 +442,13 @@ final class GraftServer(
           params.get("cube").flatMap(_.headOption) match {
             case Some(name) =>
               withCube(name, token) { case (c, _) =>
-                Right(out(Diagnosis.run(spark, c, resolver), f, None))
+                Right(out(Diagnosis.run(spark, c, st.tables), f, None))
               }
             case None =>
               val cs = curSchema.cubes.filter(auth.allowed(_, token))
               if (cs.isEmpty) Left((401, "no accessible cubes"))
               else Right(out(
-                cs.map(c => Diagnosis.run(spark, c, resolver).withColumn("cube", lit(c.name))
+                cs.map(c => Diagnosis.run(spark, c, st.tables).withColumn("cube", lit(c.name))
                   .select("cube", "check_name", "dimension", "n")).reduce(_ unionByName _),
                 f, None))
           }
@@ -535,7 +541,14 @@ final class GraftServer(
           // half-swap: reload() only runs on a successfully parsed schema,
           // so the pre-flush state keeps serving — the reference 500s the
           // flush itself and keeps its old shared schema (flush.rs:52-56)
-          try { onFlush(); cache.clear(); Right(Body("{\"status\":\"flushed\"}", "application/json")) }
+          try {
+            val before = state
+            onFlush()
+            // a hook that swapped nothing (the default) still gets fresh
+            // tables: /flush is where new files become visible
+            if (state eq before) reload(before.schema)
+            Right(Body("{\"status\":\"flushed\"}", "application/json"))
+          }
           catch {
             case scala.util.control.NonFatal(e) =>
               Left((500, s"flush failed, previous schema still active: ${e.getMessage}"))

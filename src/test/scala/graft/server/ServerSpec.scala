@@ -509,6 +509,40 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally failing.stop()
   }
 
+  test("tables are read as of start or the last /flush: appended files show only after /flush") {
+    import graft.sources.{FormatResolver, SourceSpec}
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_flush").toString + "/lineitem"
+    val li = spark.read.parquet(s"$SfDir/lineitem.parquet")
+    li.coalesce(1).write.parquet(dir)
+    // default no-op onFlush: /flush alone must start fresh tables
+    val srv = new GraftServer(spark, TpchStar.schema,
+      new FormatResolver(Map("lineitem" -> SourceSpec(dir)), fallbackParquetDir = Some(SfDir)),
+      flushSecret = Some("f"))
+    val p2 = srv.start()
+    try {
+      def g(path: String): (Int, String) = {
+        val resp = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$p2$path")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode(), resp.body())
+      }
+      // stream=true bypasses the response cache, so every call re-plans
+      val q = "/cubes/Sales/aggregate.csv?drilldowns=Return%20Flag.Return%20Flag" +
+        "&measures=Row%20Count&stream=true"
+      def rows(body: String): Long =
+        body.linesIterator.drop(1).filter(_.nonEmpty).map(_.split(',').last.toLong).sum
+      val (c0, before) = g(q)
+      assert(c0 == 200, before)
+      assert(rows(before) == li.count())
+      li.limit(10).coalesce(1).write.mode("append").parquet(dir)
+      assert(g(q) == ((200, before)), "an appended file must not show before /flush")
+      assert(g("/flush?secret=f")._1 == 200)
+      val (c1, after) = g(q)
+      assert(c1 == 200, after)
+      assert(rows(after) == li.count() + 10, after)
+    } finally srv.stop()
+  }
+
   test("JWT auth levels gate non-public cubes") {
     val privCube = TpchStar.salesCube.copy(name = "Private", public = false, minAuthLevel = 2)
     val schema = graft.core.Schema("T2", Seq(TpchStar.salesCube, privCube))

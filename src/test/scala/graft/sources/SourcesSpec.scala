@@ -75,6 +75,63 @@ class SourcesSpec extends AnyFunSuite {
     intercept[PlanError] { r.resolve(spark, TableDef("nope")) }
   }
 
+  test("memoized resolver: one inner resolve per table and session, failures retried, concurrent first uses resolve once") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import graft.plan.{MemoizedResolver, TableResolver}
+    final class Counting(failFirst: Int = 0, delayMs: Long = 0) extends TableResolver {
+      val calls = new ConcurrentLinkedQueue[String]()
+      private val failures = new AtomicInteger(failFirst)
+      def resolve(s: SparkSession, t: TableDef): DataFrame = {
+        calls.add(t.name)
+        Thread.sleep(delayMs)
+        if (failures.getAndDecrement() > 0) throw PlanError(s"no table '${t.name}' yet")
+        s.range(1).toDF(t.name)
+      }
+    }
+    val a = TableDef("a")
+    val b = TableDef("b", primaryKey = Some("id"))
+
+    // one inner call per TableDef; every later call is the same frame
+    val c1 = new Counting()
+    val m1 = new MemoizedResolver(c1)
+    val fa = m1.resolve(spark, a)
+    assert((1 to 3).forall(_ => m1.resolve(spark, a) eq fa))
+    assert(m1.resolve(spark, b) ne fa)
+    m1.resolve(spark, b)
+    assert(c1.calls.toArray.toSeq == Seq("a", "b"))
+
+    // a failed resolve is not stored: the next call retries and succeeds
+    val c2 = new Counting(failFirst = 1)
+    val m2 = new MemoizedResolver(c2)
+    intercept[PlanError] { m2.resolve(spark, a) }
+    val fa2 = m2.resolve(spark, a)
+    assert(m2.resolve(spark, a) eq fa2)
+    assert(c2.calls.size == 2)
+
+    // another session resolves afresh, bound to that session
+    val other = spark.newSession()
+    val fo = m1.resolve(other, a)
+    assert(fo.sparkSession eq other)
+    assert(c1.calls.toArray.toSeq == Seq("a", "b", "a"))
+
+    // 8 concurrent first calls make one inner call and share its frame
+    val c3 = new Counting(delayMs = 200)
+    val m3 = new MemoizedResolver(c3)
+    val pool = Executors.newFixedThreadPool(8)
+    val go = new CountDownLatch(1)
+    try {
+      val fs = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[DataFrame] {
+        def call(): DataFrame = { go.await(); m3.resolve(spark, a) }
+      }))
+      go.countDown()
+      val frames = fs.map(_.get(30, TimeUnit.SECONDS))
+      assert(frames.forall(_ eq frames.head))
+      assert(c3.calls.size == 1)
+    } finally pool.shutdownNow()
+  }
+
   test("bucketed tables join without any exchange; results match the shuffled join") {
     import org.apache.spark.sql.functions.{col, sum}
     val tmp = Files.createTempDirectory("graft_bucket").toString
