@@ -62,6 +62,9 @@ final class CubePlanner(
   /** Same resolver, different cube view (Preagg plans storage variants). */
   def withCube(c: Cube): CubePlanner = new CubePlanner(c, resolver, geoService)
 
+  /** Same cube over a fresh [[MemoizedResolver]] of this planner's resolver. */
+  def memoized: CubePlanner = new CubePlanner(cube, new MemoizedResolver(resolver), geoService)
+
   // ---------------------------------------------------------------- public
 
   def plan(spark: SparkSession, q: CubeQuery): DataFrame = {

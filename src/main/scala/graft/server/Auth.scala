@@ -65,6 +65,13 @@ trait ResponseCache {
   def get(k: String): Option[(String, String)]
   def put(k: String, v: (String, String)): Unit
   def clear(): Unit
+
+  /** Names the cache's current generation; a [[clear]] moves it on. The
+    * server keys entries by it and compares it per request, so a `/flush`
+    * on one replica of a shared cache also makes every other replica
+    * re-read its tables. The default never moves: a cache used by one
+    * process only needs the server's own reload. */
+  def generation: String = ""
 }
 
 /** Default per-instance in-memory LRU — the zero-dependency stand-in for
@@ -74,9 +81,11 @@ final class LruResponseCache(maxEntries: Int = 256) extends ResponseCache {
     override def removeEldestEntry(e: java.util.Map.Entry[String, (String, String)]): Boolean =
       size() > maxEntries
   }
+  @volatile private var gen = 0L
   def get(k: String): Option[(String, String)] = synchronized(Option(map.get(k)))
   def put(k: String, v: (String, String)): Unit = synchronized { map.put(k, v); () }
-  def clear(): Unit = synchronized(map.clear())
+  def clear(): Unit = synchronized { map.clear(); gen += 1 }
+  override def generation: String = gen.toString
 }
 
 /** Cross-instance response cache over a shared directory (NFS/EFS/local):
@@ -92,7 +101,14 @@ final class LruResponseCache(maxEntries: Int = 256) extends ResponseCache {
   * would otherwise keep serving pre-refresh bodies indefinitely (the
   * in-memory LRU restarts empty, this cache deliberately does not). Same
   * operational rule as the reference's Redis cache, which also survives
-  * server restarts. One file per entry named by the sha-256 of the
+  * server restarts. One `/flush` suffices: [[clear]] writes a fresh token
+  * to the `_GENERATION` file, and every replica that reads a new token
+  * drops its resolved tables before it serves the request (each replica
+  * resolves its tables once and would otherwise keep its own snapshot).
+  * The token is also part of every key, so a body that a not-yet-fresh
+  * replica computes from the old files lands under the old generation,
+  * where no fresh replica looks. The schema itself is re-read only by the
+  * replica that received the `/flush`. One file per entry named by the sha-256 of the
   * normalized key (first line content-type, rest body), written to a temp
   * file and atomically moved so concurrent replicas never read a torn
   * entry; reads tolerate missing/competing files. Eviction caps the entry
@@ -178,7 +194,21 @@ final class SharedFileResponseCache(
       .foreach(p => try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
   }
 
-  def clear(): Unit =
+  private val generationFile = dir.resolve("_GENERATION")
+
+  /** Moves the generation on first, so a replica that reads the new token
+    * never serves an entry of the old one. */
+  def clear(): Unit = {
+    val tmp = Files.createTempFile(dir, "gen", ".tmp")
+    Files.writeString(tmp, java.util.UUID.randomUUID().toString)
+    Files.move(tmp, generationFile, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     listAll().filter(_.toString.endsWith(".resp"))
       .foreach(p => try Files.deleteIfExists(p) catch { case scala.util.control.NonFatal(_) => () })
+  }
+
+  /** "" until the first clear. The token is replaced by an atomic move, so
+    * a read sees the old token or the new one; a failed read reports "",
+    * which at worst costs one extra table re-read. */
+  override def generation: String =
+    try Files.readString(generationFile) catch { case _: java.io.IOException => "" }
 }

@@ -35,6 +35,9 @@ final class GraftServer(
     resolver: TableResolver,
     namedSets: Seq[NamedSet] = Nil,
     flushSecret: Option[String] = None,
+    /** Runs on an authorized /flush before the server reloads its current
+      * schema; a hook that re-reads the schema file swaps it in with
+      * [[reload]]. */
     onFlush: () => Unit = () => (),
     jwtSecret: Option[String] = None,
     /** Logic-layer config (reference logic_layer/config.rs): cube-name
@@ -48,7 +51,8 @@ final class GraftServer(
     llConfigJson: Option[String] = None,
     /** Pre-aggregated summary planners per cube (ordered smallest-first);
       * aggregate requests route through them with base-fact fallback
-      * (graft.plan.Preagg). */
+      * (graft.plan.Preagg). Each schema state memoizes their tables like
+      * the base cube's, so every route of one state reads one snapshot. */
     summaries: Map[String, Seq[CubePlanner]] = Map.empty,
     /** Geoservice sidecar for `neighbors` cut ops on Geo-typed dims
       * (reference TESSERACT_GEOSERVICE_URL → graft.plan.HttpGeoService);
@@ -74,6 +78,9 @@ final class GraftServer(
         * resolved once per state: its files are read as of the start or
         * the last /flush, the same freshness the response cache has. */
       tables: MemoizedResolver,
+      /** The response cache's generation this state was built under: a
+        * /flush elsewhere moves it, and [[current]] then rebuilds. */
+      generation: String,
       planners: Map[String, CubePlanner],
       aggPlanners: Map[String, graft.plan.PreaggPlanner],
       logicLayers: Map[String, LogicLayer],
@@ -117,12 +124,13 @@ final class GraftServer(
       } yield (c.name, dup)
     }.nextOption()
 
-  private def buildState(s: Schema): SchemaState = {
+  private def buildState(s: Schema, generation: String): SchemaState = {
     val tables = new MemoizedResolver(resolver)
     val planners: Map[String, CubePlanner] =
       s.cubes.map(c => c.name -> new CubePlanner(c, tables, geoService)).toMap
+    val summaryPlanners = summaries.map { case (n, ps) => n -> ps.map(_.memoized) }
     val aggPlanners = planners.map { case (n, p) =>
-      n -> new graft.plan.PreaggPlanner(p, summaries.getOrElse(n, Nil))
+      n -> new graft.plan.PreaggPlanner(p, summaryPlanners.getOrElse(n, Nil))
     }
     // one LogicLayer per cube so its member cache persists across requests;
     // the /data surface rides the same summary routing as /aggregate
@@ -131,7 +139,7 @@ final class GraftServer(
       n -> new LogicLayer(p, allNamedSets,
         uniqueNames ++ llConf.map(_.levelNamesFor(n)).getOrElse(Map.empty),
         llConf.map(_.propertyNamesFor(n)).getOrElse(Map.empty),
-        summaries = summaries.getOrElse(n, Nil))
+        summaries = summaryPlanners.getOrElse(n, Nil))
     }
     // fingerprint the COMPLETE schema + config state via case-class
     // toString (recursively includes every field — source columns, tables,
@@ -150,22 +158,54 @@ final class GraftServer(
     val version = java.security.MessageDigest.getInstance("SHA-256")
       .digest(canonical.getBytes(StandardCharsets.UTF_8))
       .take(8).map("%02x".format(_)).mkString
-    SchemaState(s, tables, planners, aggPlanners, logicLayers, llDuplicate(s), version)
+    SchemaState(s, tables, generation, planners, aggPlanners, logicLayers, llDuplicate(s), version)
   }
 
-  @volatile private var state: SchemaState = buildState(schema)
+  @volatile private var state: SchemaState = buildState(schema, responseCache.generation)
 
-  /** Swap in a re-read schema (served by /flush through `onFlush`, or
-    * called directly). In-flight requests keep the state they resolved;
-    * new requests see the new schema. Tables re-resolve and member caches
-    * rebuild lazily; the response cache drops so no stale bodies survive
-    * the swap. */
-  def reload(newSchema: Schema): Unit = { state = buildState(newSchema); cache.clear() }
+  /** Swap in a re-read schema (served by /flush, or called directly).
+    * In-flight requests keep the state they resolved; new requests see the
+    * new schema. Tables re-resolve and member caches rebuild lazily. The
+    * response cache drops first, which moves its generation: bodies that
+    * in-flight requests file afterwards land under the old generation's
+    * keys, so no stale body survives the swap. */
+  def reload(newSchema: Schema): Unit = synchronized {
+    cache.clear()
+    state = buildState(newSchema, cache.generation)
+  }
+
+  /** The state to serve a request from. A cache generation this state was
+    * not built under means another replica sharing the cache ran /flush:
+    * rebuild over the same schema so this replica re-reads its tables too. */
+  private def current(): SchemaState = {
+    val st = state
+    if (st.generation == cache.generation) st
+    else synchronized {
+      val g = cache.generation
+      if (state.generation != g) state = buildState(state.schema, g)
+      state
+    }
+  }
+
+  /** A table rewritten in place (Spark's overwrite deletes the old part
+    * files) fails every plan over the memoized frame with a missing file.
+    * Resolve the tables afresh for `st`'s schema, unless a reload already
+    * replaced `st`. */
+  private def refreshTables(st: SchemaState): SchemaState = synchronized {
+    if (state eq st) state = buildState(st.schema, st.generation)
+    state
+  }
+
+  private def missingFiles(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException])
 
   // NOTE: requests never read the volatile `state` more than once — handle()
   // snapshots it and threads the snapshot through route(), so a /flush
   // landing mid-request cannot mix the old version's cache key with a body
-  // computed under the new schema (or vice versa)
+  // computed under the new schema (or vice versa). The one exception, the
+  // retry over refreshTables, keeps the snapshot's schema unless a reload
+  // intervened, and a reload moves the generation, which orphans the key.
 
   /** JWT auth levels (auth.rs) + LRU response cache (util.rs:152-216). */
   val auth = new Auth(jwtSecret)
@@ -280,9 +320,9 @@ final class GraftServer(
       // the cache key's schema version AND the routing below, so a /flush
       // landing between the two can't file a new-schema body under the old
       // version key (or vice versa)
-      val st = state
+      val st = current()
       val ck = cache.key(path, params - "token") +
-        s"|lvl=${auth.authLevel(token).getOrElse(-1)}|schema=${st.schemaVersion}"
+        s"|lvl=${auth.authLevel(token).getOrElse(-1)}|schema=${st.schemaVersion}|gen=${st.generation}"
       val cached = if (cacheable) cache.get(ck) else None
       cached match {
         case Some((body, ct)) => respond(ex, 200, body, ct)
@@ -301,8 +341,13 @@ final class GraftServer(
               try computeUngated(publish)
               finally admission.release()
             }
+          // a buffered body over a rewritten table is retried once on fresh
+          // tables; a streamed one already sent its headers, so it fails and
+          // only leaves fresh tables for the next request
           def computeUngated(publish: Option[(Int, String, String)] => Unit): Unit =
-            route(path, params, token, st) match {
+            (try route(path, params, token, st)
+             catch { case e: Throwable if missingFiles(e) => route(path, params, token, refreshTables(st)) }
+            ) match {
               case Right(Body(body, contentType)) =>
                 if (cacheable) cache.put(ck, (body, contentType))
                 // publish AFTER the cache put: a thread arriving past the
@@ -318,7 +363,8 @@ final class GraftServer(
                 ex.sendResponseHeaders(200, 0)
                 val w = new java.io.BufferedWriter(
                   new java.io.OutputStreamWriter(ex.getResponseBody, StandardCharsets.UTF_8))
-                Format.write(w, df, fmt, src)
+                try Format.write(w, df, fmt, src)
+                catch { case e: Throwable if missingFiles(e) => refreshTables(st); throw e }
                 w.flush(); w.close()
               case Left((code, msg)) =>
                 val body = "{\"error\":\"" + Format.jsonEscape(msg) + "\"}"
@@ -541,12 +587,11 @@ final class GraftServer(
           // half-swap: reload() only runs on a successfully parsed schema,
           // so the pre-flush state keeps serving — the reference 500s the
           // flush itself and keeps its old shared schema (flush.rs:52-56)
+          // Whatever the hook did, /flush ends with fresh tables: it is
+          // where new files become visible
           try {
-            val before = state
             onFlush()
-            // a hook that swapped nothing (the default) still gets fresh
-            // tables: /flush is where new files become visible
-            if (state eq before) reload(before.schema)
+            reload(state.schema)
             Right(Body("{\"status\":\"flushed\"}", "application/json"))
           }
           catch {

@@ -315,6 +315,36 @@ class PlannerSpec extends AnyFunSuite {
     assert(absent.collect().map(_.toSeq).toSeq == single.collect().map(_.toSeq).toSeq)
   }
 
+  test("two dimensions over one table: memoized frames (one instance joined twice) give the raw reads' rows") {
+    val geo = TpchStar.salesCube.dimension("Geography").get
+    val shipGeo = geo.copy(name = "Ship Geography", dimType = DimensionType.Standard,
+      hierarchies = geo.hierarchies.map(_.copy(name = "Ship Geography")))
+    val cube = TpchStar.salesCube.copy(name = "SalesTwoGeo",
+      dimensions = TpchStar.salesCube.dimensions :+ shipGeo)
+    val memo = new MemoizedResolver(new TpchStar.Resolver(SfDir))
+    val supplierGeo = geo.hierarchies.head.table.get
+    assert(memo.resolve(spark, supplierGeo) eq memo.resolve(spark, supplierGeo))
+    val raw = new CubePlanner(cube, new TpchStar.Resolver(SfDir))
+    val memoized = new CubePlanner(cube, memo)
+    val rca = RcaQuery.parse("Geography.Region,Ship Geography.Nation,Quantity").fold(die, identity)
+    val queries = Seq(
+      CubeQuery(
+        drilldowns = Seq(drill("Geography.Region"), drill("Ship Geography.Nation")),
+        cuts = Seq(cut("Ship Geography.Region.1,2")),
+        measures = Seq(mea("Quantity"), mea("Row Count"))),
+      CubeQuery(measures = Seq(mea("Quantity")), rca = Some(rca)),
+      CubeQuery(
+        drilldowns = Seq(drill("Ship Geography.Region")),
+        cuts = Seq(cut("Geography.Nation.21")),
+        measures = Seq(mea("Quantity"))))
+    for (q <- queries) {
+      def rows(p: CubePlanner) = p.plan(spark, q).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val want = rows(raw)
+      assert(want.nonEmpty, q.toString)
+      assert(rows(memoized) == want, q.toString)
+    }
+  }
+
   test("ApproxDistinct is invariant to the two-pass path (sketch union is lossless)") {
     val single = planner.plan(spark, CubeQuery(
       drilldowns = Seq(drill("Return Flag.Return Flag")),

@@ -45,12 +45,28 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  private def get(pathAndQuery: String): (Int, String) = {
+  private def get(pathAndQuery: String): (Int, String) = getAt(port, pathAndQuery)
+  private def getAt(p: Int, pathAndQuery: String): (Int, String) = {
     val resp = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://localhost:$port$pathAndQuery")).GET().build(),
+      HttpRequest.newBuilder(URI.create(s"http://localhost:$p$pathAndQuery")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
+
+  /** A one-file copy of the fixture's lineitem in a temp dir, and a resolver
+    * that reads the fact from it and every other table from the fixture. */
+  private def lineitemCopy(prefix: String): (java.nio.file.Path, String, graft.plan.TableResolver) = {
+    import graft.sources.{FormatResolver, SourceSpec}
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    val dir = root.resolve("lineitem").toString
+    spark.read.parquet(s"$SfDir/lineitem.parquet").coalesce(1).write.parquet(dir)
+    (root, dir, new FormatResolver(Map("lineitem" -> SourceSpec(dir)), fallbackParquetDir = Some(SfDir)))
+  }
+  /** Row count per return flag, summed from a csv body whose last column is Row Count. */
+  private def rowsIn(body: String): Long =
+    body.linesIterator.drop(1).filter(_.nonEmpty).map(_.split(',').last.toLong).sum
+  private val rowCountQ = "/cubes/Sales/aggregate.csv?drilldowns=Return%20Flag.Return%20Flag" +
+    "&measures=Row%20Count"
 
   test("format-less routes serve the reference defaults (csv / jsonrecords)") {
     val q = "drilldowns=Geography.Region&measures=Quantity"
@@ -510,36 +526,61 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tables are read as of start or the last /flush: appended files show only after /flush") {
-    import graft.sources.{FormatResolver, SourceSpec}
-    val dir = java.nio.file.Files.createTempDirectory("graft_srv_flush").toString + "/lineitem"
+    val (_, dir, resolver) = lineitemCopy("graft_srv_flush")
     val li = spark.read.parquet(s"$SfDir/lineitem.parquet")
-    li.coalesce(1).write.parquet(dir)
     // default no-op onFlush: /flush alone must start fresh tables
-    val srv = new GraftServer(spark, TpchStar.schema,
-      new FormatResolver(Map("lineitem" -> SourceSpec(dir)), fallbackParquetDir = Some(SfDir)),
-      flushSecret = Some("f"))
+    val srv = new GraftServer(spark, TpchStar.schema, resolver, flushSecret = Some("f"))
     val p2 = srv.start()
     try {
-      def g(path: String): (Int, String) = {
-        val resp = client.send(
-          HttpRequest.newBuilder(URI.create(s"http://localhost:$p2$path")).GET().build(),
-          HttpResponse.BodyHandlers.ofString())
-        (resp.statusCode(), resp.body())
-      }
       // stream=true bypasses the response cache, so every call re-plans
-      val q = "/cubes/Sales/aggregate.csv?drilldowns=Return%20Flag.Return%20Flag" +
-        "&measures=Row%20Count&stream=true"
-      def rows(body: String): Long =
-        body.linesIterator.drop(1).filter(_.nonEmpty).map(_.split(',').last.toLong).sum
-      val (c0, before) = g(q)
+      val q = rowCountQ + "&stream=true"
+      val (c0, before) = getAt(p2, q)
       assert(c0 == 200, before)
-      assert(rows(before) == li.count())
+      assert(rowsIn(before) == li.count())
       li.limit(10).coalesce(1).write.mode("append").parquet(dir)
-      assert(g(q) == ((200, before)), "an appended file must not show before /flush")
-      assert(g("/flush?secret=f")._1 == 200)
-      val (c1, after) = g(q)
+      assert(getAt(p2, q) == ((200, before)), "an appended file must not show before /flush")
+      assert(getAt(p2, "/flush?secret=f")._1 == 200)
+      val (c1, after) = getAt(p2, q)
       assert(c1 == 200, after)
-      assert(rows(after) == li.count() + 10, after)
+      assert(rowsIn(after) == li.count() + 10, after)
+    } finally srv.stop()
+  }
+
+  test("one /flush on any replica of a shared cache makes every replica re-read its tables") {
+    val (root, dir, resolver) = lineitemCopy("graft_srv_replicas")
+    val li = spark.read.parquet(s"$SfDir/lineitem.parquet")
+    def replica() = new GraftServer(spark, TpchStar.schema, resolver, flushSecret = Some("f"),
+      responseCache = new SharedFileResponseCache(root.resolve("cache")))
+    val (a, b) = (replica(), replica())
+    val (pa, pb) = (a.start(), b.start())
+    try {
+      val streamed = rowCountQ + "&stream=true" // bypasses the cache: resolves the tables
+      assert(rowsIn(getAt(pa, rowCountQ)._2) == li.count())
+      assert(rowsIn(getAt(pb, streamed)._2) == li.count())
+      li.limit(10).coalesce(1).write.mode("append").parquet(dir)
+      assert(rowsIn(getAt(pb, streamed)._2) == li.count(), "B reads its snapshot until a /flush")
+      assert(getAt(pa, "/flush?secret=f")._1 == 200)
+      for ((p, q) <- Seq(pb -> streamed, pb -> rowCountQ, pa -> rowCountQ)) {
+        val (code, body) = getAt(p, q)
+        assert(code == 200 && rowsIn(body) == li.count() + 10, s"port $p $q: $body")
+      }
+    } finally { a.stop(); b.stop() }
+  }
+
+  test("a table rewritten in place is re-read by the next request, not failed until /flush") {
+    val (_, dir, resolver) = lineitemCopy("graft_srv_overwrite")
+    val li = spark.read.parquet(s"$SfDir/lineitem.parquet")
+    val srv = new GraftServer(spark, TpchStar.schema, resolver)
+    val p2 = srv.start()
+    try {
+      assert(rowsIn(getAt(p2, rowCountQ)._2) == li.count())
+      // Spark's overwrite deletes the part files the memoized frame listed
+      li.limit(100).coalesce(1).write.mode("overwrite").parquet(dir)
+      val uncached = rowCountQ.replace("measures=Row%20Count", "measures=Quantity&measures=Row%20Count")
+      val (code, body) = getAt(p2, uncached)
+      assert(code == 200 && rowsIn(body) == 100, body.take(300))
+      val (sc, sbody) = getAt(p2, uncached + "&stream=true")
+      assert(sc == 200 && rowsIn(sbody) == 100, sbody.take(300))
     } finally srv.stop()
   }
 
