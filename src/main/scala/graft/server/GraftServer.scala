@@ -35,10 +35,10 @@ final class GraftServer(
     resolver: TableResolver,
     namedSets: Seq[NamedSet] = Nil,
     flushSecret: Option[String] = None,
-    /** Runs on an authorized /flush before the server reloads its current
-      * schema; a hook that re-reads the schema file swaps it in with
-      * [[reload]]. */
-    onFlush: () => Unit = () => (),
+    /** Runs on an authorized /flush: maps the current schema to the one
+      * the server reloads (a hook that re-reads the schema file returns
+      * the new schema; the default keeps the current one). */
+    onFlush: Schema => Schema = identity,
     jwtSecret: Option[String] = None,
     /** Logic-layer config (reference logic_layer/config.rs): cube-name
       * aliases for /data, and level → unique display-name renames. */
@@ -586,12 +586,11 @@ final class GraftServer(
           // JSON/XML, validation error) must not take the server down or
           // half-swap: reload() only runs on a successfully parsed schema,
           // so the pre-flush state keeps serving — the reference 500s the
-          // flush itself and keeps its old shared schema (flush.rs:52-56)
-          // Whatever the hook did, /flush ends with fresh tables: it is
-          // where new files become visible
+          // flush itself and keeps its old shared schema (flush.rs:52-56).
+          // One reload per flush, of whatever schema the hook returns:
+          // /flush ends with fresh tables, where new files become visible
           try {
-            onFlush()
-            reload(state.schema)
+            reload(onFlush(state.schema))
             Right(Body("{\"status\":\"flushed\"}", "application/json"))
           }
           catch {

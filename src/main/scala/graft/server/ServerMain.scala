@@ -57,20 +57,18 @@ object ServerMain {
               else SchemaJson.parse(text)
       SchemaJson.validate(s)
     }
-    var server: GraftServer = null
-    server = new GraftServer(
+    new GraftServer(
       spark,
       readSchema(),
       new FormatResolver(Map.empty, fallbackParquetDir = Some(dataDir)),
       flushSecret = flushSecret,
       // /flush re-reads the schema file and swaps it atomically
-      onFlush = () => server.reload(readSchema()),
+      onFlush = _ => readSchema(),
       jwtSecret = jwtSecret,
       llConfigJson = llConfigPath.map(p => Files.readString(Paths.get(p))),
       geoService = geoserviceUrl.map(new graft.plan.HttpGeoService(_)),
       responseCache = cacheDir.fold[ResponseCache](new LruResponseCache())(
         d => new SharedFileResponseCache(Paths.get(d))))
-    server
   }
 
   /** `GRAFT_ADDRESS` as (host, port), split on the LAST `:` so an IPv6

@@ -95,8 +95,8 @@ object IncrementalCc {
 
   /** Bounded-collect gate shared by the driver-composed path's probes:
     * at most this many retired ids / new-pair rows may reach the driver;
-    * past it the distributed body runs. Same bound as the classifier's
-    * round-17 InSet probe. */
+    * past it [[refresh]] rebuilds from scratch. Same bound as the
+    * classifier's round-17 InSet probe. */
   private[graft] val DriverBound: Int = 1 << 16
 
   /** Advance the maintained labels. `labels` (node, label) and
@@ -104,37 +104,42 @@ object IncrementalCc {
     * state; `retiredIds` (doc_id) and `newPairs` (doc_a, doc_b) are
     * delta-sized. All outputs are localCheckpoint-pinned (they are
     * rewrite-size, and each feeds both the state write and the
-    * verdict).
+    * verdict). New pairs with a NULL endpoint are off-contract and
+    * dropped at entry, so both routes see the same pairs.
     *
-    * Round 18: when BOTH delta sides fit the driver bound (the common
+    * Two routes. When BOTH delta sides fit `driverBound` (the common
     * case — the same limit(bound+1) gate the CC driver tails use) and
-    * ids are int64, the whole contraction/classification — cid lookup,
-    * contracted CC + forest, group classification, forest-edge picks —
-    * runs AS DRIVER CODE over the collected delta, and only the
-    * corpus-shaped scans (the touched-edge classifier, two labels scans,
-    * the classified-membership checkpoint) stay distributed. The
-    * round-16 job census showed the refresh floor was ~80 async
-    * broadcast-exchange builds per bump (~65 ms of driver scheduling
-    * each, scale-INDEPENDENT): every delta×delta join and every
-    * delta-frame checkpoint was its own SQL execution rebuilding its
-    * broadcasts. The driver-composed path deletes that class outright —
-    * delta-sized frames never exist as plans, so there is nothing to
-    * broadcast — while every surviving distributed operation is a single
-    * InSet-filtered scan. An over-bound delta (or non-int64 ids, or
-    * `driverRefresh = false`) keeps the distributed body verbatim.
+    * ids are int64, [[refreshDriver]] runs the whole
+    * contraction/classification — cid lookup, contracted CC + forest,
+    * group classification, forest-edge picks — AS DRIVER CODE over the
+    * collected delta, and only the corpus-shaped scans (the touched-edge
+    * classifier, two labels scans, the classified-membership checkpoint)
+    * stay distributed. The round-16 job census showed the refresh floor
+    * was ~80 async broadcast-exchange builds per bump (~65 ms of driver
+    * scheduling each, scale-INDEPENDENT): every delta×delta join and
+    * every delta-frame checkpoint was its own SQL execution rebuilding
+    * its broadcasts. The driver-composed route deletes that class
+    * outright — delta-sized frames never exist as plans.
+    *
+    * Any other delta (over the bound, or non-int64 ids) takes
+    * [[rebuild]]: a delta that large touches a large part of the graph,
+    * so one from-scratch [[initial]] over the folded pairs — the
+    * computation the rebuild verdict is checked against — replaces the
+    * whole state.
     *
     * `forestEdgeBound` is every inner CC's driver-tail bound
     * ([[PipelineOps.ccWithForest]]; 0 forces the distributed Borůvka
-    * forest). Specs vary it and `driverRefresh` to drive each path;
-    * production runs the defaults. */
-  def refresh(
+    * forest). Specs vary it and `driverBound` (0 forces the rebuild
+    * route) to drive each path; production runs the defaults. */
+  private[graft] def refresh(
       labels: DataFrame,
       labeledPairs: DataFrame,
       retiredIds: DataFrame,
       newPairs: DataFrame,
       forestEdgeBound: Long = PipelineOps.ForestEdgeBound,
-      driverRefresh: Boolean = true): LabelDelta = {
+      driverBound: Int = DriverBound): LabelDelta = {
     import org.apache.spark.sql.types.LongType
+    val pairsNN = newPairs.where(col("doc_a").isNotNull && col("doc_b").isNotNull)
     val longIds =
       Seq("node", "label").forall(c => labels.schema(c).dataType == LongType) &&
       Seq("doc_a", "doc_b", "elabel")
@@ -148,9 +153,9 @@ object IncrementalCc {
     // (measured: production CDC bump 2.5× SLOWER under overlapped
     // probes, while every component phase stayed flat).
     // bounded probe of the retired set (one job): emptiness, the bound
-    // check, the InSet values, and the driver-path gate all come from it
+    // check, the InSet values, and the route gate all come from it
     val rProbe = retiredIds.select(col("doc_id").as("node")).distinct()
-      .limit(DriverBound + 1).collect().map(_.get(0)).toSeq
+      .limit(driverBound + 1).collect().map(_.get(0)).toSeq
     // The state contract (non-null node ids) is enforced here, where it is
     // free — the rows are already on the driver. A NULL in the IN-list
     // poisons every membership probe below (three-valued logic turns each
@@ -159,29 +164,51 @@ object IncrementalCc {
     require(!rProbe.contains(null),
       "IncrementalCc state contract violated: NULL doc_id in the retired set")
     val npProbe: Option[Array[(Long, Long)]] =
-      if (!driverRefresh || !longIds || rProbe.length > DriverBound) None
+      if (!longIds || rProbe.length > driverBound) None
       else {
-        val rows = newPairs.select(col("doc_a"), col("doc_b"))
-          .limit(DriverBound + 1).collect()
-        // null-keyed pairs (off-contract) keep the distributed body's
-        // join semantics rather than guessing a driver equivalent
-        if (rows.length > DriverBound || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+        val rows = pairsNN.select(col("doc_a"), col("doc_b"))
+          .limit(driverBound + 1).collect()
+        if (rows.length > driverBound) None
         else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
       }
     npProbe match {
       case Some(np) =>
         refreshDriver(labels, labeledPairs,
           rProbe.map(_.asInstanceOf[Long]).toArray, np, forestEdgeBound)
-      case None => refreshDistributed(labels, labeledPairs, retiredIds, newPairs, rProbe,
-        forestEdgeBound)
+      case None => rebuild(labels, labeledPairs, retiredIds, pairsNN, forestEdgeBound)
     }
+  }
+
+  /** The rebuild route: [[initial]] over the folded pairs (surviving
+    * edges plus the new ones), returned as a full replacement — every
+    * current membership and every edge epoch leaves, `initial`'s output
+    * enters. `pairsOut` carries every current elabel as well as the
+    * memberships, so the fold drops every old edge row even if some
+    * stamp were off the elabel invariant. Type-generic. */
+  private def rebuild(
+      labels: DataFrame,
+      labeledPairs: DataFrame,
+      retiredIds: DataFrame,
+      newPairs: DataFrame,
+      forestEdgeBound: Long): LabelDelta = {
+    val r = retiredIds.select(col("doc_id").as("node")).distinct()
+    val folded = labeledPairs
+      .join(r.select(col("node").as("doc_a")), Seq("doc_a"), "left_anti")
+      .join(r.select(col("node").as("doc_b")), Seq("doc_b"), "left_anti")
+      .select(col("doc_a"), col("doc_b"))
+      .unionByName(newPairs.select(col("doc_a"), col("doc_b")))
+      .distinct()
+    val (labelsIn, pairsIn) = initial(folded, forestEdgeBound)
+    val labelsOut = labels.select(col("node")).unionByName(r).distinct().pinned(false)
+    val pairsOut = labelsOut
+      .unionByName(labeledPairs.select(col("elabel").as("node")))
+      .distinct().pinned(false)
+    LabelDelta(labelsOut, labelsIn.pinned(false), pairsIn.pinned(false), pairsOut)
   }
 
   /** The driver-composed refresh: delta-sized algebra as plain Scala over
     * the collected delta, corpus-shaped work as three InSet-filtered scans
-    * + the classified-membership checkpoint. Exactly [[refreshDistributed]]'s
-    * outputs (IncrementalCcFuzzSpec pins row-for-row parity across the
-    * fuzz chains). */
+    * + the classified-membership checkpoint. */
   private def refreshDriver(
       labels: DataFrame,
       labeledPairs: DataFrame,
@@ -206,17 +233,16 @@ object IncrementalCc {
           org.apache.spark.sql.graft.ColumnBridge.expression(c),
           vs.iterator.map(x => x: Any).toSet))
     def inR(c: org.apache.spark.sql.Column) = inLongs(c, rVals.toSeq)
-    // the distributed antiR's NULL-keeps spelled the same way (doc ids are
-    // non-null by contract; the isNull arm keeps off-contract rows rather
-    // than silently dropping them through NOT-IN three-valued logic)
+    // left_anti semantics as an InSet (doc ids are non-null by contract;
+    // the isNull arm keeps off-contract rows rather than silently dropping
+    // them through NOT-IN three-valued logic)
     def antiR(df: DataFrame, c: String): DataFrame =
       if (rVals.isEmpty) df else df.where(col(c).isNull || !inR(col(c)))
 
     // ---- classify deletion-touched components (ONE edge-state scan) --
     // forest-degree, retired-retired forest adjacency, and elabel stamps
     // as driver maps: a tagged explode computes all three views in one
-    // pass where the distributed form kept a checkpoint + three filter
-    // subtrees (output is ≤ 3|retired| aggregated rows). Runs OVERLAPPED
+    // pass (output is ≤ 3|retired| aggregated rows). Runs OVERLAPPED
     // with the labels lookup below — the two scans touch different state
     // tables and depend only on the already-collected delta.
     import scala.concurrent.{Await, Future}
@@ -291,9 +317,9 @@ object IncrementalCc {
       .filter(e => e._3 != e._4)
       .map(e => (math.min(e._3, e._4), math.max(e._3, e._4)))
       .toArray.distinct.sorted
-    // ccWithForest's driver tail over the canonical contracted edges, so
-    // the contracted labels/forest match what the distributed body's
-    // ccWithForest(cInter) would produce
+    // ccWithForest's driver tail over the canonical (sorted, distinct)
+    // contracted edges: component-minimum labels and an ascending-walk
+    // forest, whatever order the delta rows arrived in
     val (cUf, cForestSeq) = PipelineOps.driverForest(cInter)
     val cForest: Set[(Long, Long)] = cForestSeq.toSet
     def glabelOf(c: Long): Long = cUf.labelOf(c)
@@ -304,8 +330,7 @@ object IncrementalCc {
     // a seed WITNESSED as an existing label by the rows just collected
     // provably has membership rows; only fallback cids (endpoints with no
     // live membership) need the scan below to decide "has membership
-    // rows" — the freshness test the distributed body answered through
-    // memberCls' distinct labels
+    // rows"
     val witnessed: Set[Long] = (liveLabel.values ++ retLabel.values).toSet
     val fallbackSeeds: Array[Long] = seeds.filterNot(witnessed)
     // keptBig counts + fallback label-presence in ONE labels scan
@@ -448,8 +473,7 @@ object IncrementalCc {
       .filter(c => !witnessed(c) && ntot.getOrElse(c, 0L) == 0L && cUf.contains(c))
       .map(c => (c, glabelOfSeed(c))).toSeq
     // forest-edge pick per contracted pair: the lexicographically first
-    // (doc_a, doc_b) — the rk=1 row of the distributed window — flagged
-    // once even under duplicate delta rows
+    // (doc_a, doc_b), flagged once even under duplicate delta rows
     val repOf = scala.collection.mutable.Map.empty[(Long, Long), (Long, Long)]
     cEdges.foreach { e =>
       val k = (math.min(e._3, e._4), math.max(e._3, e._4))
@@ -482,277 +506,6 @@ object IncrementalCc {
       .unionByName(mergeMembers.select("node"))
       .distinct().pinnedNC()
     // not pinned: a bare projection of the already-pinned memberCls
-    val pairsOut = alRebuild.select("node")
-    LabelDelta(labelsOut, labelsIn, pairsIn, pairsOut)
-  }
-
-  /** The distributed refresh body — the over-bound / non-int64 /
-    * forced-off path, verbatim the round-17 shape. */
-  private def refreshDistributed(
-      labels: DataFrame,
-      labeledPairs: DataFrame,
-      retiredIds: DataFrame,
-      newPairs: DataFrame,
-      rProbe: Seq[Any],
-      forestEdgeBound: Long): LabelDelta = {
-    val r = retiredIds.select(col("doc_id").as("node")).distinct().pinned(false)
-    val rA = r.select(col("node").as("doc_a"))
-    val rB = r.select(col("node").as("doc_b"))
-
-    // ---- classify deletion-touched components ------------------------
-    // The classifier needs three views of how retired nodes sit in the
-    // edge state: forest-degree, retired-retired forest adjacency, and
-    // elabel stamps. A delta-sized retired set collects to an InSet
-    // predicate so ONE edge-state scan feeds all three (the predicate is
-    // a per-row hash probe — scan-shaped at any corpus size); a delta too
-    // large to collect falls back to three broadcast semi-join scans.
-    // The collect is bounded by the same limit(bound+1) gate the CC
-    // driver tails use: at most 2^16+1 rows ever reach the driver —
-    // emptiness, the bound check, and the InSet values all come from the
-    // one probe, and an over-bound retired set never materializes here.
-    // [[refresh]]'s gate probe already ran that exact collect (and its
-    // NULL contract check) — reuse it instead of re-scanning the delta
-    // on precisely the path chosen for being expensive.
-    val rVals = rProbe
-    // Retired-set membership as driver-side predicates (round 17): when
-    // the delta fits the driver bound (the common case — the same rows
-    // the classifier already collected), every semi/anti join against the
-    // tiny pinned r becomes an InSet probe — a per-row hash test with NO
-    // broadcast exchange. The joins it replaces each rebuilt their
-    // broadcast in EVERY consuming checkpoint's execution (exchange reuse
-    // does not span SQL executions; the round-16 job census showed those
-    // async builds are the refresh's fixed per-bump floor). The empty
-    // delta short-circuits to limit(0)/identity, and an over-bound delta
-    // keeps the broadcast-join form. The predicates are EXACT join
-    // equivalents even off-contract: a NULL probe never matches a semi
-    // build side (IN yields NULL → dropped, same as left_semi) and is
-    // KEPT by left_anti — antiR spells that out (`isNull ||`) so NOT-IN's
-    // three-valued logic can never silently drop a NULL-keyed row.
-    val rSmall = rVals.length <= (1 << 16)
-    def inR(c: org.apache.spark.sql.Column) = c.isin(rVals: _*)
-    def semiR(df: DataFrame, c: String): DataFrame =
-      if (rVals.isEmpty) df.limit(0)
-      else if (rSmall) df.where(inR(col(c)))
-      else df.join(r.select(col("node").as(c)), Seq(c), "left_semi")
-    def antiR(df: DataFrame, c: String): DataFrame =
-      if (rVals.isEmpty) df
-      else if (rSmall) df.where(col(c).isNull || !inR(col(c)))
-      else df.join(r.select(col("node").as(c)), Seq(c), "left_anti")
-    val (fdeg, adjacent, elabelHit) =
-      if (rVals.isEmpty) {
-        val e = r.select(col("node"))
-        (e.withColumn("fd", lit(1L)).limit(0), e.limit(0), e.limit(0))
-      } else {
-        if (rSmall) {
-          val touched = labeledPairs
-            .where(inR(col("doc_a")) || inR(col("doc_b")) || inR(col("elabel")))
-            .pinned(false)
-          val f = touched.where(col("in_forest"))
-          (f.where(inR(col("doc_a"))).select(col("doc_a").as("node"))
-             .unionByName(f.where(inR(col("doc_b"))).select(col("doc_b").as("node")))
-             .groupBy("node").agg(count(lit(1)).as("fd")),
-           f.where(inR(col("doc_a")) && inR(col("doc_b")))
-             .select(col("doc_a").as("node")),
-           touched.where(inR(col("elabel")))
-             .select(col("elabel").as("node")).distinct())
-        } else {
-          val forest = labeledPairs.where(col("in_forest"))
-          (forest.join(rA, Seq("doc_a"), "left_semi")
-             .select(col("doc_a").as("node"))
-             .unionByName(forest.join(rB, Seq("doc_b"), "left_semi")
-               .select(col("doc_b").as("node")))
-             .groupBy("node").agg(count(lit(1)).as("fd")),
-           forest.join(rA, Seq("doc_a"), "left_semi")
-             .join(rB, Seq("doc_b"), "left_semi")
-             .select(col("doc_a").as("node")),
-           labeledPairs
-             .join(r.select(col("node").as("elabel")), Seq("elabel"), "left_semi")
-             .select(col("elabel").as("node")).distinct())
-        }
-      }
-    val leaves = fdeg.where(col("fd") === 1).select("node")
-    val retiredInGraph = semiR(labels, "node").pinned(false)
-    // unsafe = not a certified leaf (over-degree, no forest coverage),
-    // forest-adjacent to another retired node (removing both could
-    // orphan the subtree between them), or carried as an EPOCH STAMP on
-    // some edge (elabels are member nodes — the current label always,
-    // older merged-in labels too — and dropping a stamped node from
-    // labels would uncover those edges from the next bump's
-    // affected-edge selection)
-    val unsafeNodes = retiredInGraph.select("node")
-      .join(leaves, Seq("node"), "left_anti")
-      .unionByName(adjacent)
-      .unionByName(elabelHit)
-    // a deletion-touched component shrunk to ≤1 remaining member has no
-    // edges left, and an edge-less survivor must DROP from labels like
-    // any isolated node (labels ≡ CC-over-edges is the state contract) —
-    // only the rebuild path drops memberships, so route it there
-    val delLabels = retiredInGraph.select("label").distinct()
-    val keptBig = antiR(labels.join(delLabels, Seq("label"), "left_semi"), "node")
-      .groupBy("label").agg(count(lit(1)).as("nrem"))
-      .where(col("nrem") > 1).select("label")
-    val collapsed = delLabels.join(keptBig, Seq("label"), "left_anti")
-    val rebuildDelLabels = labels.join(unsafeNodes.distinct(), Seq("node"), "left_semi")
-      .select("label")
-      .unionByName(collapsed)
-      .distinct()
-
-    // ---- contract the delta's new edges over current components ------
-    // a retired node re-entering through new pairs is a FRESH node (its
-    // old membership is dead), so the contraction maps through the
-    // retired-free labels view
-    val liveLabels = antiR(labels, "node")
-    val endNodes = newPairs.select(col("doc_a").as("node"))
-      .unionByName(newPairs.select(col("doc_b").as("node"))).distinct()
-    // right-outer with the DELTA side broadcast: a left-outer from
-    // endNodes would have to build (shuffle) the corpus-sized labels
-    val cidOf = liveLabels
-      .join(broadcast(endNodes), Seq("node"), "right_outer")
-      .select(col("node"), coalesce(col("label"), col("node")).as("cid"))
-      .pinned(false)
-    val cEdges = newPairs
-      .join(cidOf.select(col("node").as("doc_a"), col("cid").as("ca")), "doc_a")
-      .join(cidOf.select(col("node").as("doc_b"), col("cid").as("cb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("ca"), col("cb"))
-      .pinned(false)
-    // contracted component per cid (delta-sized CC; self-edges drop out),
-    // plus a spanning forest of the contraction so each merge adds
-    // exactly the connecting edges to the certificate
-    // not pinned: single consumer — ccWithForest's bounded probe collects
-    // it once (and the above-bound path truncates lineage itself), so a
-    // checkpoint here is one materialization job of pure overhead
-    val cInter = cEdges.where(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("ca"), greatest(col("ca"), col("cb")).as("cb"))
-      .distinct()
-    val (cLabels, cForest) = PipelineOps.ccWithForest(cInter, forestEdgeBound)
-    // groupOf: cid -> merged group label (itself when untouched by merges).
-    // Seeded with BOTH the new-edge endpoints' cids and every
-    // deletion-touched component's label, so a deletion-only component is
-    // its own singleton group (and can reach the rebuild bucket below).
-    val groupOf = cidOf.select(col("cid"))
-      .unionByName(retiredInGraph.select(col("label").as("cid")))
-      .distinct()
-      .join(cLabels.select(col("node").as("cid"), col("label").as("glabel")), Seq("cid"), "left")
-      .select(col("cid"), coalesce(col("glabel"), col("cid")).as("glabel"))
-
-    // ONE classification frame replaces the round-15 groupOf/rebuildGroups
-    // /rebuildCids/relabelCids pin chain (four checkpoints, each its own
-    // SQL execution with its own broadcast builds — the round-16 job
-    // census showed those builds ARE the per-bump fixed floor):
-    // cid -> (glabel, n = group size, rb = group contains a component
-    // forced to rebuild by an unsafe deletion). Every bucket below is a
-    // FILTER of this checkpoint.
-    val cidU = groupOf
-      .join(rebuildDelLabels.select(col("label").as("cid"), lit(1).as("u"))
-        .distinct(), Seq("cid"), "left")
-      .select(col("cid"), col("glabel"), coalesce(col("u"), lit(0)).as("u"))
-    val cidFull = cidU
-      .join(cidU.groupBy("glabel").agg(count(lit(1)).as("n"), max(col("u")).as("rb")),
-        Seq("glabel"))
-      .select(col("cid"), col("glabel"), col("n"), col("rb"))
-      .pinned(false)
-    // rebuild group/cid sets: groups containing an unsafe deletion.
-    // relabel set: merge groups of ≥2 cids minus the rebuild groups —
-    // their edges are NOT touched, elabels go stale-but-covered (still
-    // member nodes). No labels-existence filter here: a fresh cid simply
-    // matches no membership row in the inner join below, so the old
-    // corpus-wide labels.distinct() semi-join bought nothing.
-    val rebuildCids = cidFull.where(col("rb") === 1).select("cid")
-
-    // ---- the three buckets -------------------------------------------
-    // memberships of every classified component in ONE labels scan (the
-    // round-15 shape scanned labels once per bucket): rebuilt components
-    // rewrite fully, merged components relabel by contraction alone
-    val memberCls = labels
-      .join(cidFull.select(col("cid").as("label"), col("n"), col("rb")), "label")
-      .select(col("node"), col("label"), col("n"), col("rb"))
-      .pinned(false)
-    val alRebuild = memberCls.where(col("rb") === 1).select(col("node"), col("label"))
-    val mergeMembers = memberCls.where(col("rb") === 0 && col("n") > 1)
-      .select(col("node"), col("label"))
-
-    // rebuild bucket: the groups' surviving old edges (selected by
-    // MEMBERSHIP as the epoch key — elabels may be any member node) +
-    // their new pairs; one CC + fresh forest over real edges. When
-    // nothing is unsafe (the common case the certificate exists for)
-    // the whole bucket short-circuits — no edge-state scan, no CC.
-    val (rbLabelsP, rbPairs) =
-      if (rebuildCids.isEmpty)
-        (labels.limit(0), labeledPairs.select(PairCols.map(col): _*).limit(0))
-      else {
-        val rebuildOld = antiR(antiR(labeledPairs
-          .join(alRebuild.select(col("node").as("elabel")), Seq("elabel"), "left_semi"),
-          "doc_a"), "doc_b")
-          .select(col("doc_a"), col("doc_b"))
-        val rebuildNew = cEdges
-          .join(rebuildCids.select(col("cid").as("ca")), Seq("ca"), "left_semi")
-          .select(col("doc_a"), col("doc_b"))
-        val rebuildEdges = rebuildOld.unionByName(rebuildNew).distinct().pinned(false)
-        val (rbLabels, rbForest) = PipelineOps.ccWithForest(rebuildEdges, forestEdgeBound)
-        val rbl = rbLabels.pinned(false)
-        val rbp = rebuildEdges
-          .join(rbl.select(col("node").as("doc_a"), col("label").as("elabel")), "doc_a")
-          .join(rbForest.select(col("doc_a"), col("doc_b"), lit(true).as("in_forest")),
-            Seq("doc_a", "doc_b"), "left")
-          .select(col("doc_a"), col("doc_b"), col("elabel"),
-            coalesce(col("in_forest"), lit(false)).as("in_forest"))
-        (rbl, rbp)
-      }
-
-    // merge bucket: relabel MEMBERSHIPS of merged components to the group
-    // label by contraction alone — no connectivity over real edges, no
-    // edge rewrite. A filter of the pinned classification, not its own pin.
-    val mergeGroupOf = cidFull.where(col("rb") === 0).select(col("cid"), col("glabel"))
-    // members relabel EXCLUDING retired ones: a changed doc is retired
-    // from its old component AND re-enters as a fresh contracted node, so
-    // without the anti-join it would earn two labels rows (one here, one
-    // from the fresh bucket)
-    val mgLabels = antiR(mergeMembers, "node")
-      .join(mergeGroupOf.select(col("cid").as("label"), col("glabel")), "label")
-      .select(col("node"), col("glabel").as("label"))
-    // fresh nodes (cids with no membership row) that actually CONNECTED
-    // (appear in the contraction's labeling): label with their group;
-    // fresh singletons with only self-pairs never arise (doc_a != doc_b).
-    // "Has a membership row" is answered by the classified-members
-    // checkpoint — every existing classified cid appears there — instead
-    // of the round-15 corpus-wide labels.distinct() shuffle.
-    val mgFreshLabels = mergeGroupOf
-      .join(memberCls.select(col("label").as("cid")).distinct(), Seq("cid"), "left_anti")
-      .join(cLabels.select(col("node").as("cid")), Seq("cid"), "left_semi")
-      .select(col("cid").as("node"), col("glabel").as("label"))
-    // the delta's non-rebuild new edges: stamped with the group label;
-    // in_forest = this edge was chosen by the contraction's forest (one
-    // concrete edge per contracted forest edge)
-    val cForestPick = cEdges
-      .join(cForest.select(
-          least(col("ca"), col("cb")).as("ca2"), greatest(col("ca"), col("cb")).as("cb2"),
-          lit(true).as("cf")),
-        least(col("ca"), col("cb")) === col("ca2") &&
-          greatest(col("ca"), col("cb")) === col("cb2"), "left")
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(least(col("ca"), col("cb")), greatest(col("ca"), col("cb")))
-          .orderBy(col("doc_a"), col("doc_b"))))
-      .withColumn("in_forest",
-        coalesce(col("cf"), lit(false)) && col("rk") === 1 && col("ca") =!= col("cb"))
-    val mgNewPairs = cForestPick
-      .join(mergeGroupOf.select(col("cid").as("ca"), col("glabel")), "ca")
-      .select(col("doc_a"), col("doc_b"), col("glabel").as("elabel"), col("in_forest"))
-
-    val labelsIn = rbLabelsP.select(col("node"), col("label"))
-      .unionByName(mgLabels).unionByName(mgFreshLabels)
-      .pinned(false)
-    val pairsIn = rbPairs.unionByName(mgNewPairs)
-      .select(PairCols.map(col): _*).pinned(false)
-    // labelsOut: every retired node's membership row, plus the rebuilt
-    // AND merged components' memberships (re-entering via labelsIn);
-    // pairsOut: only the REBUILT memberships — merged components keep
-    // their edge rows, stale elabels covered by the retained membership
-    val labelsOut = r.unionByName(alRebuild.select("node"))
-      .unionByName(mergeMembers.select("node"))
-      .distinct().pinned(false)
-    // not pinned: a bare projection of the already-pinned alRebuild —
-    // every consumer re-reads the checkpoint, never the upstream plan
     val pairsOut = alRebuild.select("node")
     LabelDelta(labelsOut, labelsIn, pairsIn, pairsOut)
   }

@@ -583,30 +583,19 @@ object IngestBump {
     val pd = DedupStream.discoverPairs(batchDocs,
       Some(m("grams").join(retired, Seq("doc_id"), "left_anti")))
     val ld = IncrementalCc.refresh(m("labels"), m("pairs"), retired, pd.newPairs)
-    if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery) {
-      val out = ld.labelsOut.select(col("node"))
-      StateStore.save(dir, Map(
-        "grams" -> m("grams").join(retired, Seq("doc_id"), "left_anti")
-          .unionByName(pd.newGrams),
-        "pairs" -> m("pairs")
-          .join(retired.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-          .join(retired.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
-          .join(ld.pairsOut.select(col("node").as("elabel")), Seq("elabel"), "left_anti")
-          .unionByName(ld.pairsIn),
-        "labels" -> m("labels").join(out, Seq("node"), "left_anti")
-          .unionByName(ld.labelsIn),
-        "survhash" -> fullSurvhash, "livelog" -> livelog), TextPartitions)
-    } else
-      StateStore.saveDelta(dir, Map(
-        "retired" -> retired, "departed" -> departed,
-        "labelsOut" -> ld.labelsOut, "pairsOut" -> ld.pairsOut,
-        "labelsIn" -> ld.labelsIn,
-        "grams" -> pd.newGrams, "pairs" -> ld.pairsIn,
-        "survhash" -> batchSurvhash, "livelog" -> logDelta), TextPartitions)
-    val labelsView = m("labels")
-      .join(ld.labelsOut.select(col("node")), Seq("node"), "left_anti")
-      .unionByName(ld.labelsIn)
-    DedupStream.verdictFromLabels(survProj, livelog, labelsView)
+    val delta = Map(
+      "retired" -> retired, "departed" -> departed,
+      "labelsOut" -> ld.labelsOut, "pairsOut" -> ld.pairsOut,
+      "labelsIn" -> ld.labelsIn,
+      "grams" -> pd.newGrams, "pairs" -> ld.pairsIn,
+      "survhash" -> batchSurvhash, "livelog" -> logDelta)
+    // the state this bump leaves: the chain fold applied to one more delta
+    val folded = DedupStream.foldPairChain(m, Seq(delta))
+    if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
+      StateStore.save(dir,
+        folded ++ Map("survhash" -> fullSurvhash, "livelog" -> livelog), TextPartitions)
+    else StateStore.saveDelta(dir, delta, TextPartitions)
+    DedupStream.verdictFromLabels(survProj, livelog, folded("labels"))
       .pinned(false)
   }
 

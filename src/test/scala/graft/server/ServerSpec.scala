@@ -511,7 +511,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // its old shared schema)
     val failing = new GraftServer(spark, TpchStar.schema, new TpchStar.Resolver(SfDir),
       flushSecret = Some("s"),
-      onFlush = () => throw new RuntimeException("schema parse failed: unexpected token"))
+      onFlush = _ => throw new RuntimeException("schema parse failed: unexpected token"))
     val p3 = failing.start()
     try {
       val (code, body) = getFrom(p3, "/flush?secret=s")

@@ -68,12 +68,34 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
     driveChains(Seq(7L, 23L, 91L))
   }
 
-  test("the same chains through the DISTRIBUTED refresh body (driver-composed path forced off)") {
-    driveChains(Seq(7L, 23L), driverRefresh = false)
+  test("the same chains through the rebuild route (driverBound 0): each step's state ≡ initial over the folded pairs") {
+    driveChains(Seq(7L, 23L), driverBound = 0, rebuildOracle = true)
   }
 
-  test("driver-composed refresh ≡ distributed refresh: delta parity row-for-row across the chains") {
-    driveChains(Seq(7L, 23L, 91L), parity = true)
+  test("the same chains with driverBound 2: the driver and rebuild routes interleave over each other's state") {
+    val rebuilt = driveChains(Seq(91L), driverBound = 2)
+    assert(rebuilt.contains(true) && rebuilt.contains(false),
+      s"expected both routes, got ${rebuilt.mkString(",")}")
+  }
+
+  test("a NULL-keyed new pair is dropped at entry: the same delta as without it, on both routes") {
+    val (l0, p0) = IncrementalCc.initial(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"))
+    val labels = l0.localCheckpoint(true)
+    val pairs = p0.localCheckpoint(true)
+    val retired = Seq(3L).toDF("doc_id")
+    val np = Seq((Option(4L), Option(1L)), (Option(11L), Option(20L))).toDF("doc_a", "doc_b")
+    val npNull = np.unionByName(
+      Seq((Option.empty[Long], Option(2L)), (Option(5L), Option.empty[Long]))
+        .toDF("doc_a", "doc_b"))
+    for (bound <- Seq(IncrementalCc.DriverBound, 0)) {
+      val d = IncrementalCc.refresh(labels, pairs, retired, np, driverBound = bound)
+      val dn = IncrementalCc.refresh(labels, pairs, retired, npNull, driverBound = bound)
+      for ((name, a, b) <- Seq(("labelsOut", d.labelsOut, dn.labelsOut),
+          ("labelsIn", d.labelsIn, dn.labelsIn), ("pairsIn", d.pairsIn, dn.pairsIn),
+          ("pairsOut", d.pairsOut, dn.pairsOut)))
+        assert(rowImage(a) == rowImage(b), s"$name diverged under driverBound $bound")
+    }
   }
 
   test("the same chains over the DISTRIBUTED Borůvka forest path (driver tail forced off)") {
@@ -86,18 +108,18 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
     driveChains(Seq(7L), forestEdgeBound = 4L)
   }
 
-  /** With `parity`, every step ALSO computes the distributed body's delta
-    * on identical inputs and asserts all four LabelDelta components match
-    * the driver-composed ones row-for-row (duplicates included — the state
-    * fold is multiset-sensitive). The chain itself advances on the
-    * driver-composed outputs, so the invariants keep gating those.
-    * `forestEdgeBound` and `driverRefresh` pass through to every
-    * [[IncrementalCc.initial]]/[[IncrementalCc.refresh]] call. */
+  /** `forestEdgeBound` and `driverBound` pass through to every
+    * [[IncrementalCc.initial]]/[[IncrementalCc.refresh]] call. With
+    * `rebuildOracle`, every folded step must ALSO equal [[IncrementalCc
+    * .initial]] over its folded pairs row for row (labels and labeled
+    * pairs, forest flags included). Returns, per step, whether the delta
+    * exceeded `driverBound` (the rebuild route's gate). */
   private def driveChains(
       seeds: Seq[Long],
-      parity: Boolean = false,
       forestEdgeBound: Long = PipelineOps.ForestEdgeBound,
-      driverRefresh: Boolean = true): Unit = {
+      driverBound: Int = IncrementalCc.DriverBound,
+      rebuildOracle: Boolean = false): Seq[Boolean] = {
+    val rebuilt = Seq.newBuilder[Boolean]
     for (seed <- seeds) {
       val rnd = new scala.util.Random(seed)
       var nextId = 1000L
@@ -160,22 +182,21 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
         }
         val retired = retiredIds.toDF("doc_id").localCheckpoint(true)
         val np = newEdges.result().distinct.toDF("doc_a", "doc_b").localCheckpoint(true)
-        val d = IncrementalCc.refresh(labels, pairs, retired, np, forestEdgeBound, driverRefresh)
-        if (parity) {
-          val d2 = IncrementalCc.refresh(labels, pairs, retired, np, forestEdgeBound,
-            driverRefresh = false)
-          val ctx = s"seed $seed step $step (retired ${retiredIds.mkString(",")};" +
-            s" new ${newEdges.result().mkString(",")})"
-          assert(rowImage(d.labelsOut) == rowImage(d2.labelsOut), s"labelsOut diverged at $ctx")
-          assert(rowImage(d.labelsIn) == rowImage(d2.labelsIn), s"labelsIn diverged at $ctx")
-          assert(rowImage(d.pairsIn) == rowImage(d2.pairsIn), s"pairsIn diverged at $ctx")
-          assert(rowImage(d.pairsOut) == rowImage(d2.pairsOut), s"pairsOut diverged at $ctx")
-        }
+        val d = IncrementalCc.refresh(labels, pairs, retired, np, forestEdgeBound, driverBound)
+        rebuilt += (retiredIds.distinct.length > driverBound ||
+          newEdges.result().distinct.length > driverBound)
         val (nl, nps) = fold(labels, pairs, retired, d)
         labels = nl; pairs = nps
-        assertInvariants(labels, pairs, s"seed $seed step $step " +
-          s"(retired ${retiredIds.mkString(",")}; new ${newEdges.result().mkString(",")})")
+        val ctx = s"seed $seed step $step " +
+          s"(retired ${retiredIds.mkString(",")}; new ${newEdges.result().mkString(",")})"
+        assertInvariants(labels, pairs, ctx)
+        if (rebuildOracle) {
+          val (il, ip) = IncrementalCc.initial(pairs.select("doc_a", "doc_b"), forestEdgeBound)
+          assert(rowImage(labels) == rowImage(il), s"labels != initial at $ctx")
+          assert(rowImage(pairs) == rowImage(ip), s"labeled pairs != initial at $ctx")
+        }
       }
     }
+    rebuilt.result()
   }
 }
