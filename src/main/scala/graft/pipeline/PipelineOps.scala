@@ -4027,6 +4027,19 @@ object PipelineOps {
     datasetCardOf(newDf, v)
   }
 
+  /** The three snapshots p71 and p72 chain through: S0 drops the `%10=9`
+    * band; S1 restores it, drops `%10=0` and revises the `%7=3` docs; S2
+    * restores `%10=0`, drops `%10=1` and also revises the `%13=4` docs. */
+  private def ingestChainSnapshots(d: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    def rev(df: DataFrame, m: Int, r: Int, tag: String) = df.withColumn("text",
+      when(col("doc_id") % m === r, concat(col("text"), lit(tag)))
+        .otherwise(col("text")))
+    def snap(df: DataFrame) = df.withColumn("n_chars", length(col("text")).cast("long"))
+    (snap(d.where(col("doc_id") % 10 =!= 9)),
+      snap(rev(d.where(col("doc_id") % 10 =!= 0), 7, 3, " rev2")),
+      snap(rev(rev(d.where(col("doc_id") % 10 =!= 1), 7, 3, " rev2"), 13, 4, " rev3")))
+  }
+
   /** p71: the chained ingest-version-bump driver
     * ([[graft.streaming.IngestBump]]) — snapshot S0 ingested, then TWO
     * consecutive CDC bumps (S0 → S1 adds docs back, removes a band, and
@@ -4047,14 +4060,7 @@ object PipelineOps {
     * artifact families (text + p60 publication + sem + ANN index). */
   def ingestBumpChain(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.IngestBump
-    val d = docs(spark, dir)
-    def rev(df: DataFrame, m: Int, r: Int, tag: String) = df.withColumn("text",
-      when(col("doc_id") % m === r, concat(col("text"), lit(tag)))
-        .otherwise(col("text")))
-    def snap(df: DataFrame) = df.withColumn("n_chars", length(col("text")).cast("long"))
-    val s0 = snap(d.where(col("doc_id") % 10 =!= 9))
-    val s1 = snap(rev(d.where(col("doc_id") % 10 =!= 0), 7, 3, " rev2"))
-    val s2 = snap(rev(rev(d.where(col("doc_id") % 10 =!= 1), 7, 3, " rev2"), 13, 4, " rev3"))
+    val (s0, s1, s2) = ingestChainSnapshots(docs(spark, dir))
     val root = ArtifactStore.artifactPath(spark, "ingest-bump", dir, "documents.parquet")
     ArtifactStore.withScratchVersion(spark, root) { vroot =>
       IngestBump.bump(spark, vroot, s0)
@@ -4074,21 +4080,17 @@ object PipelineOps {
     * .SnapshotEvery]] bumps. The entry derives the feed by diffing
     * snapshot hash projections in-query — oracle scaffolding, same as
     * p61/p70 paying their from-scratch baselines in-query; a production
-    * ingest log carries the feed for free. Oracle: identical to p71 —
-    * the from-scratch p36 of the final snapshot; equality gates that
-    * feed-trusting maintenance never drifts from rebuild semantics,
-    * including survivor promotion (a removed keeper's copy re-grammed
-    * from a corpus fetch, IngestBumpSpec). */
+    * ingest log carries the feed for free. That diff (old snapshot vs
+    * new) is deliberately separate code from the feed p71's `bump`
+    * derives (carried live log vs new snapshot), so p71 ≡ p72 compares
+    * two derivations of the feed, not one derivation twice. Oracle:
+    * identical to p71 — the from-scratch p36 of the final snapshot;
+    * equality gates that feed-trusting maintenance never drifts from
+    * rebuild semantics, including survivor promotion (a removed keeper's
+    * copy re-grammed from a corpus fetch, IngestBumpSpec). */
   def ingestCdcChain(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.IngestBump
-    val d = docs(spark, dir)
-    def rev(df: DataFrame, m: Int, r: Int, tag: String) = df.withColumn("text",
-      when(col("doc_id") % m === r, concat(col("text"), lit(tag)))
-        .otherwise(col("text")))
-    def snap(df: DataFrame) = df.withColumn("n_chars", length(col("text")).cast("long"))
-    val s0 = snap(d.where(col("doc_id") % 10 =!= 9))
-    val s1 = snap(rev(d.where(col("doc_id") % 10 =!= 0), 7, 3, " rev2"))
-    val s2 = snap(rev(rev(d.where(col("doc_id") % 10 =!= 1), 7, 3, " rev2"), 13, 4, " rev3"))
+    val (s0, s1, s2) = ingestChainSnapshots(docs(spark, dir))
     def feed(prev: DataFrame, next: DataFrame) = {
       val pk = prev.select(col("doc_id"), md5(col("text")).as("h0"))
       val nk = next.select(col("doc_id"), md5(col("text")).as("h1"))
@@ -4115,7 +4117,7 @@ object PipelineOps {
     * probe-membership/edge state through removals AND returns (band 9
     * departs then comes back — its re-assignment must reproduce
     * identical membership rows; band 7 departs for good — its cells may
-    * reopen, [[graft.streaming.SemDedupStream.retireTrained]] rebuilds
+    * reopen, [[graft.streaming.SemDedupStream.retire]] rebuilds
     * their pair sets). State persists as LSM delta versions like the
     * text/sem families. The final verdict must equal the one-shot p52
     * over the carved final snapshot (oracle: p52's SQL with the

@@ -200,22 +200,6 @@ object DedupStream {
         .join(v.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi"))
   }
 
-  /** [[retain]]'s anti-join twin for when the DEPARTED set is at hand:
-    * restrict the carried state by retiring `retiredIds`. Equivalent to
-    * retain when retiredIds = state ids ∖ valid ids, but the build side
-    * is DELTA-sized — the anti-joins broadcast, where retain's valid-id
-    * semi-join ships a survivor-population key set. The shape every
-    * per-bump state restriction should take once the retired set is
-    * computed (it is, in [[IngestBump]] — old survhash ∖ valid). */
-  def retire(state: PairState, retiredIds: DataFrame): PairState = {
-    val r = retiredIds.select(col("doc_id"))
-    PairState(
-      state.grams.join(r, Seq("doc_id"), "left_anti"),
-      state.pairs
-        .join(r.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-        .join(r.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti"))
-  }
-
   /** Pair discovery alone — the incremental refresh's first half: gram
     * the batch, pair it against the full gram history (prior ∪ batch),
     * canonicalized + deduped. The returned newGrams/newPairs are the

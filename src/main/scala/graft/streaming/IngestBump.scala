@@ -17,9 +17,11 @@ import graft.pipeline.PipelineOps.PinnedFrame
   * grow-in-place segment tree ([[graft.pipeline.AnnIndexStore]]), and
   * each `bump(newSnapshot)` call pays only the delta:
   *
-  *   1. text dedup — retire departed/changed docs from the carried
-  *      gram/edge state ([[DedupStream.retain]]), re-gram the delta as
-  *      one incremental batch, emit the new snapshot's p36 verdict;
+  *   1. text dedup — derive the exact CDC feed from the carried live
+  *      log against the snapshot, then run [[bumpTextCdc]]'s body on it:
+  *      retire departed/changed survivors from the carried gram/edge
+  *      state, re-gram the delta as one incremental batch, emit the new
+  *      snapshot's p36 verdict;
   *   2. p60 refresh — optionally PUBLISH that verdict as the
   *      materialized verdict table of the new snapshot's dataset dir, so
   *      every downstream composer (budget, splits, scrub closure,
@@ -261,7 +263,15 @@ object IngestBump {
       summaries: Seq[SummarySpec] = Nil,
       bumpId: Option[String] = None): Artifacts = {
     requireFormat(spark, root, found = true)
-    val verdict = bumpText(spark, textDir(root), newDocs)
+    val dir = textDir(root)
+    val verdict = loadTextState(spark, dir) match {
+      case None => initialText(spark, dir,
+        PipelineOps.survivorsOf(newDocs).pinned(false),
+        DedupStream.arrivalLog(newDocs).pinned(false))
+      // the feed is derived here, not trusted, so there is nothing to audit
+      case Some(m) =>
+        applyFeed(spark, dir, m, feedOf(m("livelog"), newDocs), newDocs, auditSampleMod = 0L)
+    }
     publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
     val sem = vectors.map { vs =>
       val sv = bumpSem(spark, semDir(root), vs)
@@ -288,34 +298,16 @@ object IngestBump {
 
   private def bumpTrainedAt(
       spark: SparkSession, dir: String, ts: TrainedSnapshot): DataFrame = {
-    val snapNames = Seq("members", "edges")
-    val deltaNames = Seq("retired", "cellsOut", "members", "edges")
-    val st = StateStore.loadChain(spark, dir, snapNames, deltaNames)
-      .map { case (snap, ds) => SemDedupStream.foldTrainedChain(snap, ds) } match {
-      case None =>
-        val (st, _) = SemDedupStream.refreshTrainedDelta(
-          ts.trained, ts.vecs, None, ts.maxCell, ts.threshold)
-        StateStore.save(dir, Map("members" -> st.members, "edges" -> st.edges))
-        st
-      case Some(m) =>
-        val retired = m.members.select("vec_id").distinct()
-          .join(ts.vecs.select("vec_id"), Seq("vec_id"), "left_anti")
-          .pinned(false)
-        val (prior, reopened, rebuilt) =
-          SemDedupStream.retireTrained(m, retired, ts.maxCell, ts.threshold)
+    import SemDedupStream.{SemState, TrainedState}
+    def trained(st: SemState) = TrainedState(st.members, st.edges)
+    bumpVectors(spark, dir, ts.vecs, ts.maxCell, ts.threshold, probeRows = true,
+      refresh = prior => {
         val (st, sd) = SemDedupStream.refreshTrainedDelta(
-          ts.trained, ts.vecs, Some(prior), ts.maxCell, ts.threshold)
-        if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
-          StateStore.save(dir, Map("members" -> st.members, "edges" -> st.edges))
-        else
-          StateStore.saveDelta(dir, Map(
-            "retired" -> retired, "cellsOut" -> reopened,
-            "members" -> sd.membersIn,
-            "edges" -> rebuilt.unionByName(sd.edgesIn)))
-        st
-    }
-    SemDedupStream.trainedVerdict(ts.vecs.select("vec_id").distinct(), st, ts.maxCell)
-      .pinned(false)
+          ts.trained, ts.vecs, prior.map(trained), ts.maxCell, ts.threshold)
+        (SemState(st.members, st.edges), sd)
+      },
+      verdict = st => SemDedupStream.trainedVerdict(
+        ts.vecs.select("vec_id").distinct(), trained(st), ts.maxCell))
   }
 
   /** A CDC delta feed — the shape an ingest log provides: ids whose docs
@@ -342,8 +334,9 @@ object IngestBump {
     * cannot carry. That lookup is a delta-sized id semi-join (with an
     * id-partitioned corpus layout it partition-prunes; promotions only
     * happen when an exact-dup's keeper leaves, so the matched set is
-    * tiny). Verdict ≡ [[bump]] on the same snapshot — spec-gated and
-    * entry-gated (p72) under p36's own oracle.
+    * tiny). [[bump]] is this same body over a feed it derives from the
+    * snapshot ([[feedOf]]); the verdict is spec-gated and entry-gated
+    * (p72) under p36's own oracle.
     *
     * TRUST-BUT-VERIFY: the path trusts the feed for the delta's
     * membership, but a feed bug (a missed removal, a missed add, a
@@ -375,6 +368,45 @@ object IngestBump {
     val dir = textDir(root)
     val m = loadTextState(spark, dir).getOrElse(throw new IllegalStateException(
       "bumpTextCdc needs an ingested base — run bump() on the first snapshot"))
+    val verdict = applyFeed(spark, dir, m, delta, corpus, auditSampleMod)
+    publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
+    verdict
+  }
+
+  /** The exact CDC feed that takes the carried live log to the snapshot
+    * `newDocs`: one comparison of the live log with the snapshot's
+    * arrival log, both hash-sized (doc_id, content_hash) rows, then the
+    * changed and added bodies read back from the snapshot by id. The
+    * three parts are disjoint by doc_id, as [[CorpusDelta]] needs. */
+  private def feedOf(livelog: DataFrame, newDocs: DataFrame): CorpusDelta = {
+    val cmp = DedupStream.arrivalLog(newDocs).withColumnRenamed("content_hash", "h1")
+      .join(livelog, Seq("doc_id"), "full_outer")
+      .pinned(false)
+    def bodies(ids: DataFrame) =
+      newDocs.join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
+    CorpusDelta(
+      removedIds = cmp.where(col("h1").isNull).select("doc_id"),
+      changed = bodies(cmp.where(col("h1") =!= col("content_hash"))),
+      added = bodies(cmp.where(col("content_hash").isNull)))
+  }
+
+  /** The one body that advances maintained text state by a CDC feed —
+    * [[bumpTextCdc]] with the feed it was given, [[bump]] with the feed
+    * [[feedOf]] derives. The exact stage runs over the carried live log
+    * (touched-hash survivor re-selection); then one incremental
+    * pair-discovery batch + an [[IncrementalCc]] rebuild of exactly the
+    * touched components, committed as one atomic state version — a DELTA
+    * version on most bumps, a folded snapshot every [[SnapshotEvery]]th
+    * (the LSM cadence; the corpus-sized state rewrite lands on 1 bump in
+    * 8, every other write is O(delta + touched components)). The verdict
+    * assembles from the maintained labels — never a global CC. */
+  private def applyFeed(
+      spark: SparkSession,
+      dir: String,
+      m: Map[String, DataFrame],
+      delta: CorpusDelta,
+      corpus: DataFrame,
+      auditSampleMod: Long): DataFrame = {
     val deltaDocs = delta.changed.select(DocCols.map(col): _*)
       .unionByName(delta.added.select(DocCols.map(col): _*))
       .pinned(false)
@@ -388,11 +420,11 @@ object IngestBump {
     // `departed`), so a raw union would duplicate their rows — and the
     // duplicate would persist in the saved delta chain, duplicating every
     // later verdict. Anti-join the arrivals against the retained log on
-    // the full (doc_id, content_hash) key (mirroring bumpText's logDelta)
-    // so a replayed arrival is a no-op; this filtered delta is also what
-    // the chain persists as its livelog table. The anti-join's build side
-    // is the retained log RESTRICTED to the delta's ids — delta-sized and
-    // broadcast, where the raw retained log would build corpus-sized.
+    // the full (doc_id, content_hash) key so a replayed arrival is a
+    // no-op; this filtered delta is also what the chain persists as its
+    // livelog table. The anti-join's build side is the retained log
+    // RESTRICTED to the delta's ids — delta-sized and broadcast, where
+    // the raw retained log would build corpus-sized.
     val deltaLog = DedupStream.arrivalLog(deltaDocs)
       .join(retainedLog.join(deltaDocs.select("doc_id"), Seq("doc_id"), "left_semi"),
         Seq("doc_id", "content_hash"), "left_anti")
@@ -448,17 +480,23 @@ object IngestBump {
       .unionByName(corpus.select(DocCols.map(col): _*)
         .join(promoted, Seq("doc_id"), "left_semi"))
       .pinned(false)
-    val verdict = advanceText(spark, dir, m,
-      survProj = newSurvIds,
-      batchDocs = batchDocs,
-      retired = retired,
-      departed = departed,
-      batchSurvhash = batchSurvhash.select("doc_id", "content_hash"),
-      logDelta = deltaLog,
-      livelog = livelog,
-      fullSurvhash = newSurvIds.select("doc_id", "content_hash"))
-    publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
-    verdict
+    val pd = DedupStream.discoverPairs(batchDocs,
+      Some(m("grams").join(retired, Seq("doc_id"), "left_anti")))
+    val ld = IncrementalCc.refresh(m("labels"), m("pairs"), retired, pd.newPairs)
+    val stateDelta = Map(
+      "retired" -> retired, "departed" -> departed,
+      "labelsOut" -> ld.labelsOut, "pairsOut" -> ld.pairsOut,
+      "labelsIn" -> ld.labelsIn,
+      "grams" -> pd.newGrams, "pairs" -> ld.pairsIn,
+      "survhash" -> batchSurvhash, "livelog" -> deltaLog)
+    // the state this bump leaves: the chain fold applied to one more delta
+    val folded = DedupStream.foldPairChain(m, Seq(stateDelta))
+    if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
+      StateStore.save(dir,
+        folded ++ Map("survhash" -> newSurvIds, "livelog" -> livelog), TextPartitions)
+    else StateStore.saveDelta(dir, stateDelta, TextPartitions)
+    DedupStream.verdictFromLabels(newSurvIds, livelog, folded("labels"))
+      .pinned(false)
   }
 
   /** The CDC audit ([[bumpTextCdc]]'s trust-but-verify), two directions,
@@ -559,107 +597,48 @@ object IngestBump {
     DedupStream.verdictFromLabels(newSurv, arrivals, labels).pinned(false)
   }
 
-  /** The shared maintenance tail of both bump flavors, once the exact
-    * stage has produced the survivor projection and the delta carving:
-    * retire + one incremental pair-discovery batch + an [[IncrementalCc]]
-    * rebuild of exactly the touched components, committed as one atomic
-    * state version — a DELTA version on most bumps, a folded snapshot
-    * every [[SnapshotEvery]]th (the LSM cadence; the corpus-sized state
-    * rewrite lands on 1 bump in 8, every other write is O(delta +
-    * touched components)). The verdict assembles from the maintained
-    * labels — never a global CC. */
-  private def advanceText(
+  private def bumpSem(spark: SparkSession, dir: String, vs: VectorSnapshot): DataFrame =
+    bumpVectors(spark, dir, vs.vecs, vs.maxCell, vs.threshold, probeRows = false,
+      refresh = SemDedupStream.refreshDelta(vs.cents, vs.vecs, _, vs.maxCell, vs.threshold),
+      verdict = SemDedupStream.verdict(vs.vecs.select("vec_id"), _, vs.maxCell))
+
+  /** Both vector families' bump: retire departures (reopened-cell rebuild
+    * included), then `refresh` arrivals against the family's frozen
+    * quantizer — the refresh's membership anti-join makes passing the
+    * whole snapshot as the batch both correct and replay-idempotent.
+    * Persists the same LSM cadence as the text family: the corpus-sized
+    * (vec_id, cid, q, nrm) membership — quantized vectors and all —
+    * rewrites on 1 bump in [[SnapshotEvery]]; every other commit writes
+    * the delta alone (departures, reopened cells + their rebuilt pair
+    * sets, the batch's assignments and new edges). The trained family's
+    * state has the sem family's shape plus a probe `rank` column, so one
+    * fold and one retirement serve both; `probeRows` marks its up to
+    * [[PipelineOps.IvfProbes]] membership rows per vector. */
+  private def bumpVectors(
       spark: SparkSession,
       dir: String,
-      m: Map[String, DataFrame],
-      survProj: DataFrame,
-      batchDocs: DataFrame,
-      retired: DataFrame,
-      departed: DataFrame,
-      batchSurvhash: DataFrame,
-      logDelta: DataFrame,
-      livelog: DataFrame,
-      fullSurvhash: => DataFrame): DataFrame = {
-    val pd = DedupStream.discoverPairs(batchDocs,
-      Some(m("grams").join(retired, Seq("doc_id"), "left_anti")))
-    val ld = IncrementalCc.refresh(m("labels"), m("pairs"), retired, pd.newPairs)
-    val delta = Map(
-      "retired" -> retired, "departed" -> departed,
-      "labelsOut" -> ld.labelsOut, "pairsOut" -> ld.pairsOut,
-      "labelsIn" -> ld.labelsIn,
-      "grams" -> pd.newGrams, "pairs" -> ld.pairsIn,
-      "survhash" -> batchSurvhash, "livelog" -> logDelta)
-    // the state this bump leaves: the chain fold applied to one more delta
-    val folded = DedupStream.foldPairChain(m, Seq(delta))
-    if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
-      StateStore.save(dir,
-        folded ++ Map("survhash" -> fullSurvhash, "livelog" -> livelog), TextPartitions)
-    else StateStore.saveDelta(dir, delta, TextPartitions)
-    DedupStream.verdictFromLabels(survProj, livelog, folded("labels"))
-      .pinned(false)
-  }
-
-  /** Text family: exact-stage survivors of the new snapshot, valid ids =
-    * still-a-survivor-with-unchanged-bytes (the carried survivor-hash
-    * projection against the new one — hash-sized, no text), then the
-    * shared [[advanceText]] tail. First bump (no state) ingests the
-    * snapshot as one batch. */
-  private def bumpText(spark: SparkSession, dir: String, newDocs: DataFrame): DataFrame = {
-    val newSurv = PipelineOps.survivorsOf(newDocs).pinned(false)
-    val arrivals = DedupStream.arrivalLog(newDocs).pinned(false)
-    loadTextState(spark, dir) match {
-      case None => initialText(spark, dir, newSurv, arrivals)
-      case Some(m) =>
-        val validIds = m("survhash")
-          .join(newSurv.select(col("doc_id"), col("content_hash").as("h2")), "doc_id")
-          .where(col("content_hash") === col("h2"))
-          .select("doc_id")
-        val retired = m("survhash").select("doc_id")
-          .join(validIds, Seq("doc_id"), "left_anti").pinned(false)
-        val batch = newSurv.join(validIds, Seq("doc_id"), "left_anti")
-        // livelog delta/departures by (id, hash) comparison against the
-        // carried log: corpus-hash-sized joins, delta-sized writes
-        val logKey = Seq("doc_id", "content_hash")
-        advanceText(spark, dir, m,
-          survProj = newSurv,
-          batchDocs = batch,
-          retired = retired,
-          departed = m("livelog").join(arrivals, logKey, "left_anti")
-            .select("doc_id").pinned(false),
-          batchSurvhash = batch.select("doc_id", "content_hash"),
-          logDelta = arrivals.join(m("livelog"), logKey, "left_anti"),
-          livelog = arrivals,
-          fullSurvhash = newSurv.select("doc_id", "content_hash"))
-    }
-  }
-
-  /** Vector family: retire departures (reopened-cell rebuild included),
-    * refresh arrivals against the frozen seeds — the refresh's
-    * membership anti-join makes passing the whole snapshot as the batch
-    * both correct and replay-idempotent. Persists the same LSM cadence
-    * as the text family: the corpus-sized (vec_id, cid, q, nrm)
-    * membership — quantized vectors and all — rewrites on 1 bump in
-    * [[SnapshotEvery]]; every other commit writes the delta alone
-    * (departures, reopened cells + their rebuilt pair sets, the batch's
-    * assignments and new edges). */
-  private def bumpSem(spark: SparkSession, dir: String, vs: VectorSnapshot): DataFrame = {
-    val snapNames = Seq("members", "edges")
-    val deltaNames = Seq("retired", "cellsOut", "members", "edges")
-    val st = StateStore.loadChain(spark, dir, snapNames, deltaNames)
+      vecs: DataFrame,
+      maxCell: Int,
+      threshold: Double,
+      probeRows: Boolean,
+      refresh: Option[SemDedupStream.SemState] =>
+        (SemDedupStream.SemState, SemDedupStream.SemDelta),
+      verdict: SemDedupStream.SemState => DataFrame): DataFrame = {
+    val st = StateStore.loadChain(spark, dir,
+        Seq("members", "edges"), Seq("retired", "cellsOut", "members", "edges"))
       .map { case (snap, ds) => SemDedupStream.foldSemChain(snap, ds) } match {
       case None =>
-        val (st, _) = SemDedupStream.refreshDelta(
-          vs.cents, vs.vecs, None, vs.maxCell, vs.threshold)
+        val (st, _) = refresh(None)
         StateStore.save(dir, Map("members" -> st.members, "edges" -> st.edges))
         st
       case Some(m) =>
-        val retired = m.members.select("vec_id")
-          .join(vs.vecs.select("vec_id"), Seq("vec_id"), "left_anti")
+        val ids = m.members.select("vec_id")
+        val retired = (if (probeRows) ids.distinct() else ids)
+          .join(vecs.select("vec_id"), Seq("vec_id"), "left_anti")
           .pinned(false)
         val (prior, reopened, rebuilt) =
-          SemDedupStream.retire(m, retired, vs.maxCell, vs.threshold)
-        val (st, sd) = SemDedupStream.refreshDelta(
-          vs.cents, vs.vecs, Some(prior), vs.maxCell, vs.threshold)
+          SemDedupStream.retire(m, retired, maxCell, threshold)
+        val (st, sd) = refresh(Some(prior))
         if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
           StateStore.save(dir, Map("members" -> st.members, "edges" -> st.edges))
         else
@@ -669,7 +648,7 @@ object IngestBump {
             "edges" -> rebuilt.unionByName(sd.edgesIn)))
         st
     }
-    SemDedupStream.verdict(vs.vecs.select("vec_id"), st, vs.maxCell).pinned(false)
+    verdict(st).pinned(false)
   }
 
   /** Index family: first bump builds; later bumps reconcile the index's

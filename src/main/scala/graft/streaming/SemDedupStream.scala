@@ -285,43 +285,17 @@ object SemDedupStream {
     (TrainedState(members, edges), SemDelta(newMembers, newEdges))
   }
 
-  /** [[retire]]'s trained-path twin: restrict the carried probe-membership
-    * state by the departed vec ids (delta-sized broadcast anti-joins),
-    * detect cells shrunk back under the cap from the retired rows' census
-    * diff alone, and rebuild the reopened cells' pair sets from the
-    * surviving membership rows. p52's cap counts MEMBERSHIP rows (a
-    * vector occupies up to [[PipelineOps.IvfProbes]] cells), and the
-    * census here counts the same rows, so incremental and one-shot caps
-    * bite at identical sizes. */
+  /** [[retire]] for the trained family (members carry the probe `rank`
+    * column; the retirement is schema-agnostic over it). p52's cap counts
+    * MEMBERSHIP rows (a vector occupies up to [[PipelineOps.IvfProbes]]
+    * cells), and retire's census counts the same rows, so incremental and
+    * one-shot caps bite at identical sizes. */
   def retireTrained(
       state: TrainedState, retiredIds: DataFrame,
       maxCell: Int, threshold: Double): (TrainedState, DataFrame, DataFrame) = {
-    val r = retiredIds.select(col("vec_id"))
-    val members = state.members.join(r, Seq("vec_id"), "left_anti")
-    val kept = state.edges
-      .join(r.select(col("vec_id").as("vec_a")), Seq("vec_a"), "left_anti")
-      .join(r.select(col("vec_id").as("vec_b")), Seq("vec_b"), "left_anti")
-    val lost = state.members.join(r, Seq("vec_id"), "left_semi")
-      .groupBy("cid").agg(count(lit(1)).as("nlost"))
-    val reopened = state.members.groupBy("cid").agg(count(lit(1)).as("szb"))
-      .join(lost, "cid")
-      .where(col("szb") > maxCell && col("szb") - col("nlost") <= maxCell)
-      .select("cid").pinned(false)
-    val cellM = members.join(broadcast(reopened), "cid")
-    val rebuilt = cellM
-      .select(col("cid"), col("vec_id").as("va"), col("q").as("qa"), col("nrm").as("nrm_a"))
-      .join(cellM.select(col("cid"), col("vec_id").as("vb"), col("q").as("qb"),
-        col("nrm").as("nrm_b")), "cid")
-      .where(col("va") < col("vb"))
-      .withColumn("dot", graft.functions.QuantizedDot(col("qa"), col("qb")))
-      .withColumn("cosine",
-        try_divide(col("dot").cast("double"), sqrt(col("nrm_a").cast("double")) * sqrt(col("nrm_b").cast("double"))))
-      .where(col("cosine") >= threshold)
-      .select(col("cid"), col("va").as("vec_a"), col("vb").as("vec_b"))
-      .pinned(false)
-    val edges = kept.join(broadcast(reopened), Seq("cid"), "left_anti")
-      .unionByName(rebuilt)
-    (TrainedState(members, edges), reopened, rebuilt)
+    val (st, reopened, rebuilt) =
+      retire(SemState(state.members, state.edges), retiredIds, maxCell, threshold)
+    (TrainedState(st.members, st.edges), reopened, rebuilt)
   }
 
   /** [[foldSemChain]] for the trained family (members carry the probe

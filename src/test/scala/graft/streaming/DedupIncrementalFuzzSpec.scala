@@ -146,7 +146,13 @@ class DedupIncrementalFuzzSpec extends AnyFunSuite {
       val root = java.nio.file.Files.createTempDirectory(s"graft_cdcfeed_$nm").toString
       IngestBump.bump(spark, root, old)
       val got = IngestBump.bumpTextCdc(spark, root, feed(old, neu), neu)
-      assert(img(got) == img(PipelineOps.dedupVerdictOf(neu)), nm)
+      val want = img(PipelineOps.dedupVerdictOf(neu))
+      assert(img(got) == want, nm)
+      // the snapshot route: bump derives the same feed from its carried
+      // live log and runs the same body
+      val root2 = java.nio.file.Files.createTempDirectory(s"graft_snapfeed_$nm").toString
+      IngestBump.bump(spark, root2, old)
+      assert(img(IngestBump.bump(spark, root2, neu).verdict) == want, s"$nm (snapshot bump)")
     }
   }
 }

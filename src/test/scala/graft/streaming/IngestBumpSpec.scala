@@ -46,6 +46,12 @@ class IngestBumpSpec extends AnyFunSuite {
       assert(rowImage(grams.select("doc_id", "grams")) ==
         rowImage(PipelineOps.ngramGrams(PipelineOps.survivorsOf(si)
           .select("doc_id", "text", "lang", "source", "n_chars")).select("doc_id", "grams")))
+      val st = IngestBump.textState(spark, root).get
+      // the live log the next bump derives its feed from, and the
+      // incrementally maintained labels, after every bump
+      assert(rowImage(st("livelog")) == rowImage(DedupStream.arrivalLog(si)))
+      assert(rowImage(st("labels")) == rowImage(PipelineOps.connectedComponents(
+        st("pairs").select(col("doc_a"), col("doc_b")))))
     }
   }
 
@@ -112,6 +118,16 @@ class IngestBumpSpec extends AnyFunSuite {
     assert(served.groupBy("doc_id").count().where(col("count") > 1).count() == 0,
       "replayed publish must not duplicate the p60 table")
     assert(rowImage(served) == rowImage(PipelineOps.dedupVerdictOf(s1)))
+    // and a snapshot bump of the same snapshot: its derived feed is empty
+    IngestBump.bump(spark, root, s1, publishDir = Some(facade))
+    val st2 = IngestBump.textState(spark, root).get
+    assert(st2("livelog").groupBy("doc_id").count().where(col("count") > 1).count() == 0,
+      "a snapshot bump after the replay must not duplicate livelog rows")
+    assert(rowImage(st2("livelog")) == rowImage(DedupStream.arrivalLog(s1)))
+    val served2 = PipelineOps.dedupVerdictServed(spark, facade)
+    assert(served2.groupBy("doc_id").count().where(col("count") > 1).count() == 0,
+      "a snapshot bump after the replay must not duplicate the p60 table")
+    assert(rowImage(served2) == rowImage(PipelineOps.dedupVerdictOf(s1)))
   }
 
   test("CDC trust-but-verify: a lying feed — missed removal, changed-as-added, missed " +
