@@ -99,6 +99,50 @@ object IncrementalCc {
     * classifier's round-17 InSet probe. */
   private[graft] val DriverBound: Int = 1 << 16
 
+  /** `df`'s rows on the driver when there are at most `bound` of them,
+    * else None — in ONE job: each partition stops after bound + 1
+    * rows, where `limit(bound + 1).collect()` scans partitions in rounds
+    * of 1, 4, 16, ..., one job per round. The result handler keeps a
+    * running total and drops every partition's rows once it passes the
+    * bound, so the driver keeps at most `bound` rows plus the partition
+    * results in flight, not partitions × (bound + 1). Rows come back in
+    * partition order. */
+  private[streaming] def collectBounded(df: DataFrame, bound: Int = DriverBound)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    val rdd = df.rdd
+    val take = bound + 1
+    val parts = new Array[Array[org.apache.spark.sql.Row]](rdd.getNumPartitions)
+    var total = 0L
+    // the handler runs under the job waiter's lock, one result at a time
+    rdd.sparkContext.runJob(rdd, (it: Iterator[org.apache.spark.sql.Row]) => it.take(take).toArray,
+      (i: Int, rows: Array[org.apache.spark.sql.Row]) => {
+        total += rows.length
+        if (total <= bound) parts(i) = rows
+        else parts.mapInPlace(_ => null): Unit
+      })
+    if (total > bound) None else Some(parts.flatten)
+  }
+
+  /** `c IN vs` as one InSet literal, false when `vs` is empty. InSet
+    * DIRECTLY, not `isin(vs: _*)`: the In expression carries one Literal
+    * child per value, so a bound-sized id list built a 65k-node tree PER
+    * PREDICATE and the refresh plans a dozen such predicates — measured
+    * 6.6 s of pure analyzer/optimizer time per query at the bound (21 ms
+    * as an InSet literal, which the optimizer's OptimizeIn would
+    * eventually produce anyway — after paying the tree walks). `vs` are
+    * non-null int64 ids or string hashes, converted here to Catalyst's
+    * internal values. */
+  private[streaming] def inSet(c: org.apache.spark.sql.Column, vs: Iterable[Any])
+      : org.apache.spark.sql.Column =
+    if (vs.isEmpty) lit(false)
+    else org.apache.spark.sql.graft.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graft.ColumnBridge.expression(c),
+        vs.iterator.map {
+          case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+          case v => v
+        }.toSet))
+
   /** Advance the maintained labels. `labels` (node, label) and
     * `labeledPairs` (doc_a, doc_b, elabel, in_forest) are the folded
     * state; `retiredIds` (doc_id) and `newPairs` (doc_a, doc_b) are
@@ -152,9 +196,12 @@ object IncrementalCc {
     // the shared pins concurrently and recomputes whole subtrees
     // (measured: production CDC bump 2.5× SLOWER under overlapped
     // probes, while every component phase stayed flat).
-    // bounded probe of the retired set (one job): emptiness, the bound
-    // check, the InSet values, and the route gate all come from it
-    val rProbe = retiredIds.select(col("doc_id").as("node")).distinct()
+    // bounded probe of the retired set: emptiness, the bound check, the
+    // InSet values, and the route gate all come from it. Deduplicated on
+    // the driver, so a driver-local retired set probes with no job at all
+    // (a duplicated id counts against the bound; the rebuild route is
+    // exact either way)
+    val rProbe = retiredIds.select(col("doc_id"))
       .limit(driverBound + 1).collect().map(_.get(0)).toSeq
     // The state contract (non-null node ids) is enforced here, where it is
     // free — the rows are already on the driver. A NULL in the IN-list
@@ -174,7 +221,7 @@ object IncrementalCc {
     npProbe match {
       case Some(np) =>
         refreshDriver(labels, labeledPairs,
-          rProbe.map(_.asInstanceOf[Long]).toArray, np, forestEdgeBound)
+          rProbe.map(_.asInstanceOf[Long]).distinct.toArray, np, forestEdgeBound)
       case None => rebuild(labels, labeledPairs, retiredIds, pairsNN, forestEdgeBound)
     }
   }
@@ -218,21 +265,7 @@ object IncrementalCc {
     val spark = labels.sparkSession
     import spark.implicits._
     val rSet = rVals.toSet
-    // InSet DIRECTLY, not `isin(vs: _*)`: the In expression carries one
-    // Literal child per value, so a bound-sized id list built a 65k-node
-    // tree PER PREDICATE and the refresh plans a dozen such predicates —
-    // measured 6.6 s of pure analyzer/optimizer time per query at the
-    // bound (21 ms as an InSet literal, which the optimizer's OptimizeIn
-    // would eventually produce anyway — after paying the tree walks).
-    // Execution is identical; ids here are gated int64 so the set is
-    // exactly the Catalyst-internal value set.
-    def inLongs(c: org.apache.spark.sql.Column, vs: Seq[Long]) =
-      if (vs.isEmpty) lit(false)
-      else org.apache.spark.sql.graft.ColumnBridge.column(
-        org.apache.spark.sql.catalyst.expressions.InSet(
-          org.apache.spark.sql.graft.ColumnBridge.expression(c),
-          vs.iterator.map(x => x: Any).toSet))
-    def inR(c: org.apache.spark.sql.Column) = inLongs(c, rVals.toSeq)
+    def inR(c: org.apache.spark.sql.Column) = inSet(c, rSet)
     // left_anti semantics as an InSet (doc ids are non-null by contract;
     // the isNull arm keeps off-contract rows rather than silently dropping
     // them through NOT-IN three-valued logic)
@@ -280,7 +313,7 @@ object IncrementalCc {
     val lookupF: Future[Array[org.apache.spark.sql.Row]] =
       if (lookup.isEmpty) Future.successful(Array.empty)
       else Future {
-        labels.where(inLongs(col("node"), lookup.toSeq))
+        labels.where(inSet(col("node"), lookup.toSeq))
           .select(col("node"), col("label")).collect()
       }
 
@@ -338,7 +371,7 @@ object IncrementalCc {
     val ntot = scala.collection.mutable.LongMap.empty[Long]
     val scanKeys: Array[Long] = (delLabels ++ fallbackSeeds).distinct
     if (scanKeys.nonEmpty)
-      labels.where(inLongs(col("label"), scanKeys.toSeq))
+      labels.where(inSet(col("label"), scanKeys.toSeq))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("ntot"),
           count(when(
@@ -380,10 +413,10 @@ object IncrementalCc {
     val memberCls =
       if (seeds.isEmpty)
         Seq.empty[(Long, Long, Int, Int)].toDF("node", "label", "rb", "mg")
-      else labels.where(inLongs(col("label"), seeds.toSeq))
+      else labels.where(inSet(col("label"), seeds.toSeq))
         .select(col("node"), col("label"),
-          when(inLongs(col("label"), rebuildCids.toSeq), lit(1)).otherwise(lit(0)).as("rb"),
-          when(inLongs(col("label"), mergeLabels.toSeq), lit(1)).otherwise(lit(0)).as("mg"))
+          when(inSet(col("label"), rebuildCids.toSeq), lit(1)).otherwise(lit(0)).as("rb"),
+          when(inSet(col("label"), mergeLabels.toSeq), lit(1)).otherwise(lit(0)).as("mg"))
         // EAGER: three of the commit's overlapped state writes (labelsOut,
         // labelsIn via mgLabels, the pairsOut projection) read this pin;
         // left lazy, the parallel writes race its first materialization

@@ -59,7 +59,8 @@ import graft.pipeline.PipelineOps.PinnedFrame
   * never a torn state.
   *
   * On-disk format: a root is stamped with [[FormatVersion]] (the
-  * `_FORMAT` file at the root) when its first family state is founded,
+  * `_FORMAT` file at the root; format 2 = `_SCHEMA`-recorded versions and
+  * flat delta grams) when its first family state is founded,
   * and every public entry refuses a root that holds family state under
   * another stamp, or under none, with a [[StateFormatException]] — such
   * a root is founded again from a snapshot with [[bump]].
@@ -111,8 +112,11 @@ object IngestBump {
   def indexDir(root: String): String = s"$root/ann"
 
   /** The on-disk format every state family under a root is written in;
-    * bump it with any change a reader of older state cannot fold. */
-  val FormatVersion = 1
+    * bump it with any change a reader of older state cannot fold. Format
+    * 2: every state version records its tables' schemas (`_SCHEMA`, see
+    * [[StateStore]]), and text delta versions write their grams flat —
+    * only the gram snapshot is `gbucket`-partitioned. */
+  val FormatVersion = 2
 
   /** A root whose family state was written in another (or no stamped)
     * format — refused rather than misread. */
@@ -270,7 +274,8 @@ object IngestBump {
         DedupStream.arrivalLog(newDocs).pinned(false))
       // the feed is derived here, not trusted, so there is nothing to audit
       case Some(m) =>
-        applyFeed(spark, dir, m, feedOf(m("livelog"), newDocs), newDocs, auditSampleMod = 0L)
+        applyFeed(spark, dir, m, feedOf(m("livelog"), newDocs), newDocs,
+          auditSampleMod = 0L, IncrementalCc.DriverBound)
     }
     publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
     val sem = vectors.map { vs =>
@@ -363,12 +368,26 @@ object IngestBump {
       delta: CorpusDelta,
       corpus: DataFrame,
       publishDir: Option[String] = None,
-      auditSampleMod: Long = 64L): DataFrame = {
+      auditSampleMod: Long = 64L): DataFrame =
+    bumpTextCdc(spark, root, delta, corpus, publishDir, auditSampleMod, IncrementalCc.DriverBound)
+
+  /** [[bumpTextCdc]] under a given `driverBound`: the cap on the rows the
+    * survivor step collects to the driver (passed on to
+    * [[IncrementalCc.refresh]]); a feed past it re-founds the text state
+    * from `corpus` (see [[applyFeed]]). Tests force that route here. */
+  private[graft] def bumpTextCdc(
+      spark: SparkSession,
+      root: String,
+      delta: CorpusDelta,
+      corpus: DataFrame,
+      publishDir: Option[String],
+      auditSampleMod: Long,
+      driverBound: Int): DataFrame = {
     requireFormat(spark, root, found = false)
     val dir = textDir(root)
     val m = loadTextState(spark, dir).getOrElse(throw new IllegalStateException(
       "bumpTextCdc needs an ingested base — run bump() on the first snapshot"))
-    val verdict = applyFeed(spark, dir, m, delta, corpus, auditSampleMod)
+    val verdict = applyFeed(spark, dir, m, delta, corpus, auditSampleMod, driverBound)
     publishDir.foreach(d => PipelineOps.publishVerdictTable(spark, d, verdict))
     verdict
   }
@@ -392,109 +411,139 @@ object IngestBump {
 
   /** The one body that advances maintained text state by a CDC feed —
     * [[bumpTextCdc]] with the feed it was given, [[bump]] with the feed
-    * [[feedOf]] derives. The exact stage runs over the carried live log
-    * (touched-hash survivor re-selection); then one incremental
-    * pair-discovery batch + an [[IncrementalCc]] rebuild of exactly the
-    * touched components, committed as one atomic state version — a DELTA
-    * version on most bumps, a folded snapshot every [[SnapshotEvery]]th
-    * (the LSM cadence; the corpus-sized state rewrite lands on 1 bump in
-    * 8, every other write is O(delta + touched components)). The verdict
-    * assembles from the maintained labels — never a global CC. */
+    * [[feedOf]] derives. The exact stage (touched-hash survivor
+    * re-selection) is hash-sized, so it composes on the driver: three
+    * bounded collects — the feed's ids and arrival hashes, the carried
+    * live-log rows of those ids, and the live-log and survivor rows of the
+    * touched hashes — then plain Scala, with the results handed on as
+    * local frames. Then one incremental pair-discovery batch + an
+    * [[IncrementalCc]] rebuild of exactly the touched components,
+    * committed as one atomic state version — a DELTA version on most
+    * bumps, a folded snapshot every [[SnapshotEvery]]th (the LSM cadence;
+    * the corpus-sized state rewrite lands on 1 bump in 8, every other
+    * write is O(delta + touched components)). The verdict assembles from
+    * the maintained labels — never a global CC.
+    *
+    * A feed whose collects exceed `driverBound` rows (or
+    * state whose doc ids are not int64) re-founds the text state from the
+    * new snapshot with [[initialText]], as [[IncrementalCc.refresh]]
+    * rebuilds past the same bound; that route reads the corpus itself, so
+    * it neither trusts nor audits the feed. Feed doc ids must be non-null. */
   private def applyFeed(
       spark: SparkSession,
       dir: String,
       m: Map[String, DataFrame],
       delta: CorpusDelta,
       corpus: DataFrame,
-      auditSampleMod: Long): DataFrame = {
-    val deltaDocs = delta.changed.select(DocCols.map(col): _*)
-      .unionByName(delta.added.select(DocCols.map(col): _*))
+      auditSampleMod: Long,
+      driverBound: Int): DataFrame = {
+    import spark.implicits._
+    import IncrementalCc.{collectBounded, inSet}
+    def refound() = initialText(spark, dir,
+      PipelineOps.survivorsOf(corpus).pinned(false),
+      DedupStream.arrivalLog(corpus).pinned(false))
+    def hashOf(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getString(1))
+    def without(df: DataFrame, c: String, vs: Iterable[Any]) =
+      if (vs.isEmpty) df else df.where(col(c).isNull || !inSet(col(c), vs))
+
+    val deltaDocs = delta.changed.select(DocCols.map(col): _*).withColumn("__changed", lit(true))
+      .unionByName(delta.added.select(DocCols.map(col): _*).withColumn("__changed", lit(false)))
       .pinned(false)
+    def feedLog(changed: Boolean) =
+      DedupStream.arrivalLog(deltaDocs.where(col("__changed") === changed))
+        .select(col("doc_id").cast("long"), col("content_hash"), lit(changed).as("changed"))
+    // ---- the feed: removed ids, and each delta doc's id + arrival hash
+    val feed =
+      if (m("livelog").schema("doc_id").dataType != org.apache.spark.sql.types.LongType) None
+      else collectBounded(delta.removedIds.select(col("doc_id").cast("long"),
+          lit(null).cast("string").as("content_hash"), lit(null).cast("boolean").as("changed"))
+        .unionByName(feedLog(changed = true)).unionByName(feedLog(changed = false)), driverBound)
+    if (feed.isEmpty) return refound()
+    require(!feed.get.exists(_.isNullAt(0)), "CDC feed contract violated: NULL doc_id")
     // a changed doc departs the log under its old hash and re-enters via
     // the delta log under its new one
-    val departed = delta.removedIds.select("doc_id")
-      .unionByName(delta.changed.select("doc_id")).pinned(false)
-    val retainedLog = m("livelog").join(departed, Seq("doc_id"), "left_anti")
+    val departedIds = feed.get.iterator
+      .filter(r => r.isNullAt(2) || r.getBoolean(2)).map(_.getLong(0)).toSet
+    val arrivals = feed.get.toSeq.filterNot(_.isNullAt(2)).map(hashOf)
+    val deltaIds = arrivals.map(_._1).toSet
+
+    // ---- the carried live-log rows of every id the feed names
+    val logOfIds = collectBounded(m("livelog").where(inSet(col("doc_id"), departedIds ++ deltaIds))
+      .select("doc_id", "content_hash"), driverBound)
+    if (logOfIds.isEmpty) return refound()
+    val (departedRows, keptRows) = logOfIds.get.toSeq.map(hashOf)
+      .partition { case (id, _) => departedIds(id) }
     // replay idempotency: on a re-run of an already-committed bump the
-    // feed's added docs are ALREADY in the carried livelog (and not in
-    // `departed`), so a raw union would duplicate their rows — and the
-    // duplicate would persist in the saved delta chain, duplicating every
-    // later verdict. Anti-join the arrivals against the retained log on
-    // the full (doc_id, content_hash) key so a replayed arrival is a
-    // no-op; this filtered delta is also what the chain persists as its
-    // livelog table. The anti-join's build side is the retained log
-    // RESTRICTED to the delta's ids — delta-sized and broadcast, where
-    // the raw retained log would build corpus-sized.
-    val deltaLog = DedupStream.arrivalLog(deltaDocs)
-      .join(retainedLog.join(deltaDocs.select("doc_id"), Seq("doc_id"), "left_semi"),
-        Seq("doc_id", "content_hash"), "left_anti")
-      .pinned(false)
-    val livelog = retainedLog.unionByName(deltaLog)
-    // trust-but-verify stays SEQUENTIAL: its frames share the bump's lazy
-    // delta pins (deltaLog, livelog), and overlapping it from a future
-    // races their first materialization against the main derivation —
-    // measured 2.5× slower end-to-end, not faster (same lesson as the
-    // refresh probes; see IncrementalCc.refresh)
-    if (auditSampleMod > 0) auditFeed(livelog, corpus, auditSampleMod)
+    // feed's added docs are ALREADY in the carried livelog (and not
+    // departed), so they must not re-enter — the duplicate would persist
+    // in the chain and duplicate every later verdict. A NULL hash never
+    // matches, as in a join.
+    val kept = keptRows.filter(_._2 != null).toSet
+    val deltaLog = arrivals.filterNot(kept)
+
     // touched-hash survivor re-selection: survivor(h) can only change
     // when h's MEMBERSHIP changed — h lost a row (a departed doc's old
-    // hash) or gained one (a delta arrival). The min-per-hash window
-    // therefore runs over only the touched slice of the live log (a
-    // delta-sized broadcast semi-join), and every untouched hash keeps
-    // its carried survivor row. From here EVERY derivation stays either a
-    // corpus-projection SCAN with a delta-sized broadcast build side or a
-    // delta×delta operation — no corpus shuffle anywhere in the bump (the
-    // dominant residual the CDC marginal probe exposed was exactly the
-    // old corpus-wide window + the survivor/valid corpus-corpus joins).
-    val touched = m("livelog").join(departed, Seq("doc_id"), "left_semi")
-      .select("content_hash")
-      .unionByName(deltaLog.select("content_hash"))
-      .distinct().pinned(false)
-    val sw = Window.partitionBy(col("content_hash"))
-    val reselected = livelog.join(touched, Seq("content_hash"), "left_semi")
-      .withColumn("__min", min(col("doc_id")).over(sw))
-      .where(col("doc_id") === col("__min")).drop("__min")
-      .pinned(false)
+    // hash) or gained one (a delta arrival). The min-per-hash runs over
+    // only the touched slice of the live log, and every untouched hash
+    // keeps its carried survivor row.
+    val touched = (departedRows.iterator ++ deltaLog.iterator)
+      .map(_._2).filter(_ != null).toSet
+    val touchedRows = collectBounded(
+      m("livelog").where(inSet(col("content_hash"), touched))
+        .select(col("doc_id"), col("content_hash"), lit(false).as("surv"))
+        .unionByName(m("survhash").where(inSet(col("content_hash"), touched))
+          .select(col("doc_id"), col("content_hash"), lit(true).as("surv"))), driverBound)
+    if (touchedRows.isEmpty) return refound()
+    val (survTouched, logTouched) = touchedRows.get.toSeq
+      .partition(_.getBoolean(2)) match { case (s, l) => (s.map(hashOf), l.map(hashOf)) }
+    val reselected: Map[String, Long] =
+      (logTouched.filterNot { case (id, _) => departedIds(id) } ++
+        deltaLog.filter(_._2 != null))
+        .groupBy(_._2).map { case (h, rows) => h -> rows.map(_._1).min }
     // old survivors whose hash went untouched are still survivors AND
     // still byte-valid; a reselected (touched-hash) winner is valid iff
     // it was already a survivor under the same hash
-    val untouchedSurv = m("survhash").join(touched, Seq("content_hash"), "left_anti")
-    val validReselected = m("survhash")
-      .join(reselected, Seq("doc_id", "content_hash"), "left_semi")
-      .pinned(false)
-    val newSurvIds = untouchedSurv
-      .unionByName(reselected.select("doc_id", "content_hash"))
-    val retired = m("survhash").join(touched, Seq("content_hash"), "left_semi")
-      .select("doc_id")
-      .join(validReselected.select("doc_id"), Seq("doc_id"), "left_anti")
-      .pinned(false)
-    val batchSurvhash = reselected.select("doc_id", "content_hash")
-      .join(validReselected.select("doc_id"), Seq("doc_id"), "left_anti")
-      .pinned(false)
+    val validIds = survTouched.collect {
+      case (id, h) if reselected.get(h).contains(id) => id
+    }.toSet
+    val retired = survTouched.map(_._1).filterNot(validIds).distinct
+    val batchSurvhash = reselected.toSeq.map(_.swap).filterNot { case (id, _) => validIds(id) }
     // batch bodies: from the feed where present; promoted ids fetch from
     // the corpus
-    val promoted = batchSurvhash.select("doc_id")
-      .join(deltaDocs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val batchDocs = deltaDocs
-      .join(batchSurvhash.select("doc_id"), Seq("doc_id"), "left_semi")
-      .unionByName(corpus.select(DocCols.map(col): _*)
-        .join(promoted, Seq("doc_id"), "left_semi"))
-      .pinned(false)
-    val pd = DedupStream.discoverPairs(batchDocs,
-      Some(m("grams").join(retired, Seq("doc_id"), "left_anti")))
-    val ld = IncrementalCc.refresh(m("labels"), m("pairs"), retired, pd.newPairs)
+    val promoted = batchSurvhash.map(_._1).filterNot(deltaIds)
+    val fromFeed = deltaDocs.where(inSet(col("doc_id").cast("long"), batchSurvhash.map(_._1)))
+      .select(DocCols.map(col): _*)
+    val batchDocs =
+      if (promoted.isEmpty) fromFeed
+      else fromFeed.unionByName(corpus.select(DocCols.map(col): _*)
+        .where(inSet(col("doc_id").cast("long"), promoted)))
+
+    val livelog = without(m("livelog"), "doc_id", departedIds)
+      .unionByName(deltaLog.toDF("doc_id", "content_hash"))
+    // trust-but-verify stays SEQUENTIAL: overlapping it from a future
+    // races the first materialization of the bump's lazy pins against the
+    // main derivation — measured 2.5× slower end-to-end, not faster (same
+    // lesson as the refresh probes; see IncrementalCc.refresh)
+    if (auditSampleMod > 0) auditFeed(livelog, corpus, auditSampleMod)
+    val newSurvIds = without(m("survhash"), "content_hash", touched)
+      .unionByName(reselected.toSeq.map(_.swap).toDF("doc_id", "content_hash"))
+    val retiredDf = retired.toDF("doc_id")
+    val pd = DedupStream.discoverPairs(batchDocs, Some(without(m("grams"), "doc_id", retired)))
+    val ld = IncrementalCc.refresh(m("labels"), m("pairs"), retiredDf, pd.newPairs,
+      driverBound = driverBound)
     val stateDelta = Map(
-      "retired" -> retired, "departed" -> departed,
+      "retired" -> retiredDf, "departed" -> departedIds.toSeq.toDF("doc_id"),
       "labelsOut" -> ld.labelsOut, "pairsOut" -> ld.pairsOut,
       "labelsIn" -> ld.labelsIn,
       "grams" -> pd.newGrams, "pairs" -> ld.pairsIn,
-      "survhash" -> batchSurvhash, "livelog" -> deltaLog)
+      "survhash" -> batchSurvhash.toDF("doc_id", "content_hash"),
+      "livelog" -> deltaLog.toDF("doc_id", "content_hash"))
     // the state this bump leaves: the chain fold applied to one more delta
     val folded = DedupStream.foldPairChain(m, Seq(stateDelta))
     if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
       StateStore.save(dir,
         folded ++ Map("survhash" -> newSurvIds, "livelog" -> livelog), TextPartitions)
-    else StateStore.saveDelta(dir, stateDelta, TextPartitions)
+    else StateStore.saveDelta(dir, stateDelta)
     DedupStream.verdictFromLabels(newSurvIds, livelog, folded("labels"))
       .pinned(false)
   }
@@ -553,10 +602,14 @@ object IngestBump {
     * amplification (the corpus-sized gram rewrite lands on 1 bump in 8). */
   private[streaming] val SnapshotEvery = 8
 
-  /** The gram state persists hive-partitioned on its block-key bucket so
-    * the next bump's probe partition-prunes the history scan to the
-    * delta's buckets ([[graft.pipeline.PipelineOps.pruneGramHistory]]).
-    * (The labeled EDGE state deliberately does not get the same layout:
+  /** The gram SNAPSHOT persists hive-partitioned on its block-key bucket
+    * so the next bump's probe partition-prunes the corpus-sized history
+    * scan to the delta's buckets
+    * ([[graft.pipeline.PipelineOps.pruneGramHistory]]). Delta grams are
+    * written flat: they are delta-sized, the 64-bucket write was the
+    * slowest write of a delta commit and most of its files, and on their
+    * rows the `gbucket` filter is still correct as a plain row filter.
+    * (The labeled EDGE state deliberately does not get the layout at all:
     * its per-bump filter key is the touched components' membership, which
     * in a dup-dense corpus spans the whole bucket space — measured, the
     * partition overhead cost more than the never-firing prune saved.) */

@@ -285,28 +285,6 @@ object SemDedupStream {
     (TrainedState(members, edges), SemDelta(newMembers, newEdges))
   }
 
-  /** [[retire]] for the trained family (members carry the probe `rank`
-    * column; the retirement is schema-agnostic over it). p52's cap counts
-    * MEMBERSHIP rows (a vector occupies up to [[PipelineOps.IvfProbes]]
-    * cells), and retire's census counts the same rows, so incremental and
-    * one-shot caps bite at identical sizes. */
-  def retireTrained(
-      state: TrainedState, retiredIds: DataFrame,
-      maxCell: Int, threshold: Double): (TrainedState, DataFrame, DataFrame) = {
-    val (st, reopened, rebuilt) =
-      retire(SemState(state.members, state.edges), retiredIds, maxCell, threshold)
-    (TrainedState(st.members, st.edges), reopened, rebuilt)
-  }
-
-  /** [[foldSemChain]] for the trained family (members carry the probe
-    * `rank` column; the fold is schema-agnostic over it). */
-  def foldTrainedChain(
-      snap: Map[String, DataFrame],
-      deltas: Seq[Map[String, DataFrame]]): TrainedState = {
-    val folded = foldSemChain(snap, deltas)
-    TrainedState(folded.members, folded.edges)
-  }
-
   /** Verdict from the trained state — p52's shape: rank-1 cell, smallest
     * similar lower id over edges in currently-open cells. */
   def trainedVerdict(allVecIds: DataFrame, state: TrainedState, maxCell: Int): DataFrame = {

@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.pipeline.ArtifactStore
 
 /** Durable checkpoint store for the incremental-dedup carried state — the
@@ -20,11 +23,26 @@ import graft.pipeline.ArtifactStore
   * base pointer, the chain walk ([[loadChain]]), and the prune point — a
   * snapshot commit retires everything before the previous chain's START.
   *
+  * Every version records its tables' schemas in a `_SCHEMA` file (one
+  * `name<TAB>schema JSON` line per table, written before `_COMMITTED`),
+  * and every read passes the recorded schema to the parquet reader. An
+  * inferred read runs one Spark job per table to read a footer; a chain
+  * read with recorded schemas runs none. A committed version with no
+  * record is refused with a [[MissingSchemaException]] — it was written
+  * by an older format, and inference is not a fallback.
+  *
   * StreamStateSpec kills the in-memory state between refreshes, reloads
   * from disk, and proves the final verdict identical to the
   * never-restarted run — plus the crash-before-commit,
   * two-concurrent-writers, and prune behaviors of the protocol itself. */
 object StateStore {
+
+  /** A committed version without its `_SCHEMA` record — refused rather
+    * than read with inferred schemas. */
+  final class MissingSchemaException(val dir: String, val version: Long)
+      extends IllegalStateException(
+        s"state version $dir/v$version has no _SCHEMA record — it was written by " +
+        "an older on-disk format; found the state again from its source")
 
   private def baseOf(spark: SparkSession, dir: String, v: Long): Option[Long] =
     ArtifactStore.readText(spark, s"$dir/v$v/_DELTA").map(_.trim.toLong)
@@ -47,10 +65,30 @@ object StateStore {
     chain
   }
 
+  /** The schemas recorded for version `v`, table name → read schema. */
+  private def schemasOf(spark: SparkSession, dir: String, v: Long): Map[String, StructType] =
+    ArtifactStore.readText(spark, s"$dir/v$v/_SCHEMA")
+      .getOrElse(throw new MissingSchemaException(dir, v))
+      .linesIterator.filter(_.nonEmpty).map { line =>
+        val tab = line.indexOf('\t')
+        line.take(tab) -> DataType.fromJson(line.drop(tab + 1)).asInstanceOf[StructType]
+      }.toMap
+
+  /** Version `v`'s tables `names`, read with their recorded schemas. */
+  private def read(spark: SparkSession, dir: String, v: Long, names: Seq[String])
+      : Map[String, DataFrame] = {
+    val schemas = schemasOf(spark, dir, v)
+    names.map { n =>
+      val schema = schemas.getOrElse(n, throw new IllegalStateException(
+        s"state version $dir/v$v has no table '$n'"))
+      n -> spark.read.schema(schema).parquet(s"$dir/v$v/$n.parquet")
+    }.toMap
+  }
+
   /** Persist `tables` as the next state version; returns the version.
     * `partitions` (table name → partition columns) writes those tables
     * hive-partitioned — the physical-layout knob that lets a consuming
-    * probe partition-prune a state scan (the gram state's `gbucket`
+    * probe partition-prune a state scan (the gram snapshot's `gbucket`
     * layout; see [[graft.pipeline.PipelineOps.pruneGramHistory]]). */
   def save(
       dir: String,
@@ -70,12 +108,12 @@ object StateStore {
     * [[DedupStream.foldPairChain]]). Fold cost is read-side and lazy:
     * the chain is parquet scans under the consuming query's plan. Bound
     * the chain with a periodic [[save]] of the folded state (compaction
-    * — [[chainLength]] tells you when), which prunes the chain. */
-  def saveDelta(
-      dir: String,
-      tables: Map[String, DataFrame],
-      partitions: Map[String, Seq[String]] = Map.empty): Long =
-    commit(dir, tables, delta = true, partitions)
+    * — [[chainLength]] tells you when), which prunes the chain. Delta
+    * tables are delta-sized, so each is written flat as one file: a
+    * partitioned layout, or one file per task, would only multiply the
+    * small files every later chain read lists and opens. */
+  def saveDelta(dir: String, tables: Map[String, DataFrame]): Long =
+    commit(dir, tables, delta = true)
 
   /** Number of delta versions stacked on the current chain's snapshot —
     * 0 when the current version is itself a snapshot; the compaction
@@ -91,14 +129,12 @@ object StateStore {
       spark: SparkSession,
       dir: String,
       snapshotNames: Seq[String],
-      deltaNames: Seq[String]): Option[(Map[String, DataFrame], Seq[Map[String, DataFrame]])] = {
-    def read(v: Long, names: Seq[String]): Map[String, DataFrame] =
-      names.map(n => n -> spark.read.parquet(s"$dir/v$v/$n.parquet")).toMap
+      deltaNames: Seq[String]): Option[(Map[String, DataFrame], Seq[Map[String, DataFrame]])] =
     ArtifactStore.currentVersion(spark, dir).map { v =>
       val chain = chainOf(spark, dir, v)
-      (read(chain.head, snapshotNames), chain.tail.map(read(_, deltaNames)))
+      (read(spark, dir, chain.head, snapshotNames),
+        chain.tail.map(read(spark, dir, _, deltaNames)))
     }
-  }
 
   /** One shared pool for the overlapped commit writes — per-commit pool
     * churn created 9+ executors per CDC chain entry, and a shared pool is
@@ -115,6 +151,20 @@ object StateStore {
           t
         }
       })
+
+  /** A delta table is delta-sized: one file, not one per task. A frame
+    * that reads no files — built from driver rows and pinned frames,
+    * whose rows are already computed — coalesces to one task, the one
+    * writer a single file needs anyway. A frame that scans files may scan
+    * corpus-sized state to produce its few rows (a filter or a join over
+    * the carried state), so it goes through one small shuffle and the
+    * scan keeps its parallelism. */
+  private def oneFile(df: DataFrame): DataFrame =
+    if (df.queryExecution.analyzed.collectLeaves().forall {
+          case _: LocalRelation | _: LogicalRDD => true
+          case _ => false
+        }) df.coalesce(1)
+    else df.repartition(1)
 
   private def commit(
       dir: String,
@@ -147,7 +197,7 @@ object StateStore {
         name -> Future {
           val path = s"$vdir/$name.parquet"
           partitions.getOrElse(name, Seq.empty) match {
-            case Seq() => df.write.mode("overwrite").parquet(path)
+            case Seq() => (if (delta) oneFile(df) else df).write.mode("overwrite").parquet(path)
             case cols =>
               // Cluster on the partition key first: without it every
               // write task fans out one file into every partition
@@ -182,6 +232,15 @@ object StateStore {
         }.get
       }
     }
+    // the read schemas: a hive-partitioned table reads back with its
+    // partition columns last, typed as written (inference would narrow them)
+    ArtifactStore.writeText(spark, s"$vdir/_SCHEMA", tables.toSeq.sortBy(_._1).map {
+      case (name, df) =>
+        val cols = partitions.getOrElse(name, Seq.empty)
+        val schema = StructType(
+          df.schema.filterNot(f => cols.contains(f.name)) ++ cols.map(df.schema(_)))
+        s"$name\t${schema.json}"
+    }.mkString("\n"))
     if (delta) ArtifactStore.writeText(spark, s"$vdir/_DELTA", prev.get.toString)
     ArtifactStore.publish(spark, dir, vdir)
     // prune: a SNAPSHOT commit retires the previous chain — delete
@@ -204,7 +263,7 @@ object StateStore {
       if (baseOf(spark, dir, v).isDefined)
         throw new IllegalStateException(
           s"$dir head v$v is a delta — read the chain via loadChain")
-      names.map(n => n -> spark.read.parquet(s"$dir/v$v/$n.parquet")).toMap
+      read(spark, dir, v, names)
     }
 
   /** Physical path of `name`'s parquet in the CURRENT committed version —

@@ -78,6 +78,16 @@ class IncrementalCcFuzzSpec extends AnyFunSuite {
       s"expected both routes, got ${rebuilt.mkString(",")}")
   }
 
+  test("collectBounded: every row in partition order within the bound, None once the " +
+       "partitions' total passes it, also when each partition alone is under it") {
+    val df = spark.range(0, 24, 1, 8).toDF("id") // 8 partitions of 3 rows
+    assert(IncrementalCc.collectBounded(df, 24).map(_.map(_.getLong(0)).toSeq) ==
+      Some(0L until 24L))
+    assert(IncrementalCc.collectBounded(df, 23).isEmpty)
+    assert(IncrementalCc.collectBounded(df, 5).isEmpty)
+    assert(IncrementalCc.collectBounded(df.where(col("id") < 0), 0).map(_.length) == Some(0))
+  }
+
   test("a NULL-keyed new pair is dropped at entry: the same delta as without it, on both routes") {
     val (l0, p0) = IncrementalCc.initial(
       Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"))

@@ -31,19 +31,40 @@ class IngestBumpSpec extends AnyFunSuite {
   private val s2 = snap(rev(rev(d.where(col("doc_id") % 10 =!= 1), 7, 3, " rev2"), 13, 4, " rev3"))
   private val chain = Seq(s0, s1, s2)
 
+  // the feed the ingest log would carry from `prev` to `next` (the spec
+  // pays the full-snapshot diff so the code under test doesn't have to)
+  private def feedBetween(prev: DataFrame, next: DataFrame) = {
+    val pk = prev.select(col("doc_id"), md5(col("text")).as("h0"))
+    val nk = next.select(col("doc_id"), md5(col("text")).as("h1"))
+    IngestBump.CorpusDelta(
+      removedIds = pk.join(nk, Seq("doc_id"), "left_anti").select("doc_id"),
+      changed = next.join(
+        pk.join(nk, "doc_id").where(col("h0") =!= col("h1")).select("doc_id"),
+        Seq("doc_id"), "left_semi"),
+      added = next.join(pk, Seq("doc_id"), "left_anti"))
+  }
+
   test("text chain: every bump's verdict equals the from-scratch p36 of its snapshot, " +
        "and the carried state stays canonical (exactly the snapshot's survivor grams)") {
     val root = Files.createTempDirectory("graft_bump_text").toString
     for (si <- chain) {
       val a = IngestBump.bump(spark, root, si)
       assert(rowImage(a.verdict) == rowImage(PipelineOps.dedupVerdictOf(si)))
+      // format 2 layout: the gram snapshot is gbucket-partitioned, a delta
+      // version's grams are one flat file
+      val text = s"$root/text"
+      val grams = new java.io.File(
+        s"$text/v${ArtifactStore.currentVersion(spark, text).get}/grams.parquet")
+      val buckets = grams.list().count(_.startsWith("gbucket="))
+      if (StateStore.chainLength(spark, text) == 0) assert(buckets > 1, s"$grams")
+      else assert(buckets == 0 && grams.list().count(_.endsWith(".parquet")) == 1, s"$grams")
       // state canonicality: after retire + batch, the FOLDED gram state
       // (the delta chain collapsed) must be row-identical to gramming the
       // snapshot's survivors from scratch — no stale grams (a revised
       // doc's old text), no duplicates (a replayed batch), no leaks (a
       // departed doc)
-      val grams = IngestBump.textState(spark, root).get("grams")
-      assert(rowImage(grams.select("doc_id", "grams")) ==
+      val folded = IngestBump.textState(spark, root).get("grams")
+      assert(rowImage(folded.select("doc_id", "grams")) ==
         rowImage(PipelineOps.ngramGrams(PipelineOps.survivorsOf(si)
           .select("doc_id", "text", "lang", "source", "n_chars")).select("doc_id", "grams")))
       val st = IngestBump.textState(spark, root).get
@@ -61,17 +82,7 @@ class IngestBumpSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_bump_cdc").toString
     IngestBump.bump(spark, root, s0)
     for ((prev, next) <- chain.zip(chain.tail)) {
-      // derive the feed the ingest log would carry (the spec pays the
-      // full-snapshot diff so the code under test doesn't have to)
-      val pk = prev.select(col("doc_id"), md5(col("text")).as("h0"))
-      val nk = next.select(col("doc_id"), md5(col("text")).as("h1"))
-      val delta = IngestBump.CorpusDelta(
-        removedIds = pk.join(nk, Seq("doc_id"), "left_anti").select("doc_id"),
-        changed = next.join(
-          pk.join(nk, "doc_id").where(col("h0") =!= col("h1")).select("doc_id"),
-          Seq("doc_id"), "left_semi"),
-        added = next.join(pk, Seq("doc_id"), "left_anti"))
-      val v = IngestBump.bumpTextCdc(spark, root, delta, next)
+      val v = IngestBump.bumpTextCdc(spark, root, feedBetween(prev, next), next)
       assert(rowImage(v) == rowImage(PipelineOps.dedupVerdictOf(next)))
     }
     val st = IngestBump.textState(spark, root).get
@@ -88,6 +99,49 @@ class IngestBumpSpec extends AnyFunSuite {
       st("pairs").select(col("doc_a"), col("doc_b")))))
   }
 
+  test("a CDC feed past the driver bound re-founds the text state from the snapshot " +
+       "(a fresh snapshot version, verdict from-scratch), and later bumps build on it") {
+    val root = Files.createTempDirectory("graft_bump_bound").toString
+    val text = s"$root/text"
+    IngestBump.bump(spark, root, s0)
+    IngestBump.bumpTextCdc(spark, root, feedBetween(s0, s1), s1)
+    assert(StateStore.chainLength(spark, text) == 1)
+    val v1 = IngestBump.bumpTextCdc(spark, root, feedBetween(s0, s1), s1, None, 64L, 1)
+    assert(rowImage(v1) == rowImage(PipelineOps.dedupVerdictOf(s1)))
+    assert(StateStore.chainLength(spark, text) == 0)
+    assert(rowImage(IngestBump.textState(spark, root).get("livelog")) ==
+      rowImage(DedupStream.arrivalLog(s1)))
+    val v2 = IngestBump.bumpTextCdc(spark, root, feedBetween(s1, s2), s2)
+    assert(rowImage(v2) == rowImage(PipelineOps.dedupVerdictOf(s2)))
+    assert(StateStore.chainLength(spark, text) == 1)
+  }
+
+  test("a hot hash past the driver bound re-founds the text state: the feed and the " +
+       "departing rows fit the bound, the touched hash's members do not") {
+    val root = Files.createTempDirectory("graft_bump_hot").toString
+    val text = s"$root/text"
+    val hot = lit("boilerplate footer shared by every fourth document")
+    val base = d.withColumn("text", when(col("doc_id") % 4 === 1, hot).otherwise(col("text")))
+    val h0 = snap(base)
+    val hA = snap(rev(base, 7, 3, " rev2"))
+    // one doc outside the hot hash joins it: a one-row feed
+    val joiner = hA.where(col("doc_id") % 4 === 2 && col("doc_id") % 7 =!= 3)
+      .agg(min("doc_id")).first().getLong(0)
+    val h1 = snap(hA.withColumn("text", when(col("doc_id") === joiner, hot).otherwise(col("text"))))
+    val bound = 4
+    val feed = feedBetween(hA, h1)
+    assert(feed.removedIds.count() == 0 && feed.changed.count() == 1 && feed.added.count() == 0)
+    assert(h1.where(col("text") === hot).count() > 2 * bound)
+    IngestBump.bump(spark, root, h0)
+    IngestBump.bumpTextCdc(spark, root, feedBetween(h0, hA), hA)
+    assert(StateStore.chainLength(spark, text) == 1)
+    val v1 = IngestBump.bumpTextCdc(spark, root, feed, h1, None, 64L, bound)
+    assert(rowImage(v1) == rowImage(PipelineOps.dedupVerdictOf(h1)))
+    assert(StateStore.chainLength(spark, text) == 0)
+    assert(rowImage(IngestBump.textState(spark, root).get("livelog")) ==
+      rowImage(DedupStream.arrivalLog(h1)))
+  }
+
   test("CDC replay idempotency: re-running an already-committed bump (the crash " +
        "contract's at-least-once case) duplicates nothing — livelog, verdict, and the " +
        "published p60 table all stay single-row per doc") {
@@ -95,14 +149,7 @@ class IngestBumpSpec extends AnyFunSuite {
     val facade = Files.createTempDirectory("graft_bump_replay_pub").toString
     IngestBump.bump(spark, root, s0)
     s1.write.mode("overwrite").parquet(s"$facade/documents.parquet")
-    val pk = s0.select(col("doc_id"), md5(col("text")).as("h0"))
-    val nk = s1.select(col("doc_id"), md5(col("text")).as("h1"))
-    val delta = IngestBump.CorpusDelta(
-      removedIds = pk.join(nk, Seq("doc_id"), "left_anti").select("doc_id"),
-      changed = s1.join(
-        pk.join(nk, "doc_id").where(col("h0") =!= col("h1")).select("doc_id"),
-        Seq("doc_id"), "left_semi"),
-      added = s1.join(pk, Seq("doc_id"), "left_anti"))
+    val delta = feedBetween(s0, s1)
     IngestBump.bumpTextCdc(spark, root, delta, s1, publishDir = Some(facade))
     // the replay: same delta, same corpus — a crashed-after-commit driver
     // re-delivering the bump
@@ -231,9 +278,11 @@ class IngestBumpSpec extends AnyFunSuite {
     IngestBump.bumpSummaries(spark, fresh, fact, Nil)
     assert(stamp(fresh).contains(IngestBump.FormatVersion.toString))
 
-    // another stamp
-    ArtifactStore.writeText(spark, s"$fresh/_FORMAT", "0")
-    refusedEverywhere(fresh, Some("0"))
+    // another stamp, older formats included
+    Seq("0", "1").foreach { f =>
+      ArtifactStore.writeText(spark, s"$fresh/_FORMAT", f)
+      refusedEverywhere(fresh, Some(f))
+    }
 
     // state under no stamp
     val unstamped = Files.createTempDirectory("graft_bump_fmt_none").toString
@@ -301,8 +350,7 @@ class IngestBumpSpec extends AnyFunSuite {
       val si = snap(rev(small.where(col("doc_id") % 17 =!= i % 17), 11, i % 11, s" r$i"))
       val a = IngestBump.bump(spark, root, si)
       maxLen = math.max(maxLen, StateStore.chainLength(spark, s"$root/text"))
-      if (i == IngestBump.SnapshotEvery + 1)
-        assert(rowImage(a.verdict) == rowImage(PipelineOps.dedupVerdictOf(si)))
+      assert(rowImage(a.verdict) == rowImage(PipelineOps.dedupVerdictOf(si)), s"bump $i")
     }
     // the chain crossed the cadence exactly once and collapsed
     assert(maxLen == IngestBump.SnapshotEvery - 1, s"max chain length $maxLen")

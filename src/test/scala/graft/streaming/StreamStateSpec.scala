@@ -331,4 +331,62 @@ class StreamStateSpec extends AnyFunSuite {
       s"expected hive layout under $v2")
     assert(StateStore.load(spark, dir, Seq("t")).get("t").count() == 2)
   }
+
+  test("a delta chain of depth 3 loads with its recorded schemas: no Spark job") {
+    import spark.implicits._
+    val dir = tmpDir("schemachain")
+    StateStore.save(dir,
+      Map("t" -> Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "v", "p"),
+        "u" -> Seq(1.5).toDF("x")),
+      partitions = Map("t" -> Seq("p")))
+    (3L to 5L).foreach(i => StateStore.saveDelta(dir, Map("d" -> Seq((i, s"r$i")).toDF("id", "v"))))
+    assert(StateStore.chainLength(spark, dir) == 3)
+    val (loaded, census) = graft.JobCensus.of(spark)(
+      StateStore.loadChain(spark, dir, Seq("t", "u"), Seq("d")).get)
+    assert(census.total == 0, s"chain load ran jobs:\n${census.report}")
+    val (snap, deltas) = loaded
+    assert(snap("t").as[(Long, String, Int)].collect().sorted.toSeq ==
+      Seq((1L, "a", 0), (2L, "b", 1)))
+    assert(deltas.map(_("d").as[(Long, String)].head()) == Seq(3L, 4L, 5L).map(i => (i, s"r$i")))
+  }
+
+  test("a committed version without its _SCHEMA record is refused with the typed error") {
+    import spark.implicits._
+    val dir = tmpDir("noschema")
+    StateStore.save(dir, Map("t" -> Seq(1L).toDF("id")))
+    StateStore.saveDelta(dir, Map("d" -> Seq(2L).toDF("id")))
+    new java.io.File(s"$dir/v2/_SCHEMA").delete()
+    val e = intercept[StateStore.MissingSchemaException](
+      StateStore.loadChain(spark, dir, Seq("t"), Seq("d")))
+    assert(e.dir == dir && e.version == 2L && e.getMessage.contains("_SCHEMA"))
+    StateStore.save(dir, Map("t" -> Seq(3L).toDF("id")))
+    new java.io.File(s"$dir/v3/_SCHEMA").delete()
+    assert(intercept[StateStore.MissingSchemaException](
+      StateStore.load(spark, dir, Seq("t"))).version == 3L)
+  }
+
+  test("the recorded schema round trip keeps nullability and the partition column's type") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = tmpDir("schemaround")
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("v", StringType, nullable = true),
+      StructField("xs", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField("p", LongType, nullable = false)))
+    val df = spark.createDataFrame(
+      java.util.List.of(Row(1L, "a", Seq(1L), 0L), Row(2L, null, Seq.empty[Long], 7L)), schema)
+    StateStore.save(dir, Map("t" -> df), partitions = Map("t" -> Seq("p")))
+    val loaded = StateStore.load(spark, dir, Seq("t")).get("t")
+    val inferred = spark.read.parquet(s"$dir/v1/t.parquet")
+    // the partition column reads back as written; inference narrows it
+    assert(loaded.schema("p").dataType == LongType)
+    assert(inferred.schema("p").dataType == IntegerType)
+    // every data column: the same type and nullability an inferred read gives
+    assert(loaded.schema.fields.init.toSeq == inferred.schema.fields.init.toSeq)
+    assert(loaded.schema.fieldNames.toSeq == Seq("id", "v", "xs", "p"))
+    assert(loaded.schema("p").nullable == inferred.schema("p").nullable)
+    assert(loaded.orderBy("id").collect().toSeq.map(_.toSeq) ==
+      Seq(Seq(1L, "a", Seq(1L), 0L), Seq(2L, null, Seq.empty[Long], 7L)))
+  }
 }
