@@ -900,41 +900,12 @@ object PipelineOps {
 
   private val gramBlockCols = Seq("lang", "source", "block")
 
-  /** Physical-layout bucket count for the PERSISTED gram state. Each doc
-    * has exactly ONE (lang, source, block) key, so its bucket is a pure
-    * function of that key — and a candidate pair requires block-key
-    * EQUALITY, so a delta batch can only ever collide with history rows
-    * in ITS OWN buckets. Persisting the gram state partitioned by this
-    * column lets the per-bump probe partition-prune the on-disk gram
-    * history to the batch's bucket set instead of scanning all of it —
-    * the residual O(corpus) term the CDC text marginal carried. 64: wide
-    * enough that a small delta (few distinct block keys) prunes hard,
-    * narrow enough that per-version partition directories stay coarse. */
-  private[graft] val GramStateBuckets = 64
-
-  private def gramBucketCol: org.apache.spark.sql.Column =
-    pmod(hash(gramBlockCols.map(col): _*), lit(GramStateBuckets))
-
-  /** Restrict the gram HISTORY to the buckets `batch` can collide with.
-    * Lossless for pair discovery (bucket is a function of the equality
-    * key); the bucket-set collect is bounded by [[GramStateBuckets]] and
-    * delta-sized to compute. Against a state persisted partitioned on
-    * `gbucket` the isin filter reaches the parquet scan as a partition
-    * filter — only the matching directories are read. */
-  private[graft] def pruneGramHistory(hist: DataFrame, batch: DataFrame): DataFrame = {
-    val buckets = batch.select("gbucket").distinct().collect().map(_.get(0))
-    if (buckets.length >= GramStateBuckets) hist
-    else hist.where(col("gbucket").isin(buckets: _*))
-  }
-
   /** Gram stage of p06: per-doc sorted distinct trigram hashes + block
-    * keys (+ the persisted-layout bucket of that key). Arrays sorted once
-    * per doc so the pair stage intersects via a native merge walk
-    * (SortedIntersectCount) instead of a per-pair hash set. Exposed so
-    * DedupStream's incremental refresh can gram ONLY the new survivors
-    * and persist the result as state. */
-  private[graft] def ngramGrams(d: DataFrame): DataFrame =
-    ngramGramsParam(d, 3, 100).withColumn("gbucket", gramBucketCol)
+    * keys. Arrays sorted once per doc so the pair stage intersects via a
+    * native merge walk (SortedIntersectCount) instead of a per-pair hash
+    * set. Exposed so DedupStream's incremental refresh can gram ONLY the
+    * new survivors and persist the result as state. */
+  private[graft] def ngramGrams(d: DataFrame): DataFrame = ngramGramsParam(d, 3, 100)
 
   /** Gram stage over an arbitrary (gram width, length-block width). */
   private def ngramGramsParam(d: DataFrame, gramWidth: Int, blockWidth: Int): DataFrame =

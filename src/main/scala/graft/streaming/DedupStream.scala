@@ -92,17 +92,20 @@ object DedupStream {
     * Connected components still rerun over the accumulated edges — edges
     * are hash-pair-sized, orders of magnitude below the text, and cluster
     * merges across old batches (A~B discovered now joining B~C from then)
-    * fall out of the relabel for free. */
+    * fall out of the relabel for free. [[IngestBump]]'s production bumps
+    * maintain labels incrementally instead ([[IncrementalCc]]) and never
+    * pay a full CC per bump. */
   def refreshVerdictIncremental(
       survivors: DataFrame,
       newSurvivors: DataFrame,
       arrivals: DataFrame,
       prev: Option[PairState]): (DataFrame, PairState) = {
-    val (v, st, _) = refreshVerdictDelta(survivors, newSurvivors, arrivals, prev)
-    // this entry point carries state IN MEMORY across refreshes (the
-    // multi-batch loops) — pin it so lineage doesn't deepen per batch;
-    // the delta entry point leaves state lazy over the chain files
-    (v, PairState(st.grams.pinned(false), st.pairs.pinned(false)))
+    val pd = discoverPairs(newSurvivors, prev.map(_.grams))
+    val grams = prev.map(_.grams.unionByName(pd.newGrams)).getOrElse(pd.newGrams)
+    val pairs = prev.map(_.pairs.unionByName(pd.newPairs)).getOrElse(pd.newPairs)
+    // the state is carried IN MEMORY across refreshes (the multi-batch
+    // loops) — pin it so lineage doesn't deepen per batch
+    (verdictFrom(survivors, arrivals, pairs), PairState(grams.pinned(false), pairs.pinned(false)))
   }
 
   /** The delta payload of one incremental refresh — exactly the rows the
@@ -117,26 +120,6 @@ object DedupStream {
     * batch, and the batch is anti-joined against valid ids — so the fold
     * needs no distinct. */
   final case class PairDelta(newGrams: DataFrame, newPairs: DataFrame)
-
-  /** [[refreshVerdictIncremental]], also returning the delta payload.
-    * Labels rebuild globally here (one CC over the accumulated edges) —
-    * the oracle-scaffolded in-query paths' shape; [[IngestBump]]'s
-    * production bumps maintain labels incrementally instead
-    * ([[IncrementalCc]]) and never pay a full CC per bump. Only the
-    * DELTA-sized frames pin (they're read several times); the folded
-    * state stays lazy — an O(state) localCheckpoint here would
-    * re-materialize the corpus gram history in the block manager on
-    * every bump, the very amplification delta persistence removes. */
-  def refreshVerdictDelta(
-      survivors: DataFrame,
-      newSurvivors: DataFrame,
-      arrivals: DataFrame,
-      prev: Option[PairState]): (DataFrame, PairState, PairDelta) = {
-    val pd = discoverPairs(newSurvivors, prev.map(_.grams))
-    val allGrams = prev.map(_.grams.unionByName(pd.newGrams)).getOrElse(pd.newGrams)
-    val pairs = prev.map(_.pairs.unionByName(pd.newPairs)).getOrElse(pd.newPairs)
-    (verdictFrom(survivors, arrivals, pairs), PairState(allGrams, pairs), pd)
-  }
 
   /** Fold a [[StateStore.loadChain]] text-state chain back into the live
     * state: each delta retires its `retired` survivor ids from
@@ -205,21 +188,13 @@ object DedupStream {
     * canonicalized + deduped. The returned newGrams/newPairs are the
     * DELTA payload; callers that maintain labels incrementally
     * ([[IngestBump]]) take it from here, callers that rebuild labels
-    * globally go through [[refreshVerdictDelta]]. */
+    * globally go through [[refreshVerdictIncremental]]. */
   def discoverPairs(
       newSurvivors: DataFrame, prevGrams: Option[DataFrame]): PairDelta = {
     val newGrams = PipelineOps.ngramGrams(
         newSurvivors.select("doc_id", "text", "lang", "source", "n_chars"))
       .pinned(false)
-    // bucket-prune the history to the batch's block-key buckets before the
-    // probe: a candidate needs block-key EQUALITY, so history rows outside
-    // the batch's buckets can never pair with it. Against the
-    // gbucket-partitioned persisted state ([[IngestBump]]'s layout) the
-    // filter partition-prunes the on-disk gram-history scan — the probe
-    // reads only its buckets instead of the corpus.
-    val allGrams = prevGrams
-      .map(h => PipelineOps.pruneGramHistory(h, newGrams).unionByName(newGrams))
-      .getOrElse(newGrams)
+    val allGrams = prevGrams.map(_.unionByName(newGrams)).getOrElse(newGrams)
     val newPairs = PipelineOps.ngramPairsAgainst(allGrams, newGrams)
       .select(col("doc_a"), col("doc_b")).distinct().pinned(false)
     PairDelta(newGrams, newPairs)

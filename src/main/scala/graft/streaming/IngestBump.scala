@@ -59,8 +59,8 @@ import graft.pipeline.PipelineOps.PinnedFrame
   * never a torn state.
   *
   * On-disk format: a root is stamped with [[FormatVersion]] (the
-  * `_FORMAT` file at the root; format 2 = `_SCHEMA`-recorded versions and
-  * flat delta grams) when its first family state is founded,
+  * `_FORMAT` file at the root; format 3 = `_SCHEMA`-recorded versions and
+  * every state table flat) when its first family state is founded,
   * and every public entry refuses a root that holds family state under
   * another stamp, or under none, with a [[StateFormatException]] — such
   * a root is founded again from a snapshot with [[bump]].
@@ -113,10 +113,11 @@ object IngestBump {
 
   /** The on-disk format every state family under a root is written in;
     * bump it with any change a reader of older state cannot fold. Format
-    * 2: every state version records its tables' schemas (`_SCHEMA`, see
-    * [[StateStore]]), and text delta versions write their grams flat —
-    * only the gram snapshot is `gbucket`-partitioned. */
-  val FormatVersion = 2
+    * 3: every state version records its tables' schemas (`_SCHEMA`, see
+    * [[StateStore]]), and every table is flat — the gram snapshot too
+    * (format 2 partitioned it on a bucket column that flat grams do not
+    * carry, so its snapshot cannot fold with format-3 deltas). */
+  val FormatVersion = 3
 
   /** A root whose family state was written in another (or no stamped)
     * format — refused rather than misread. */
@@ -542,7 +543,7 @@ object IngestBump {
     val folded = DedupStream.foldPairChain(m, Seq(stateDelta))
     if (StateStore.chainLength(spark, dir) + 1 >= SnapshotEvery)
       StateStore.save(dir,
-        folded ++ Map("survhash" -> newSurvIds, "livelog" -> livelog), TextPartitions)
+        folded ++ Map("survhash" -> newSurvIds, "livelog" -> livelog))
     else StateStore.saveDelta(dir, stateDelta)
     DedupStream.verdictFromLabels(newSurvIds, livelog, folded("labels"))
       .pinned(false)
@@ -602,19 +603,6 @@ object IngestBump {
     * amplification (the corpus-sized gram rewrite lands on 1 bump in 8). */
   private[streaming] val SnapshotEvery = 8
 
-  /** The gram SNAPSHOT persists hive-partitioned on its block-key bucket
-    * so the next bump's probe partition-prunes the corpus-sized history
-    * scan to the delta's buckets
-    * ([[graft.pipeline.PipelineOps.pruneGramHistory]]). Delta grams are
-    * written flat: they are delta-sized, the 64-bucket write was the
-    * slowest write of a delta commit and most of its files, and on their
-    * rows the `gbucket` filter is still correct as a plain row filter.
-    * (The labeled EDGE state deliberately does not get the layout at all:
-    * its per-bump filter key is the touched components' membership, which
-    * in a dup-dense corpus spans the whole bucket space — measured, the
-    * partition overhead cost more than the never-firing prune saved.) */
-  private val TextPartitions = Map("grams" -> Seq("gbucket"))
-
   private val TextSnapTables =
     Seq("grams", "pairs", "labels", "survhash", "livelog")
   private val TextDeltaTables = Seq(
@@ -646,7 +634,7 @@ object IngestBump {
     StateStore.save(dir, Map(
       "grams" -> pd.newGrams, "pairs" -> labeled, "labels" -> labels,
       "survhash" -> newSurv.select("doc_id", "content_hash"),
-      "livelog" -> arrivals), TextPartitions)
+      "livelog" -> arrivals))
     DedupStream.verdictFromLabels(newSurv, arrivals, labels).pinned(false)
   }
 

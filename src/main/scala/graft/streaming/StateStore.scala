@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
@@ -86,15 +85,9 @@ object StateStore {
   }
 
   /** Persist `tables` as the next state version; returns the version.
-    * `partitions` (table name → partition columns) writes those tables
-    * hive-partitioned — the physical-layout knob that lets a consuming
-    * probe partition-prune a state scan (the gram snapshot's `gbucket`
-    * layout; see [[graft.pipeline.PipelineOps.pruneGramHistory]]). */
-  def save(
-      dir: String,
-      tables: Map[String, DataFrame],
-      partitions: Map[String, Seq[String]] = Map.empty): Long =
-    commit(dir, tables, delta = false, partitions)
+    * Every table is written flat, with the frame's own partitioning. */
+  def save(dir: String, tables: Map[String, DataFrame]): Long =
+    commit(dir, tables, delta = false)
 
   /** LSM-style delta commit: persist ONLY the delta payload (new rows /
     * retirement keys — whatever the domain's fold consumes) as the next
@@ -109,9 +102,9 @@ object StateStore {
     * the chain is parquet scans under the consuming query's plan. Bound
     * the chain with a periodic [[save]] of the folded state (compaction
     * — [[chainLength]] tells you when), which prunes the chain. Delta
-    * tables are delta-sized, so each is written flat as one file: a
-    * partitioned layout, or one file per task, would only multiply the
-    * small files every later chain read lists and opens. */
+    * tables are delta-sized, so each is written as one file: one file
+    * per task would only multiply the small files every later chain read
+    * lists and opens. */
   def saveDelta(dir: String, tables: Map[String, DataFrame]): Long =
     commit(dir, tables, delta = true)
 
@@ -166,14 +159,9 @@ object StateStore {
         }) df.coalesce(1)
     else df.repartition(1)
 
-  private def commit(
-      dir: String,
-      tables: Map[String, DataFrame],
-      delta: Boolean,
-      partitions: Map[String, Seq[String]] = Map.empty): Long = {
+  private def commit(dir: String, tables: Map[String, DataFrame], delta: Boolean): Long = {
     require(tables.nonEmpty, "cannot checkpoint an empty table set")
     val spark = tables.head._2.sparkSession
-    val fs = ArtifactStore.fsOf(spark, dir)
     val prev = ArtifactStore.currentVersion(spark, dir)
     require(!delta || prev.isDefined, "a delta commit needs a base version")
     val (next, vdir) = ArtifactStore.claimVersion(spark, dir)
@@ -195,27 +183,7 @@ object StateStore {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(writePool)
       val writes: Seq[(String, Future[Try[Unit]])] = tables.toSeq.map { case (name, df) =>
         name -> Future {
-          val path = s"$vdir/$name.parquet"
-          partitions.getOrElse(name, Seq.empty) match {
-            case Seq() => (if (delta) oneFile(df) else df).write.mode("overwrite").parquet(path)
-            case cols =>
-              // Cluster on the partition key first: without it every
-              // write task fans out one file into every partition
-              // directory (tasks × partitions small files, and the scan
-              // overhead eats the pruning win).
-              df.repartition(cols.map(org.apache.spark.sql.functions.col): _*)
-                .write.mode("overwrite").partitionBy(cols: _*).parquet(path)
-              // a hive-partitioned write of an EMPTY frame emits no data
-              // files at all, so the read-back cannot infer a schema —
-              // detect that from the written directory (data lands in
-              // `col=value/` subdirectories; an empty write leaves only
-              // _SUCCESS) and fall back to a plain (metadata-only)
-              // parquet file. One FS listing instead of the old isEmpty
-              // pre-probe, which was an extra Spark job per partitioned
-              // table on the hot CDC path.
-              if (!fs.listStatus(new HPath(path)).exists(_.isDirectory))
-                df.write.mode("overwrite").parquet(path)
-          }
+          (if (delta) oneFile(df) else df).write.mode("overwrite").parquet(s"$vdir/$name.parquet")
         }.transform(Success(_))
       }
       // Drain discipline: await EVERY write to completion before
@@ -232,14 +200,8 @@ object StateStore {
         }.get
       }
     }
-    // the read schemas: a hive-partitioned table reads back with its
-    // partition columns last, typed as written (inference would narrow them)
     ArtifactStore.writeText(spark, s"$vdir/_SCHEMA", tables.toSeq.sortBy(_._1).map {
-      case (name, df) =>
-        val cols = partitions.getOrElse(name, Seq.empty)
-        val schema = StructType(
-          df.schema.filterNot(f => cols.contains(f.name)) ++ cols.map(df.schema(_)))
-        s"$name\t${schema.json}"
+      case (name, df) => s"$name\t${df.schema.json}"
     }.mkString("\n"))
     if (delta) ArtifactStore.writeText(spark, s"$vdir/_DELTA", prev.get.toString)
     ArtifactStore.publish(spark, dir, vdir)

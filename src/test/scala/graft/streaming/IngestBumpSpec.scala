@@ -50,14 +50,21 @@ class IngestBumpSpec extends AnyFunSuite {
     for (si <- chain) {
       val a = IngestBump.bump(spark, root, si)
       assert(rowImage(a.verdict) == rowImage(PipelineOps.dedupVerdictOf(si)))
-      // format 2 layout: the gram snapshot is gbucket-partitioned, a delta
-      // version's grams are one flat file
-      val text = s"$root/text"
-      val grams = new java.io.File(
-        s"$text/v${ArtifactStore.currentVersion(spark, text).get}/grams.parquet")
-      val buckets = grams.list().count(_.startsWith("gbucket="))
-      if (StateStore.chainLength(spark, text) == 0) assert(buckets > 1, s"$grams")
-      else assert(buckets == 0 && grams.list().count(_.endsWith(".parquet")) == 1, s"$grams")
+      // format 3 layout: every version's grams are flat — no gbucket
+      // directory, no gbucket column — and a delta version's grams are one
+      // parquet file
+      val text = new java.io.File(s"$root/text")
+      text.listFiles().filter(v => new java.io.File(v, "_COMMITTED").exists).foreach { v =>
+        val grams = new java.io.File(v, "grams.parquet")
+        assert(!grams.list().exists(_.startsWith("gbucket=")), s"$grams")
+        assert(!spark.read.parquet(grams.toString).columns.contains("gbucket"), s"$grams")
+        if (new java.io.File(v, "_DELTA").exists)
+          assert(grams.list().count(_.endsWith(".parquet")) == 1, s"$grams")
+      }
+      // and reading the text state back runs no Spark job (no inference,
+      // no parallel listing of a partitioned snapshot)
+      val (_, census) = graft.JobCensus.of(spark)(IngestBump.textState(spark, root))
+      assert(census.total == 0, s"textState ran jobs:\n${census.report}")
       // state canonicality: after retire + batch, the FOLDED gram state
       // (the delta chain collapsed) must be row-identical to gramming the
       // snapshot's survivors from scratch — no stale grams (a revised
@@ -279,7 +286,7 @@ class IngestBumpSpec extends AnyFunSuite {
     assert(stamp(fresh).contains(IngestBump.FormatVersion.toString))
 
     // another stamp, older formats included
-    Seq("0", "1").foreach { f =>
+    Seq("0", "1", "2").foreach { f =>
       ArtifactStore.writeText(spark, s"$fresh/_FORMAT", f)
       refusedEverywhere(fresh, Some(f))
     }

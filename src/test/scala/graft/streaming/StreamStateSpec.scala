@@ -225,35 +225,6 @@ class StreamStateSpec extends AnyFunSuite {
       s"$v must carry a _COMMITTED marker"))
   }
 
-  test("a gbucket-partitioned gram state partition-prunes the CDC probe's history scan " +
-       "to the batch's buckets") {
-    import graft.pipeline.PipelineOps
-    val dir = tmpDir("bucketed")
-    val survivors2 = survivors.select("doc_id", "text", "lang", "source", "n_chars")
-    val hist = PipelineOps.ngramGrams(survivors2)
-    StateStore.save(dir, Map("grams" -> hist), Map("grams" -> Seq("gbucket")))
-    val loaded = StateStore.load(spark, dir, Seq("grams")).get("grams")
-    val nPartsAll = new java.io.File(s"$dir/v1/grams.parquet")
-      .list().count(_.startsWith("gbucket="))
-    assert(nPartsAll > 1, s"fixture must span multiple buckets, got $nPartsAll")
-    // a single-doc batch touches exactly one block-key bucket — the pruned
-    // probe must read exactly one partition directory
-    val batch = PipelineOps.ngramGrams(survivors2.where(col("doc_id") === 7))
-    val probe = PipelineOps.pruneGramHistory(loaded, batch)
-    val scan = probe.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.get
-    assert(scan.partitionFilters.exists(_.toString.contains("gbucket")),
-      s"bucket filter must reach the scan as a partition filter: ${scan.partitionFilters}")
-    assert(scan.selectedPartitions.partitionCount == 1,
-      s"one-bucket probe must read one partition, read ${scan.selectedPartitions.partitionCount} of $nPartsAll")
-    // and the pruning is lossless for pair discovery: every history row
-    // sharing the batch's block key survives
-    val key = batch.select("lang", "source", "block").distinct()
-    assert(probe.join(key, Seq("lang", "source", "block"), "left_semi").count() ==
-      hist.join(key, Seq("lang", "source", "block"), "left_semi").count())
-  }
-
   test("delta chain: saveDelta stacks O(delta) versions, loadChain returns them in " +
        "commit order, load fails fast on a delta head, and a snapshot commit prunes " +
        "the retired chain (keeping it whole for one cycle)") {
@@ -313,23 +284,14 @@ class StreamStateSpec extends AnyFunSuite {
     assert(StateStore.load(spark, dir, Seq("slow")).isEmpty)
   }
 
-  test("an empty hive-partitioned table falls back to a plain file and reads " +
-       "back with its schema") {
+  test("an empty table reads back with its schema and no rows") {
     import spark.implicits._
-    val dir = tmpDir("emptypart")
+    val dir = tmpDir("empty")
     val empty = Seq.empty[(Long, String)].toDF("id", "g")
-    StateStore.save(dir, Map("t" -> empty), partitions = Map("t" -> Seq("g")))
+    StateStore.save(dir, Map("t" -> empty))
     val t = StateStore.load(spark, dir, Seq("t")).get("t")
-    assert(t.columns.sorted.toSeq == Seq("g", "id"))
+    assert(t.columns.toSeq == Seq("id", "g"))
     assert(t.count() == 0)
-    // and a non-empty partitioned save on the same store still lays out
-    // hive-style (the partition column becomes a directory)
-    StateStore.save(dir, Map("t" -> Seq((1L, "a"), (2L, "b")).toDF("id", "g")),
-      partitions = Map("t" -> Seq("g")))
-    val v2 = new java.io.File(s"$dir/v2/t.parquet")
-    assert(v2.listFiles().exists(f => f.isDirectory && f.getName.startsWith("g=")),
-      s"expected hive layout under $v2")
-    assert(StateStore.load(spark, dir, Seq("t")).get("t").count() == 2)
   }
 
   test("a delta chain of depth 3 loads with its recorded schemas: no Spark job") {
@@ -337,8 +299,7 @@ class StreamStateSpec extends AnyFunSuite {
     val dir = tmpDir("schemachain")
     StateStore.save(dir,
       Map("t" -> Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "v", "p"),
-        "u" -> Seq(1.5).toDF("x")),
-      partitions = Map("t" -> Seq("p")))
+        "u" -> Seq(1.5).toDF("x")))
     (3L to 5L).foreach(i => StateStore.saveDelta(dir, Map("d" -> Seq((i, s"r$i")).toDF("id", "v"))))
     assert(StateStore.chainLength(spark, dir) == 3)
     val (loaded, census) = graft.JobCensus.of(spark)(
@@ -365,7 +326,7 @@ class StreamStateSpec extends AnyFunSuite {
       StateStore.load(spark, dir, Seq("t"))).version == 3L)
   }
 
-  test("the recorded schema round trip keeps nullability and the partition column's type") {
+  test("the recorded schema round trip keeps every column's type and nullability") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val dir = tmpDir("schemaround")
@@ -376,16 +337,13 @@ class StreamStateSpec extends AnyFunSuite {
       StructField("p", LongType, nullable = false)))
     val df = spark.createDataFrame(
       java.util.List.of(Row(1L, "a", Seq(1L), 0L), Row(2L, null, Seq.empty[Long], 7L)), schema)
-    StateStore.save(dir, Map("t" -> df), partitions = Map("t" -> Seq("p")))
+    StateStore.save(dir, Map("t" -> df))
     val loaded = StateStore.load(spark, dir, Seq("t")).get("t")
     val inferred = spark.read.parquet(s"$dir/v1/t.parquet")
-    // the partition column reads back as written; inference narrows it
-    assert(loaded.schema("p").dataType == LongType)
-    assert(inferred.schema("p").dataType == IntegerType)
-    // every data column: the same type and nullability an inferred read gives
-    assert(loaded.schema.fields.init.toSeq == inferred.schema.fields.init.toSeq)
+    // every column: the same type, nullability and element nullability an
+    // inferred read gives, in the written order
+    assert(loaded.schema.fields.toSeq == inferred.schema.fields.toSeq)
     assert(loaded.schema.fieldNames.toSeq == Seq("id", "v", "xs", "p"))
-    assert(loaded.schema("p").nullable == inferred.schema("p").nullable)
     assert(loaded.orderBy("id").collect().toSeq.map(_.toSeq) ==
       Seq(Seq(1L, "a", Seq(1L), 0L), Seq(2L, null, Seq.empty[Long], 7L)))
   }
